@@ -10,7 +10,8 @@ the reference's block classifier keeps pre-blocks verbatim for the
 same reason its HTML stripper exists at all, apps/queue's extraction
 target; SURVEY §2.2 P2/P8).
 
-Spec (implemented here AND independently over html.parser events in
+Spec (implemented here as a collector over the tag events of
+extract/tagscan.py AND independently over html.parser events in
 tools/make_driver_fixtures.py:CodeRefCollector):
 
 - a ``<pre>`` start while no block is open OPENS block ``block_idx``
@@ -23,7 +24,7 @@ tools/make_driver_fixtures.py:CodeRefCollector):
   HTML spells ``<`` in code). ``<br>``/``<br/>`` contributes a
   newline (pre-era forums line-break code that way). script/style
   bodies inside a block are CDATA: raw to their close tag, comments
-  not special inside (the wave-31 rules — a ``<script>`` inside a
+  not special inside (the tagscan rules — a ``<script>`` inside a
   pre IS code, its source lands verbatim). Comments are invisible
   outside CDATA.
 - one leading newline of the committed text is dropped — the HTML5
@@ -53,8 +54,6 @@ from __future__ import annotations
 
 import hashlib
 import re
-from html import unescape
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -62,8 +61,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.operators.pagemeta import (_CDATA_CLOSE,
-                                                   _META_TAG, _attr_map)
+from ocr_platform_spark.extract.tagscan import (attr_map, map_pages,
+                                                scan_tags)
 
 CODE_DOCS = 200
 
@@ -178,19 +177,19 @@ class CodeCollector:
         self.lang: str | None = None
         self.buf: list[str] = []
 
-    def on_start(self, tag: str, attrs: dict, selfclosed: bool) -> None:
+    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
         if not self.open:
             if tag == "pre" and not selfclosed:
                 self.open = True
-                self.lang = lang_from_class(attrs.get("class"))
+                self.lang = lang_from_class(attr_map(attrs).get("class"))
                 self.buf = []
             return
         if tag == "br":
             self.buf.append("\n")
         elif tag == "code" and self.lang is None:
-            self.lang = lang_from_class(attrs.get("class"))
+            self.lang = lang_from_class(attr_map(attrs).get("class"))
 
-    def on_end(self, tag: str) -> None:
+    def end(self, tag: str) -> None:
         if self.open and tag == "pre":
             text = "".join(self.buf)
             if text.startswith("\n"):
@@ -200,60 +199,21 @@ class CodeCollector:
             self.lang = None
             self.buf = []
 
-    def on_data(self, data: str) -> None:
+    def data(self, text: str) -> None:
         if self.open:
-            self.buf.append(data)
+            self.buf.append(text)
 
 
 def scan_code(text: str) -> list[tuple[int, str | None, str, int, int]]:
     """(block_idx, lang, text, n_lines, n_chars) per committed block."""
     col = CodeCollector()
-    pos = 0
-    while True:
-        m = _META_TAG.search(text, pos)
-        c = text.find("<!--", pos)
-        if c != -1 and (m is None or c < m.start()):
-            col.on_data(unescape(text[pos:c]))
-            e = text.find("-->", c + 4)
-            if e == -1:
-                break
-            pos = e + 3
-            continue
-        if m is None:
-            break                       # EOF: open block never commits
-        col.on_data(unescape(text[pos:m.start()]))
-        pos = m.end()
-        tag = m.group(2).lower()
-        if m.group(1):
-            col.on_end(tag)
-            continue
-        selfclosed = m.group(3).rstrip().endswith("/")
-        if tag in ("script", "style") and not selfclosed:
-            cm = _CDATA_CLOSE[tag].search(text, pos)
-            if cm is None:
-                break
-            col.on_data(text[pos:cm.start()])       # raw CDATA body
-            pos = cm.start()
-            continue
-        col.on_start(tag, _attr_map(m.group(3)), selfclosed)
+    scan_tags(text, col)
     return [(i, lg, tx, tx.count("\n") + 1 if tx else 0, len(tx))
             for (i, lg, tx) in col.out]
 
 
 def page_code_blocks(pages: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, h in zip(pdf["url"], pdf["html"]):
-                if h is None:
-                    continue
-                for (bi, lg, tx, nl, nc) in scan_code(
-                        bytes(h).decode("utf-8", "replace")):
-                    rows.append((u, bi, lg, tx, nl, nc))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CODE_SCHEMA])
-
-    return pages.mapInPandas(gen, schema=CODE_SCHEMA)
+    return map_pages(pages, scan_code, CODE_SCHEMA)
 
 
 def code_pages_df(spark: SparkSession, n: int = CODE_DOCS) -> DataFrame:

@@ -5,9 +5,11 @@ crawlers DISCOVER fresh urls (next to sitemaps), and a feed's entries
 are (title, link, timestamp) triples in two dialects — RSS 2.0
 (``<item><title>t</title><link>url</link><pubDate>d</pubDate>``) and
 Atom (``<entry><title>t</title><link href="url"/><updated>d</updated>``).
-Both are XML, which the shared tag grammar tokenizes unchanged.
+Both are XML, which the tag-event driver (extract/tagscan.py)
+tokenizes unchanged.
 
-Spec (implemented here AND independently over html.parser events in
+Spec (implemented here as a collector over the tag events of
+extract/tagscan.py AND independently over html.parser events in
 tools/make_driver_fixtures.py:feeds_fixture):
 
 - an ``<item>`` or ``<entry>`` start opens a new entry (entry_idx in
@@ -20,7 +22,7 @@ tools/make_driver_fixtures.py:feeds_fixture):
   close tag, implied-closed by the next field/entry start; open text
   at EOF never commits. FIRST value per (entry, field) wins.
 - comments invisible outside CDATA, raw inside script/style (the
-  wave-31 rules — feeds rarely carry these, the fuzzer does).
+  tagscan rules — feeds rarely carry these, the fuzzer does).
 - output: one row per entry (incl. -1 when it has any field) with
   (title, link, updated, n_fields).
 
@@ -30,16 +32,14 @@ Scale: one mapInPandas fan-out projection, zero shuffle.
 from __future__ import annotations
 
 import hashlib
-from html import unescape
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.operators.pagemeta import (_CDATA_CLOSE,
-                                                   _META_TAG, _attr_map)
+from ocr_platform_spark.extract.tagscan import (attr_map, map_pages,
+                                                scan_tags)
 
 FEED_DOCS = 200
 
@@ -121,7 +121,7 @@ class FeedCollector:
         self.open_field = None
         self.buf = []
 
-    def on_start(self, tag: str, attrs: dict, selfclosed: bool) -> None:
+    def start(self, tag: str, attrstr: str, selfclosed: bool) -> None:
         if tag in _ENTRY_TAGS or tag in _FIELD_TAGS:
             self._commit_open()
         if tag in _ENTRY_TAGS:
@@ -130,21 +130,22 @@ class FeedCollector:
             return
         if tag in _FIELD_TAGS:
             field = _FIELD_TAGS[tag]
-            if tag == "link" and attrs.get("href") is not None:
-                self._set(self.entry_idx, field, attrs["href"])
+            href = attr_map(attrstr).get("href") if tag == "link" else None
+            if href is not None:
+                self._set(self.entry_idx, field, href)
             elif not selfclosed:
                 self.open_field = (self.entry_idx, field, tag)
                 self.buf = []
             else:
                 self._set(self.entry_idx, field, "")
 
-    def on_end(self, tag: str) -> None:
+    def end(self, tag: str) -> None:
         if self.open_field is not None and tag == self.open_field[2]:
             self._commit_open()
 
-    def on_data(self, data: str) -> None:
+    def data(self, text: str) -> None:
         if self.open_field is not None:
-            self.buf.append(data)
+            self.buf.append(text)
 
 
 def scan_feed(text: str) -> list[tuple[int, str | None, str | None,
@@ -153,56 +154,13 @@ def scan_feed(text: str) -> list[tuple[int, str | None, str | None,
     zero fields still emit a row (an empty <item/> is an entry); the
     -1 header row emits only when it captured a field."""
     col = FeedCollector()
-    pos = 0
-    while True:
-        m = _META_TAG.search(text, pos)
-        c = text.find("<!--", pos)
-        if c != -1 and (m is None or c < m.start()):
-            col.on_data(unescape(text[pos:c]))
-            e = text.find("-->", c + 4)
-            if e == -1:
-                break
-            pos = e + 3
-            continue
-        if m is None:
-            break
-        col.on_data(unescape(text[pos:m.start()]))
-        pos = m.end()
-        tag = m.group(2).lower()
-        if m.group(1):
-            col.on_end(tag)
-            continue
-        selfclosed = m.group(3).rstrip().endswith("/")
-        if tag in ("script", "style") and not selfclosed:
-            cm = _CDATA_CLOSE[tag].search(text, pos)
-            if cm is None:
-                break
-            col.on_data(text[pos:cm.start()])
-            pos = cm.start()
-            continue
-        col.on_start(tag, _attr_map(m.group(3)), selfclosed)
-    out = []
-    for e in sorted(col.fields):
-        d = col.fields[e]
-        if e == -1 and not d:
-            continue
-        out.append((e, d.get("title"), d.get("link"),
-                    d.get("updated"), len(d)))
-    return out
+    scan_tags(text, col)
+    return [(e, d.get("title"), d.get("link"), d.get("updated"), len(d))
+            for e, d in sorted(col.fields.items()) if e != -1 or d]
 
 
 def page_feeds(feeds: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, x in zip(pdf["url"], pdf["xml"]):
-                for (e, t, lk, up, n) in scan_feed(
-                        bytes(x).decode("utf-8", "replace")):
-                    rows.append((u, e, t, lk, up, n))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEED_SCHEMA])
-
-    return feeds.mapInPandas(gen, schema=FEED_SCHEMA)
+    return map_pages(feeds, scan_feed, FEED_SCHEMA, col="xml")
 
 
 def feeds_df(spark: SparkSession, n: int = FEED_DOCS) -> DataFrame:

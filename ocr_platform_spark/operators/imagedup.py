@@ -124,8 +124,8 @@ def _grid_cells(h16: str, n: int, distinct_band_rows: bool) -> list[tuple]:
 
 def twin_doc(doc_index: int, seed: int = 42) -> dict | None:
     """The re-hosted copy of image row ``doc_index`` (or None when the
-    row is audio/video/corrupt or unselected). Pure function of the
-    index, computed through the real decoders."""
+    row is audio/video/corrupt, fails to decode, or is unselected). Pure
+    function of the index, computed through the real decoders."""
     import hashlib
 
     from ocr_platform_spark.datagen import gen_media
@@ -140,7 +140,10 @@ def twin_doc(doc_index: int, seed: int = 42) -> dict | None:
     if doc_index % 7 == 4 or (doc_index % 11 == 6):
         return None                              # audio/video rows
     row = gen_media(doc_index, seed)
-    w, h, ch, px = decode_image(row["media"])
+    try:
+        w, h, ch, px = decode_image(row["media"])
+    except Exception:
+        return None             # undecodable: skipped, like the fixture
     px = bytearray(px)
     if mode != 0:
         n_cells = 1 if mode == 2 else 3

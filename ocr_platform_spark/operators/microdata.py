@@ -6,8 +6,9 @@ outlines, MICRODATA): product/article markup annotated inline with
 JSON-LD, and crawl pipelines mine it into (item, prop, value) triples.
 
 Simplified spec (a documented WHATWG subset — one spec, implemented
-twice: here over the shared tag grammar, independently over stdlib
-html.parser events in tools/make_driver_fixtures.py):
+twice: here as a collector over the tag events of extract/tagscan.py,
+independently over stdlib html.parser events in
+tools/make_driver_fixtures.py):
 
 - every start tag bearing ``itemscope`` opens a new item (item_idx in
   document order); props bind to the MOST RECENTLY OPENED item (flat —
@@ -24,7 +25,8 @@ html.parser events in tools/make_driver_fixtures.py):
   props commit immediately (empty attr value commits as '').
 - prop_idx counts prop COMMITS per item, document order.
 - comments are invisible outside CDATA, raw inside; script/style
-  bodies are CDATA data for an open text prop (the wave-31 rules).
+  bodies are CDATA data for an open text prop, and a script/style
+  start tag bearing ``itemprop`` is a text prop like any other.
 
 Scale: one mapInPandas fan-out projection, zero shuffle.
 """
@@ -32,7 +34,6 @@ Scale: one mapInPandas fan-out projection, zero shuffle.
 from __future__ import annotations
 
 import hashlib
-from html import unescape
 from typing import Iterator
 
 import pandas as pd
@@ -41,8 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.operators.pagemeta import (_CDATA_CLOSE,
-                                                   _META_TAG, _attr_map)
+from ocr_platform_spark.extract.tagscan import (attr_map, map_pages,
+                                                scan_tags)
 
 MICRO_DOCS = 300
 
@@ -128,8 +129,8 @@ def augment_micro(pages: DataFrame) -> DataFrame:
 # --- collection state machine (production side) ----------------------------
 
 class MicroCollector:
-    """Event-driven collector for the module-docstring spec. Events:
-    on_start(tag, attrs, selfclosed), on_end(tag), on_data(text)."""
+    """Event-driven collector for the module-docstring spec, fed by
+    extract/tagscan.scan_tags."""
 
     def __init__(self) -> None:
         self.out: list[tuple[int, int, str, str]] = []
@@ -151,7 +152,8 @@ class MicroCollector:
         self.open_prop = None
         self.buf = []
 
-    def on_start(self, tag: str, attrs: dict, selfclosed: bool) -> None:
+    def start(self, tag: str, attrstr: str, selfclosed: bool) -> None:
+        attrs = attr_map(attrstr)
         if "itemscope" in attrs or "itemprop" in attrs:
             self._commit_open()                 # implied close
         if "itemscope" in attrs:
@@ -170,64 +172,24 @@ class MicroCollector:
             else:
                 self._commit_value(self.item_idx, prop, "")
 
-    def on_end(self, tag: str) -> None:
+    def end(self, tag: str) -> None:
         if self.open_prop is not None and tag == self.open_prop[2]:
             self._commit_open()
 
-    def on_data(self, data: str) -> None:
+    def data(self, text: str) -> None:
         if self.open_prop is not None:
-            self.buf.append(data)
+            self.buf.append(text)
 
 
 def scan_microdata(text: str) -> list[tuple[int, int, str, str]]:
-    """Tokenize with the shared grammar, drive the collector (wave-31
-    comment rules: invisible outside CDATA, raw inside)."""
+    """(item_idx, prop_idx, prop, value) per prop commit."""
     col = MicroCollector()
-    pos = 0
-    while True:
-        m = _META_TAG.search(text, pos)
-        c = text.find("<!--", pos)
-        if c != -1 and (m is None or c < m.start()):
-            col.on_data(unescape(text[pos:c]))
-            e = text.find("-->", c + 4)
-            if e == -1:
-                break
-            pos = e + 3
-            continue
-        if m is None:
-            break                   # EOF: open text prop never commits
-        col.on_data(unescape(text[pos:m.start()]))
-        pos = m.end()
-        tag = m.group(2).lower()
-        if m.group(1):
-            col.on_end(tag)
-            continue
-        selfclosed = m.group(3).rstrip().endswith("/")
-        if tag in ("script", "style") and not selfclosed:
-            cm = _CDATA_CLOSE[tag].search(text, pos)
-            if cm is None:
-                break
-            col.on_data(text[pos:cm.start()])   # raw CDATA body
-            pos = cm.start()
-            continue
-        col.on_start(tag, _attr_map(m.group(3)), selfclosed)
+    scan_tags(text, col)
     return col.out
 
 
 def page_microdata(pages: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, h in zip(pdf["url"], pdf["html"]):
-                if h is None:
-                    continue
-                for (it, pi, pr, va) in scan_microdata(
-                        bytes(h).decode("utf-8", "replace")):
-                    rows.append((u, it, pi, pr, va))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MICRO_SCHEMA])
-
-    return pages.mapInPandas(gen, schema=MICRO_SCHEMA)
+    return map_pages(pages, scan_microdata, MICRO_SCHEMA)
 
 
 def extract_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:

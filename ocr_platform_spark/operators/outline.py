@@ -8,9 +8,9 @@ consume, and the skeleton readers skim — and unlike the other kernels
 this one needs NO augmentation: the synthetic pages carry natural
 ``<h2>``/``<h3>`` section headings.
 
-Semantics (one spec, implemented twice — here over the shared tag
-grammar, independently over stdlib html.parser events in
-tools/make_driver_fixtures.py:extract_headings_fixture):
+Semantics (one spec, implemented twice — here as a collector over the
+tag events of extract/tagscan.py, independently over stdlib html.parser
+events in tools/make_driver_fixtures.py:extract_headings_fixture):
 
 - heading_idx counts heading COMMITS per page in document order;
   level is the tag digit.
@@ -21,8 +21,8 @@ tools/make_driver_fixtures.py:extract_headings_fixture):
   also commits (browsers close the open heading — html.parser parity
   comes from the collector, not the tokenizer). An open heading at
   EOF never commits.
-- Comments are invisible outside CDATA, raw inside (the wave-31
-  scanner rule); script/style bodies inside a heading are CDATA data.
+- Comments are invisible outside CDATA, raw inside; script/style
+  bodies inside a heading are raw CDATA data.
 - Empty headings commit as ``''``.
 
 Scale: one mapInPandas fan-out projection, zero shuffle.
@@ -30,15 +30,11 @@ Scale: one mapInPandas fan-out projection, zero shuffle.
 
 from __future__ import annotations
 
-from html import unescape
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.operators.pagemeta import _CDATA_CLOSE, _META_TAG
+from ocr_platform_spark.extract.tagscan import map_pages, scan_tags
 
 OUTLINE_DOCS = 300
 
@@ -52,73 +48,45 @@ OUTLINE_SCHEMA = StructType([
 _H_TAGS = {f"h{i}": i for i in range(1, 7)}
 
 
+class _OutlineCollector:
+    def __init__(self) -> None:
+        self.out: list[tuple[int, int, str]] = []
+        self.level = 0              # 0 = no open heading
+        self.buf: list[str] = []
+
+    def _commit(self) -> None:
+        if self.level:
+            self.out.append((len(self.out), self.level,
+                             " ".join("".join(self.buf).split())))
+        self.level = 0
+        self.buf = []
+
+    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
+        if tag in _H_TAGS:
+            self._commit()              # implied close of the open one
+            if selfclosed:
+                self.out.append((len(self.out), _H_TAGS[tag], ""))
+            else:
+                self.level = _H_TAGS[tag]
+
+    def end(self, tag: str) -> None:
+        if tag in _H_TAGS:
+            self._commit()
+
+    def data(self, text: str) -> None:
+        if self.level:
+            self.buf.append(text)
+
+
 def scan_headings(text: str) -> list[tuple[int, int, str]]:
     """(heading_idx, level, text) per heading, document order."""
-    out: list[tuple[int, int, str]] = []
-    level = 0                   # 0 = no open heading
-    buf: list[str] = []
-
-    def commit() -> None:
-        nonlocal level, buf
-        if level:
-            out.append((len(out), level, " ".join("".join(buf).split())))
-        level = 0
-        buf = []
-
-    pos = 0
-    while True:
-        m = _META_TAG.search(text, pos)
-        c = text.find("<!--", pos)
-        if c != -1 and (m is None or c < m.start()):
-            if level:
-                buf.append(unescape(text[pos:c]))
-            e = text.find("-->", c + 4)
-            if e == -1:
-                break           # unterminated comment swallows the rest
-            pos = e + 3
-            continue
-        if m is None:
-            break               # EOF: open heading never commits
-        if level:
-            buf.append(unescape(text[pos:m.start()]))
-        pos = m.end()
-        tag = m.group(2).lower()
-        if m.group(1):                      # end tag
-            if tag in _H_TAGS:
-                commit()
-            continue
-        selfclosed = m.group(3).rstrip().endswith("/")
-        if tag in ("script", "style") and not selfclosed:
-            cm = _CDATA_CLOSE[tag].search(text, pos)
-            if cm is None:
-                break           # unterminated CDATA at EOF
-            if level:
-                buf.append(text[pos:cm.start()])    # raw: no unescape
-            pos = cm.start()
-            continue
-        if tag in _H_TAGS:
-            commit()                        # implied close of the open one
-            if not selfclosed:
-                level = _H_TAGS[tag]
-            else:
-                out.append((len(out), _H_TAGS[tag], ""))
-    return out
+    col = _OutlineCollector()
+    scan_tags(text, col)
+    return col.out
 
 
 def page_headings(pages: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, h in zip(pdf["url"], pdf["html"]):
-                if h is None:
-                    continue
-                for (hi, lv, tx) in scan_headings(
-                        bytes(h).decode("utf-8", "replace")):
-                    rows.append((u, hi, lv, tx))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in OUTLINE_SCHEMA])
-
-    return pages.mapInPandas(gen, schema=OUTLINE_SCHEMA)
+    return map_pages(pages, scan_headings, OUTLINE_SCHEMA)
 
 
 def extract_headings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,12 +19,12 @@ so a parser handling only one canonical shape fails the oracle. Pages
 with empty payloads get no injection and must survive as all-null rows
 (never-drop).
 
-The kernel is a purpose-built head-metadata scanner (quote-aware tag
-grammar, comment stripping, script/style CDATA skipping) — the block
-tokenizer (extract/fast_scanner) deliberately drops every attribute
-except ``class`` and discards script bodies, exactly the payload
-metadata extraction needs, so this stage owns its own scanner the way
-production metadata extractors do. The committed fixture oracle
+The kernel is a first-wins head-metadata collector over the tag events
+of extract/tagscan.py (quote-aware tag grammar, invisible comments,
+raw script/style CDATA) — the block tokenizer (extract/fast_scanner)
+deliberately drops every attribute except ``class`` and discards
+script bodies, exactly the payload metadata extraction needs. The
+committed fixture oracle
 (tools/make_driver_fixtures.py:extract_metadata_fixture) re-parses the
 same pages with stdlib ``html.parser`` — a genuinely different
 tokenizer with independently written collection logic — so agreement
@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
+
+from ocr_platform_spark.extract.tagscan import attr_map, map_pages, scan_tags
 
 META_DOCS = 300
 
@@ -122,160 +124,98 @@ META_SCHEMA = StructType([
 ])
 
 
-# Tag grammar: quotes only protect '>' INSIDE a quoted attribute value,
-# so the attr region consumes quoted runs atomically and everything
-# else stops at '>'. Comments are handled inline (a '>'
-# inside a comment must not terminate it; inside CDATA they are data). Scripts/styles are CDATA —
-# their bodies are skipped to the first matching close tag, never
-# tokenized (a '<meta>' inside a script string is data, not a tag).
-_META_TAG = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9:_-]*)"
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)>")
-_META_ATTR = re.compile(
-    r"([a-zA-Z][a-zA-Z0-9:_-]*)"
-    r"(?:\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s\"'>/]*)))?")
-
-
-def _attr_map(attrstr: str) -> dict:
-    out: dict = {}
-    for m in _META_ATTR.finditer(attrstr):
-        name = m.group(1).lower()
-        if name not in out:             # first occurrence wins, and the
-            val = m.group(2)            # membership check must use the
-            if val is None:             # SAME lowercased key it stores
-                val = m.group(3)        # (PROPERTY= after property= is
-            if val is None:             # a duplicate, not a new attr)
-                val = m.group(4)
-            out[name] = val
-    return out
-
-
 class _PageMeta:
+    """The _scan_head_meta collector: first-wins fields plus the open
+    title and ld+json buffers. A self-closed tag is its start then its
+    end (html.parser's startendtag)."""
+
     __slots__ = ("title", "og_title", "og_type", "canonical",
-                 "jsonld_type", "n_meta")
+                 "jsonld_type", "n_meta", "_tbuf", "_ld")
 
     def __init__(self) -> None:
         self.title = self.og_title = self.og_type = None
         self.canonical = self.jsonld_type = None
         self.n_meta = 0
+        self._tbuf: list[str] | None = None     # open <title> data
+        self._ld: list[str] | None = None       # open ld+json body
 
+    def row(self) -> tuple:
+        return (self.title, self.og_title, self.og_type, self.canonical,
+                self.jsonld_type, self.n_meta)
 
-# CDATA ends only at a WELL-FORMED close tag of the same element —
-# </scripted> or </scriptx> inside a script body is data and the body
-# continues (html.parser's cdata_elem check does exactly this)
-_CDATA_CLOSE = {t: re.compile(rf"</\s*{t}\s*>", re.I)
-                for t in ("script", "style")}
-
-
-def _scan_head_meta(text: str) -> _PageMeta:
-    """First-wins metadata scan (the WHATWG processing model takes the
-    first og:* / canonical / title). Whole-document, single pass.
-
-    Title is a NORMAL element here exactly as in html.parser: tags
-    inside an (ill-formed) title still tokenize, and the title text is
-    the inter-tag data collected until its close tag — an unterminated
-    title at EOF is never committed. Script/style bodies are CDATA:
-    skipped to the matching close tag, never tokenized, but still
-    counted as data for an enclosing title buffer (html.parser routes
-    CDATA through handle_data the same way)."""
-    from html import unescape
-
-    out = _PageMeta()
-    pos = 0
-    tbuf: list[str] | None = None       # active <title> data buffer
-    tpos = 0                            # where its pending data starts
-    while True:
-        m = _META_TAG.search(text, pos)
-        c = text.find("<!--", pos)
-        if c != -1 and (m is None or c < m.start()):
-            # comment outside CDATA: invisible, exactly like html.parser
-            # (no data event — a title buffer skips it; its body is
-            # never tokenized). Comments INSIDE script/style bodies are
-            # untouched because the CDATA branch consumes the body
-            # before this scan reaches it (html.parser parity — the
-            # former global pre-strip diverged there).
-            if tbuf is not None:
-                tbuf.append(text[tpos:c])
-            e = text.find("-->", c + 4)
-            if e == -1:
-                break       # unterminated comment swallows the rest
-            pos = e + 3
-            tpos = pos
-            continue
-        if m is None:
-            break                       # EOF: open title never commits
-        if tbuf is not None:
-            tbuf.append(text[tpos:m.start()])
-        pos = m.end()
-        tpos = pos
-        tag = m.group(2).lower()
-        if m.group(1):                  # end tag
-            if tag == "title" and tbuf is not None:
-                t = unescape("".join(tbuf)).strip()
-                if out.title is None and t:
-                    out.title = t       # first NON-EMPTY title wins
-                tbuf = None
-            continue
+    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
         if tag == "meta":
-            out.n_meta += 1
-            a = _attr_map(m.group(3))
+            self.n_meta += 1
+            a = attr_map(attrs)
             prop, content = a.get("property"), a.get("content")
-            if prop == "og:title" and out.og_title is None:
-                out.og_title = content
-            elif prop == "og:type" and out.og_type is None:
-                out.og_type = content
+            if prop == "og:title" and self.og_title is None:
+                self.og_title = content
+            elif prop == "og:type" and self.og_type is None:
+                self.og_type = content
         elif tag == "link":
-            a = _attr_map(m.group(3))
-            if a.get("rel") == "canonical" and out.canonical is None:
-                out.canonical = a.get("href")
+            a = attr_map(attrs)
+            if a.get("rel") == "canonical" and self.canonical is None:
+                self.canonical = a.get("href")
         elif tag == "title":
             # ANY title element opens the buffer (html.parser's grab
             # slot): even after a title has won, an ld+json script
             # inside a later open title is title DATA, not a committed
-            # ld payload — the differential fuzzer caught the old
-            # out.title-gated grab diverging exactly there
-            if tbuf is None:
-                tbuf = []
-        elif tag in ("script", "style"):
-            if m.group(3).rstrip().endswith("/"):
-                continue                # self-closed: no CDATA body
-            cm = _CDATA_CLOSE[tag].search(text, pos)
-            if cm is None:
-                break       # unterminated CDATA at EOF: never committed
-            if (tag == "script" and out.jsonld_type is None
-                    and tbuf is None    # inside a title the body is
-                                        # title data, not a committed
-                                        # ld payload (stdlib parity)
-                    and _attr_map(m.group(3)).get("type")
-                    == "application/ld+json"):
-                jm = _JSONLD_TYPE.search(text[pos:cm.start()])
-                if jm:
-                    out.jsonld_type = jm.group(1)
-            # resume AT the close tag: the next loop iteration consumes
-            # it as an end tag, and an enclosing title buffer picks the
-            # raw body up as inter-tag data (html.parser parity)
-            pos = cm.start()
+            # ld payload
+            if self._tbuf is None:
+                self._tbuf = []
+        elif (tag == "script" and self.jsonld_type is None
+              and self._tbuf is None
+              and attr_map(attrs).get("type") == "application/ld+json"):
+            self._ld = []
+        if selfclosed:
+            self.end(tag)
+
+    def end(self, tag: str) -> None:
+        if tag == "title" and self._tbuf is not None:
+            t = "".join(self._tbuf).strip()
+            if self.title is None and t:
+                self.title = t          # first NON-EMPTY title wins
+            self._tbuf = None
+        elif tag == "script" and self._ld is not None:
+            jm = _JSONLD_TYPE.search("".join(self._ld))
+            if jm:
+                self.jsonld_type = jm.group(1)
+            self._ld = None
+
+    def data(self, text: str) -> None:
+        if self._tbuf is not None:
+            self._tbuf.append(text)
+        if self._ld is not None:
+            self._ld.append(text)
+
+
+def _scan_head_meta(text: str) -> _PageMeta:
+    """First-wins metadata scan (the WHATWG processing model takes the
+    first og:* / canonical / title). Whole-document, single pass over
+    the tag events of extract/tagscan.scan_tags.
+
+    Title is a NORMAL element exactly as in html.parser: tags inside an
+    (ill-formed) title still tokenize, and the title text is the data
+    collected until its close tag — each segment entity-unescaped on
+    its own, a script/style body inside it kept raw (html.parser
+    routes CDATA through handle_data without unescaping) — and an
+    unterminated title at EOF is never committed. An ld+json body
+    counts only outside a title."""
+    out = _PageMeta()
+    scan_tags(text, out)
     return out
 
 
 def collect_meta(url: str, html: bytes | None) -> tuple:
-    pm = _scan_head_meta(bytes(html).decode("utf-8", "replace")) \
-        if html is not None else _PageMeta()
-    return (url, pm.title, pm.og_title, pm.og_type,
-            pm.canonical, pm.jsonld_type, pm.n_meta)
+    text = "" if html is None else bytes(html).decode("utf-8", "replace")
+    return (url, *_scan_head_meta(text).row())
 
 
 def page_metadata(pages: DataFrame) -> DataFrame:
     """(url, html, ...) → one metadata row per page, never dropping a
     row — unparseable payloads come back all-null with n_meta 0."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [collect_meta(u, h)
-                    for u, h in zip(pdf["url"], pdf["html"])]
-            yield pd.DataFrame(rows, columns=[f.name for f in META_SCHEMA])
-
-    return pages.mapInPandas(gen, schema=META_SCHEMA)
+    return map_pages(pages, lambda t: [_scan_head_meta(t).row()],
+                     META_SCHEMA)
 
 
 def extract_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:

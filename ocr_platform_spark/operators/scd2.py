@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_platform_spark.operators.crawldelta import _epochs
+from ocr_platform_spark.operators.crawldelta import DELTA_CAP, _epochs
 from ocr_platform_spark.operators.tables import load
 
 EPOCH1, EPOCH2 = "2024-01-01", "2024-02-01"
@@ -75,9 +75,9 @@ def cx_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # the epoch synthesis mirrored verbatim from crawldelta's oracle shape
-_EPOCHS_SQL = """
+_EPOCHS_SQL = f"""
 base AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 2000),
+  SELECT doc_id, text FROM documents WHERE doc_id < {DELTA_CAP}),
 v2 AS (
   SELECT doc_id,
          CASE WHEN doc_id % 5 = 0
@@ -87,7 +87,7 @@ v2 AS (
               ELSE text END AS text
   FROM base WHERE doc_id % 11 <> 0
   UNION ALL
-  SELECT doc_id + 2000, text FROM base WHERE doc_id % 13 = 0)
+  SELECT doc_id + {DELTA_CAP}, text FROM base WHERE doc_id % 13 = 0)
 """
 
 CX_SCD2_SQL = f"""

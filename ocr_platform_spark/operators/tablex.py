@@ -19,10 +19,11 @@ a script-inside-cell whose body contains fake ``<table>`` markup that
 a CDATA-blind parser would hallucinate into output. Pages with no
 ``<body>`` (empty/garbage payloads) get no injection and emit no rows.
 
-Cell semantics (one spec, implemented twice — here over the shared tag
-grammar, and independently over stdlib html.parser events in
-tools/make_driver_fixtures.py:extract_tables_fixture — so fixture
-agreement checks the state machine, not shared wiring):
+Cell semantics (one spec, implemented twice — here as a collector over
+the tag events of extract/tagscan.py, and independently over stdlib
+html.parser events in tools/make_driver_fixtures.py:
+extract_tables_fixture — so fixture agreement checks the state
+machine, not shared wiring):
 
 - table_idx counts every top-level ``<table>`` open, document order;
   nested ``<table>`` raises a depth counter and its entire content
@@ -47,7 +48,6 @@ extraction stage's Arrow batches at any corpus size.
 from __future__ import annotations
 
 import hashlib
-from html import unescape
 from typing import Iterator
 
 import pandas as pd
@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
 
-from ocr_platform_spark.operators.pagemeta import _CDATA_CLOSE, _META_TAG
+from ocr_platform_spark.extract.tagscan import map_pages, scan_tags
 
 TABLE_DOCS = 300
 
@@ -157,7 +157,7 @@ def augment_tables(pages: DataFrame) -> DataFrame:
 
 class TableCollector:
     """Event-driven cell collector implementing the module-docstring
-    spec. Fed by the regex tokenizer here; the fixture feeds an
+    spec, fed by extract/tagscan.scan_tags; the fixture feeds an
     INDEPENDENT copy of this logic from html.parser events."""
 
     def __init__(self) -> None:
@@ -179,7 +179,12 @@ class TableCollector:
         self.cell_open = False
         self.buf = []
 
-    def on_start(self, tag: str) -> None:
+    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
+        self._open(tag)
+        if selfclosed:
+            self.end(tag)
+
+    def _open(self, tag: str) -> None:
         if self.depth == 0:
             if tag == "table":
                 self.depth = 1
@@ -208,7 +213,7 @@ class TableCollector:
             self.cell_is_header = tag == "th"
             self.col_idx += 1
 
-    def on_end(self, tag: str) -> None:
+    def end(self, tag: str) -> None:
         if self.depth == 0:
             return
         if tag == "table":
@@ -227,72 +232,22 @@ class TableCollector:
             self._commit_cell()
             self.row_open = False
 
-    def on_data(self, data: str) -> None:
+    def data(self, text: str) -> None:
         if self.cell_open and self.depth >= 1:
-            self.buf.append(data)
+            self.buf.append(text)
 
 
 def scan_tables(text: str) -> list[tuple[int, int, int, bool, str]]:
-    """Tokenize with the shared tag grammar and drive the collector.
-    Comments outside CDATA are invisible (html.parser emits no event
-    for them — their bodies are never tokenized and never become cell
-    data); comments INSIDE script/style bodies stay raw, because the
-    CDATA branch grabs the body verbatim before the comment scan can
-    see it (html.parser's CDATA mode does the same). Script/style
-    CDATA is skipped to the matching close tag with the raw body
-    routed as (non-unescaped) data."""
+    """(table_idx, row_idx, col_idx, is_header, cell_text) per cell."""
     col = TableCollector()
-    pos = 0
-    while True:
-        m = _META_TAG.search(text, pos)
-        c = text.find("<!--", pos)
-        if c != -1 and (m is None or c < m.start()):
-            col.on_data(unescape(text[pos:c]))
-            e = text.find("-->", c + 4)
-            if e == -1:
-                break           # unterminated comment swallows the rest
-            pos = e + 3
-            continue
-        if m is None:
-            break                   # EOF: open cell never commits
-        col.on_data(unescape(text[pos:m.start()]))
-        pos = m.end()
-        tag = m.group(2).lower()
-        if m.group(1):
-            col.on_end(tag)
-            continue
-        selfclosed = m.group(3).rstrip().endswith("/")
-        if tag in ("script", "style") and not selfclosed:
-            col.on_start(tag)
-            cm = _CDATA_CLOSE[tag].search(text, pos)
-            if cm is None:
-                break               # unterminated CDATA at EOF
-            col.on_data(text[pos:cm.start()])   # raw: no unescape
-            pos = cm.start()        # close tag tokenizes next round
-            continue
-        col.on_start(tag)
-        if selfclosed:
-            col.on_end(tag)
+    scan_tags(text, col)
     return col.cells
 
 
 def page_tables(pages: DataFrame) -> DataFrame:
     """(url, html, ...) → one row per table cell (fan-out; pages
     without tables emit nothing)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, h in zip(pdf["url"], pdf["html"]):
-                if h is None:
-                    continue
-                for (ti, ri, ci, hd, tx) in scan_tables(
-                        bytes(h).decode("utf-8", "replace")):
-                    rows.append((u, ti, ri, ci, hd, tx))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TABLEX_SCHEMA])
-
-    return pages.mapInPandas(gen, schema=TABLEX_SCHEMA)
+    return map_pages(pages, scan_tables, TABLEX_SCHEMA)
 
 
 def extract_tables(spark: SparkSession, sf_dir: str) -> DataFrame:

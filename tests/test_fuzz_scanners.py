@@ -107,6 +107,7 @@ _META_TOKENS = st.one_of(
         '<link rel="canonical" href="https://c.example/x">',
         '<link href="https://c.example/y" rel="canonical">',
         "<title>", "</title>", "<title>T1</title>", "<title></title>",
+        "<title/>", "<title><script>&amp;</script></title>",
         '<script type="application/ld+json">{"@type": "Book"}</script>',
         '<script type="application/ld+json">/* <!-- "@type": "H" --> */'
         "</script>",
@@ -197,6 +198,7 @@ _MICRO_TOKENS = st.one_of(
         "<script>var x = \"<span itemprop='f'>n</span>\";</script>",
         "<script>not closed by </scripty> keeps going</script>",
         '<SPAN ITEMPROP="up">', "</SPAN>",
+        '<script itemprop="s">',            # CDATA element as a prop
     ]))
 
 

@@ -72,6 +72,20 @@ def test_twin_modes():
     assert twin_doc(20) is None                   # %5==0 but %17==3
 
 
+def test_twin_doc_skips_undecodable_rows(monkeypatch):
+    """A row the decoder rejects is skipped (None), the same skip the
+    fixture applies, instead of failing phash_media_df's whole job."""
+    from ocr_platform_spark.operators import multimodal
+
+    assert twin_doc(0) is not None
+
+    def broken(payload):
+        raise ValueError("corrupt payload")
+
+    monkeypatch.setattr(multimodal, "decode_image", broken)
+    assert twin_doc(0) is None
+
+
 def test_image_hash_never_drop(spark):
     from ocr_platform_spark.operators.imagedup import image_hash_df
 

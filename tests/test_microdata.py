@@ -62,6 +62,11 @@ def test_scan_cdata_and_comment_traps():
         '<div itemscope><span itemprop="note">a'
         '<!-- <span itemprop="ghost">g</span> -->b</span></div>')
     assert got == [(0, 0, "note", "ab")]
+    # a script start tag bearing itemprop is a text prop over its raw
+    # body (html.parser reference: [(0, 0, 'a', 'x&amp;')])
+    assert scan_microdata(
+        '<div itemscope><script itemprop="a">x&amp;</script></div>') == \
+        [(0, 0, "a", "x&amp;")]
 
 
 def test_scan_selfclosed_and_empty_values():

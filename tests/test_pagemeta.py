@@ -206,3 +206,19 @@ def test_comment_inside_title_is_skipped_not_text():
 
     pm = _scan_head_meta("<title>Be<!-- not -->fore</title>")
     assert pm.title == "Before"
+
+
+def test_title_segments_unescape_on_their_own():
+    """html.parser parity: each title data segment is unescaped on its
+    own and a script body inside the title stays raw — unescaping the
+    joined buffer turned both of these into '&'."""
+    assert _scan_head_meta(
+        "<title><script>&amp;</script></title>").title == "&amp;"
+    assert _scan_head_meta("<title>a&am<b>p;</title>").title == "a&amp;"
+
+
+def test_self_closed_title_is_start_then_end():
+    # <title/> commits nothing of its own, and inside an open title it
+    # closes that title (html.parser's startendtag = start + end)
+    assert _scan_head_meta("<title/>x<title>T</title>").title == "T"
+    assert _scan_head_meta("<title>a<title/>b</title>").title == "a"

@@ -1274,8 +1274,8 @@ def bpetrain_fixture() -> None:
     from ocr_platform_spark.operators.bpetrain import N_MERGES
 
     texts = [t for (t,) in duckdb.sql(
-        "SELECT text FROM read_parquet("
-        "'/root/testdata/sf0.01/documents.parquet') ORDER BY doc_id"
+        f"SELECT text FROM read_parquet('{SF001}/documents.parquet')"
+        " ORDER BY doc_id"
     ).fetchall() if t]
     counts: Counter = Counter()
     for t in texts:
