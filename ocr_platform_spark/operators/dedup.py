@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ocr_platform_spark.operators.tables import load
+from ocr_platform_spark.session import scoped_persist
 
 MINHASH_PERMS = 16
 MINHASH_BANDS = 4          # 4 rows per band
@@ -91,13 +92,11 @@ def _guard_oracle_scale(df: DataFrame, op: str,
 
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str,
                      max_rows: int = ORACLE_MAX_ROWS) -> DataFrame:
-    from pyspark import StorageLevel
-
     docs = load(spark, sf_dir, "documents")
     _guard_oracle_scale(docs, "dd_ngram_jaccard", max_rows)
     # the explosion feeds three consumers (sizes + both join sides);
     # persisting it is safe here because the oracle guard above bounds it
-    sh = _shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = scoped_persist("dedup.dd_ngram_jaccard", _shingles(docs))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -243,21 +242,19 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     scan) instead of caching the 10x explosion. Banding is a single
     projection + posexplode (one pass over signatures instead of
     MINHASH_BANDS unioned scans)."""
-    from pyspark import StorageLevel
-
-    sigs = (minhash_signatures(docs)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    sigs = scoped_persist("dedup.minhash_pairs.sigs",
+                          minhash_signatures(docs))
     banded = sigs.select(
         "doc_id", F.posexplode(_band_bucket_array()).alias("band", "bucket"))
     a = banded.alias("a")
     b = banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("a_id"),
-                    F.col("b.doc_id").alias("b_id"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    cand = scoped_persist("dedup.minhash_pairs.cand", (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.bucket") == F.col("b.bucket"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("a_id"),
+                F.col("b.doc_id").alias("b_id"))
+        .distinct()))
     # recompute hashed shingles for candidate docs only, then exact-verify
     # (Jaccard over the hashed-shingle sets — identical in the SQL oracle)
     cand_docs = (cand.select(F.col("a_id").alias("doc_id"))
@@ -267,8 +264,9 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     # sides); without a persist each re-scans the full documents table for
     # the semi-join. Bounded by the candidate count — at 10^12 docs this
     # is the (tiny) verify working set, not the 10x corpus explosion.
-    sh = (_hashed_shingles(docs.join(cand_docs, "doc_id", "left_semi"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    sh = scoped_persist(
+        "dedup.minhash_pairs.shingles",
+        _hashed_shingles(docs.join(cand_docs, "doc_id", "left_semi")))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sa = sh.select(F.col("doc_id").alias("a_id"), "hmod")
     sb = sh.select(F.col("doc_id").alias("b_id"), "hmod")
@@ -806,14 +804,13 @@ def mirror_hosts(corpus: DataFrame,
     """corpus(source, text) → (host_a, host_b, n_a, n_b, shared,
     cont_x1e6): host pairs ranked by content containment
     shared / min(|A|, |B|), after the hot-fingerprint cap."""
-    mirror_release()      # evict the previous call's cached fingerprints
-    global _last_kept
     th = (corpus.select("source", F.md5("text").alias("th"))
           .distinct())
     hot = (th.groupBy("th").agg(F.count("*").alias("nh"))
            .filter(F.col("nh") > hot_t).select("th"))
-    kept = th.join(hot, "th", "left_anti").persist()
-    _last_kept = kept
+    # three lazy consumers (both self-join sides + sizes)
+    kept = scoped_persist("dedup.mirror_hosts",
+                          th.join(hot, "th", "left_anti"))
     sizes = kept.groupBy("source").agg(F.count("*").alias("n"))
     pairs = (kept.alias("a")
              .join(kept.alias("b"), "th")
@@ -831,26 +828,6 @@ def mirror_hosts(corpus: DataFrame,
                    F.expr("(shared * 1000000) DIV least(n_a, n_b)")
                    .cast("long").alias("cont_x1e6")))
     return out
-
-
-# kept feeds three lazy consumers (both self-join sides + sizes), so it
-# must stay persisted until the RESULT is materialized — an unpersist
-# before return would silently undo the cache (the plan hasn't run yet).
-# Same lifecycle policy as search.bm25_topk / weblinks.anchor_corpus:
-# each call evicts the previous call's cache; callers done with the last
-# result can call mirror_release().
-_last_kept = None
-
-
-def mirror_release() -> None:
-    """Unpersist the fingerprint set cached by the latest mirror_hosts."""
-    global _last_kept
-    if _last_kept is not None:
-        try:
-            _last_kept.unpersist(blocking=False)
-        except Exception:
-            pass
-        _last_kept = None
 
 
 def _mirror_corpus(docs: DataFrame) -> DataFrame:

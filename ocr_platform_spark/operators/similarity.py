@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
 from ocr_platform_spark.operators.tables import load
+from ocr_platform_spark.session import scoped_persist
 
 
 def _dot_expr(a: str, b: str) -> F.Column:
@@ -199,8 +200,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query in ANY of LSH_TABLES tables; exact cosine re-rank within
     candidates. Recall vs ann_brute_topk is asserted in pytest; the full
     bucket→re-rank pipeline is reproduced in SQL for the driver oracle."""
-    from pyspark import StorageLevel
-
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     # one pass: all LSH_TABLES bucket ids per row via posexplode (numpy
@@ -210,11 +209,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate join + distinct move bare ids — vectors are fetched
     # afterwards for just the deduplicated candidate set (same shape as
     # dd_embedding_lsh)
-    banded = (emb.select(
+    banded = scoped_persist("similarity.ann_lsh_topk", emb.select(
         "vec_id",
         F.posexplode(bucket_array_np("v", LSH_TABLES, LSH_PLANES))
-        .alias("tbl", "bucket"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .alias("tbl", "bucket")))
     q = (banded.filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"), "tbl", "bucket"))
     n = banded.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket")

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators.tables import load
+from ocr_platform_spark.session import scoped_persist
 
 KMV_K = 16   # small enough that sf0.01's ~30-token host vocabularies
              # exercise the real estimator branch, not just the under-K
@@ -595,34 +596,14 @@ GROUP BY d.source
 _PPL_LO_P, _PPL_HI_P = 33, 67    # tertile cut points
 
 
-# the LM-scored relation persisted by the most recent cx_ppl_buckets
-# call (two consumers: the sketch's histogram branch AND the final
-# bucketing projection — without a persist the full LM subplan, the
-# most expensive text_analysis pipeline, runs twice). Evict-predecessor
-# pattern (bm25_topk's _last_postings): one cached table per session.
-_last_ppl_scored = None
-
-
-def ppl_release() -> None:
-    global _last_ppl_scored
-    if _last_ppl_scored is not None:
-        try:
-            _last_ppl_scored.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to release
-        _last_ppl_scored = None
-
-
 def cx_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     from ocr_platform_spark.operators.text_analysis import lm_scores
 
-    scored = (lm_scores(load(spark, sf_dir, "documents"))
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    ppl_release()               # evict the previous call's cache
-    global _last_ppl_scored
-    _last_ppl_scored = scored
+    # two consumers: the sketch's histogram branch AND the final
+    # bucketing projection — without a persist the full LM subplan, the
+    # most expensive text_analysis pipeline, runs twice
+    scored = scoped_persist("sketches.cx_ppl_buckets",
+                            lm_scores(load(spark, sf_dir, "documents")))
     qs = quantile_sketch(scored, value_col="lm_score_x1e6",
                          ps=(_PPL_LO_P, _PPL_HI_P))
     bounds = qs.agg(
@@ -803,32 +784,14 @@ def hll_estimate(reg: DataFrame, key) -> DataFrame:
         .otherwise(raw).cast("long"))
 
 
-_last_hll_reg = None
-
-
-def hll_rollup_release() -> None:
-    global _last_hll_reg
-    if _last_hll_reg is not None:
-        try:
-            _last_hll_reg.unpersist(blocking=False)
-        except Exception:
-            pass
-        _last_hll_reg = None
-
-
 def ta_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both rollup levels from ONE register pass: per-source rows plus
     the corpus row whose registers are the register-wise MAX merge.
-    The register table persists (evict-predecessor pattern — two
-    consumers; without it the token explode would re-run per level,
-    which is exactly what mergeability exists to avoid)."""
-    from pyspark import StorageLevel
-
-    reg = (hll_registers(load(spark, sf_dir, "documents"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    hll_rollup_release()
-    global _last_hll_reg
-    _last_hll_reg = reg
+    The register table persists (two consumers; without it the token
+    explode would re-run per level, which is exactly what mergeability
+    exists to avoid)."""
+    reg = scoped_persist("sketches.ta_hll_rollup",
+                         hll_registers(load(spark, sf_dir, "documents")))
     per_src = (hll_estimate(reg, "source")
                .select(F.lit("source").alias("level"),
                        F.col("source").alias("key"),
@@ -889,32 +852,14 @@ FROM est
 # mirror of the quantile estimator), pct_x1e4 = rank * 10000 DIV N.
 # All int64, both engines identical. The histogram collapses to <=64
 # rows and BROADCASTS back onto the corpus projection; the scored
-# relation persists with the evict-predecessor pattern (two consumers:
-# histogram + projection).
-
-_last_pct_scored = None
-
-
-def pct_release() -> None:
-    global _last_pct_scored
-    if _last_pct_scored is not None:
-        try:
-            _last_pct_scored.unpersist(blocking=False)
-        except Exception:
-            pass
-        _last_pct_scored = None
+# relation persists (two consumers: histogram + projection).
 
 
 def ta_lm_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     from ocr_platform_spark.operators.text_analysis import lm_scores
 
-    scored = (lm_scores(load(spark, sf_dir, "documents"))
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    pct_release()
-    global _last_pct_scored
-    _last_pct_scored = scored
+    scored = scoped_persist("sketches.ta_lm_percentile",
+                            lm_scores(load(spark, sf_dir, "documents")))
 
     from pyspark.sql.window import Window
 

@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 )
 
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
+from ocr_platform_spark.session import scoped_persist
 
 LINKS_DOCS = 300   # == tools/make_driver_fixtures.py:extract_links_fixture
 
@@ -96,18 +97,14 @@ def anchor_corpus(links: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    anchor_release()        # evict the previous call's cached link base
-    global _last_base
-    base = (links
-            .where(F.col("resolved").isNotNull()
-                   & (F.col("anchor_text") != ""))
-            .select(F.col("resolved").alias("target"),
-                    F.regexp_extract("url", HOST_RE, 1).alias("src_host"),
-                    "anchor_text",
-                    (~F.col("boilerplate")).cast("long").alias("is_content"),
-                    F.length("anchor_text").cast("long").alias("n_chars"))
-            .persist())
-    _last_base = base
+    base = scoped_persist("weblinks.anchor_corpus", (
+        links
+        .where(F.col("resolved").isNotNull() & (F.col("anchor_text") != ""))
+        .select(F.col("resolved").alias("target"),
+                F.regexp_extract("url", HOST_RE, 1).alias("src_host"),
+                "anchor_text",
+                (~F.col("boilerplate")).cast("long").alias("is_content"),
+                F.length("anchor_text").cast("long").alias("n_chars"))))
     per_target = base.groupBy("target").agg(
         F.count("*").alias("n_links"),
         F.sum("is_content").alias("n_content"),
@@ -130,25 +127,6 @@ def wl_anchor_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anchor_corpus(links_df(pages_df(spark, LINKS_DOCS)))
 
 
-# anchor_corpus persists its parsed-link base (both aggregates consume
-# it); in a long-lived session repeated calls would otherwise accumulate
-# cached blocks. Same policy as search.bm25_topk: each call evicts the
-# previous call's cache, and callers done with the last result can call
-# anchor_release().
-_last_base = None
-
-
-def anchor_release() -> None:
-    """Unpersist the link base cached by the most recent anchor_corpus."""
-    global _last_base
-    if _last_base is not None:
-        try:
-            _last_base.unpersist(blocking=False)
-        except Exception:
-            pass
-        _last_base = None
-
-
 FRONTIER_PER_HOST = 3
 
 
@@ -159,19 +137,7 @@ FRONTIER_PER_HOST = 3
 # crawled and the candidate aggregate both read it (and the twin reads
 # each twice: bitmap+verify, probe+flag) — without the persist, an AQE
 # re-plan of any one subtree re-executes the mapInPandas extraction
-# kernel underneath. Same eviction lifecycle as anchor_corpus/bm25.
-_last_frontier_base = None
-
-
-def frontier_release() -> None:
-    """Unpersist the link base cached by the most recent frontier call."""
-    global _last_frontier_base
-    if _last_frontier_base is not None:
-        try:
-            _last_frontier_base.unpersist(blocking=False)
-        except Exception:
-            pass
-        _last_frontier_base = None
+# kernel underneath.
 
 
 def _frontier_base(links: DataFrame):
@@ -182,10 +148,8 @@ def _frontier_base(links: DataFrame):
     support, one shuffle keyed on target url."""
     from pyspark.sql import functions as F
 
-    frontier_release()
-    global _last_frontier_base
-    base = links.select("url", "resolved").persist()
-    _last_frontier_base = base
+    base = scoped_persist("weblinks.frontier_base",
+                          links.select("url", "resolved"))
     crawled = base.select(F.col("url").alias("target")).distinct()
     cand = (base.where(F.col("resolved").isNotNull())
             .groupBy(F.col("resolved").alias("target"))

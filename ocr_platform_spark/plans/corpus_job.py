@@ -59,7 +59,6 @@ downstream consumers.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -68,6 +67,7 @@ from ocr_platform_spark.operators.dedup import minhash_pairs
 from ocr_platform_spark.operators.text_analysis import (
     GOPHER_SQL_PASS, gopher_checks, gopher_pass, gopher_sql_ctes)
 from ocr_platform_spark.plans.extract_job import extract_pages
+from ocr_platform_spark.session import scoped_persist
 from ocr_platform_spark.sources.pages import pages_df
 
 # --- crawl composition (deterministic, engine-replayable) -----------------
@@ -199,8 +199,7 @@ def _derived(spark: SparkSession, crawl: DataFrame) -> DataFrame:
     ext = (extract_pages(url_gate(crawl), n_buckets=16, salt=2)
            .select("url", "lang",
                    F.col("extracted_text").alias("text"), "failed_stage"))
-    return (derive_curation_cols(ext)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    return scoped_persist("corpus_job.derived", derive_curation_cols(ext))
 
 
 def corpus_survivors(derived: DataFrame) -> DataFrame:
@@ -238,8 +237,8 @@ def survivors_narrow(derived: DataFrame) -> DataFrame:
     re-executes the whole near-dup subtree unless it is materialized
     once. At 100k-doc local runs the unpersisted form OOMs the broadcast
     build (measured); persisting the narrow relation fixes both."""
-    return (corpus_survivors(derived).drop("text")
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    return scoped_persist("corpus_job.survivors_narrow",
+                          corpus_survivors(derived).drop("text"))
 
 
 def cx_crawl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

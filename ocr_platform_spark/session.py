@@ -9,18 +9,50 @@ every knob is what we would ship to a 1000-executor cluster:
   executor's Arrow buffer (SURVEY.md §4.2.4),
 - shuffle partitions sized for the local core count (cluster deploys override
   via spark.sql.shuffle.partitions on submit).
+
+It also owns the cache policy for relations an operator persists and
+leaves for lazy consumers (``scoped_persist``).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 # Arrow batch cap: html blobs average ~3-8 KiB at test scale but hot-domain
 # pages are boosted 6x; 2048 rows/batch keeps a batch well under 64 MiB even
 # at 100x the synthetic blob size (SURVEY.md §4.2.4 spill safety).
 ARROW_MAX_RECORDS = 2048
+
+
+# the relation each scoped_persist key's latest call left cached
+_SCOPED: dict[str, DataFrame] = {}
+
+
+def scoped_persist(key: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` at MEMORY_AND_DISK as the one cached relation of
+    ``key``, first evicting whatever the previous call under ``key`` left.
+
+    For a relation that must outlive the call that persists it: the
+    operator returns a lazy DataFrame, so unpersisting before it runs
+    would silently undo the cache, yet a long-lived session (the
+    streaming top-up curates every micro-batch) must not gain one cached
+    relation per call. Policy: one cached relation per key per session.
+
+    Evict BEFORE persist: ``persist`` of a plan that is already cached is
+    a no-op, so when a repeated call builds an identical plan, evicting
+    the predecessor afterwards would uncache the new result too."""
+    prev = _SCOPED.pop(key, None)
+    if prev is not None:
+        try:
+            prev.unpersist(blocking=False)
+        except Py4JError:
+            pass  # session already stopped — nothing to release
+    _SCOPED[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return _SCOPED[key]
 
 
 def default_parallelism() -> int:

@@ -1,12 +1,14 @@
-"""Static guard: no per-row Python in the engine (SURVEY.md §4.2.2).
+"""Static guards over the package source.
 
-BASELINE.json mandates 'no per-row Python' — all Python execution must go
-through Arrow-batched pandas APIs (mapInPandas / pandas_udf / applyInPandas).
-This test greps the package source for the forbidden constructs.
+BASELINE.json mandates 'no per-row Python' (SURVEY.md §4.2.2) — all Python
+execution must go through Arrow-batched pandas APIs (mapInPandas /
+pandas_udf / applyInPandas). The first test greps the package source for
+the forbidden constructs; the second pins the persisted-relation lifecycle.
 """
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -28,4 +30,38 @@ def test_no_forbidden_constructs():
             for m in pat.finditer(text):
                 line = text[: m.start()].count("\n") + 1
                 offenders.append(f"{path.relative_to(PKG.parent)}:{line} — {why}")
+    assert not offenders, "\n".join(offenders)
+
+
+def _attr_calls(scope: ast.AST) -> list[tuple[str, int]]:
+    """(method name, line) of every ``x.name(...)`` call in ``scope``,
+    not descending into nested function definitions."""
+    calls, stack = [], list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            calls.append((node.func.attr, node.lineno))
+        stack.extend(ast.iter_child_nodes(node))
+    return calls
+
+
+def test_every_persist_is_scoped_or_released():
+    """A persisted relation that outlives its function goes through
+    session.scoped_persist (one cached relation per key per session);
+    every other ``.persist(`` is unpersisted in the same function."""
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for scope in [tree, *(n for n in ast.walk(tree) if isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef)))]:
+            if getattr(scope, "name", None) == "scoped_persist":
+                continue
+            calls = _attr_calls(scope)
+            if any(name == "unpersist" for name, _ in calls):
+                continue
+            offenders += [f"{path.relative_to(PKG.parent)}:{line} — persist "
+                          "neither scoped_persist nor unpersisted"
+                          for name, line in calls if name == "persist"]
     assert not offenders, "\n".join(offenders)

@@ -14,6 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators import relational
+from ocr_platform_spark.operators.search import ta_bm25_search
+from ocr_platform_spark.operators.sketches import cx_ppl_buckets
 from ocr_platform_spark.operators.tables import load
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -199,3 +201,33 @@ def test_bm25_broadcasts_small_sides_and_takes_ordered(spark):
     import re
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 2
     assert "InMemoryTableScan" in p          # persisted postings reused
+
+
+@pytest.mark.parametrize("query", [ta_bm25_search, cx_ppl_buckets],
+                         ids=lambda fn: fn.__name__)
+def test_repeated_identical_call_keeps_its_cache(spark, query):
+    """A second identical call still reads its persisted relation.
+    persist() of an already-cached plan is a no-op, so a call that
+    evicted its predecessor AFTER persisting would uncache its own
+    result; session.scoped_persist evicts first."""
+    for call in (1, 2):
+        df = query(spark, SF_DIR)
+        df.collect()
+        assert "InMemoryTableScan" in plan_of(df), f"call {call}"
+
+
+def test_repeated_call_on_new_input_holds_one_calls_cache(spark):
+    """minhash_pairs runs once per micro-batch in the streaming top-up:
+    each call's persisted relations replace the previous call's instead
+    of piling up in the session. The suite shares a session, so compare
+    the change between calls, not absolute counts."""
+    from ocr_platform_spark.operators.dedup import minhash_pairs
+
+    persistent = []
+    for run in range(3):
+        docs = spark.createDataFrame(
+            [(i, f"batch {run} page {i % 12} " + "common words here " * 4)
+             for i in range(30)], "doc_id long, text string")
+        minhash_pairs(docs).count()
+        persistent.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert persistent[2] == persistent[0], persistent
