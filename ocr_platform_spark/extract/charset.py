@@ -23,7 +23,12 @@ stdlib-only, in priority order:
 4. windows-1252 with replacement — the web's de-facto fallback.
 
 Pure function of the byte payload; never raises. Used by
-``extract/pipeline.py`` (stage CORRECT) and ``extract/links.py``.
+``extract/pipeline.py`` (stage CORRECT) and ``extract/links.py``. The
+meta prescan is the one read of markup that comes BEFORE decoding, so
+it keeps the spec's own byte-level prescan grammar; every read of the
+decoded text goes through the package's one tokenizer,
+``extract/fast_scanner.scan`` (its module docstring states the
+contract).
 
 The transport-layer charset (the HTTP ``Content-Type`` header a WARC
 capture carries, ranked between BOM and meta by the spec) is an OPTIONAL

@@ -1,26 +1,52 @@
-"""Regex-driven HTML tokenizer — a drop-in fast path for block parsing.
+"""The one HTML tokenizer: html.parser's events, from compiled regexes.
 
-``html.parser`` is recovery-oriented but pays heavy pure-Python dispatch per
-tag (profiling: ~2/3 of extraction time was parser machinery, not our block
-logic). This scanner walks the byte stream with compiled regexes and feeds
-the SAME ``_BlockParser`` callbacks as the stdlib path, so block output is
-identical. Parity is enforced by tests/test_fast_scanner.py: a differential
-suite over the full synthetic corpus, every golden fixture, 40+ hand-picked
-malformed-HTML edges, and a hypothesis tag-soup fuzzer.
+Every HTML reader in the package is driven by ``scan(text, sink)``: the
+block parser (extract/html_blocks.py), the anchor parser
+(extract/links.py) and the six structured-extraction collectors
+(operators/pagemeta, tablex, microdata, feeds, codeblocks, outline, via
+extract/tagscan.py). ``html.parser`` pays heavy pure-Python dispatch per
+tag; this scanner walks the text with compiled regexes and calls the
+sink exactly as ``HTMLParser(convert_charrefs=True)`` fed the whole
+text and then closed (CPython 3.11 Lib/html/parser.py) calls its
+subclass. The event contract:
 
-The tag grammar below deliberately mirrors the stdlib tokenizer semantics
-(CPython Lib/html/parser.py, html5-tolerant variants) so recovery behavior
-on malformed input is identical:
+- ``handle_starttag(tag, attrs)`` / ``handle_startendtag(tag, attrs)``
+  (a tag ending in ``/>``): the tag name lowercased; ``attrs`` is every
+  attribute in document order as ``(name, value)``, the name
+  lowercased, the value unquoted and entity-unescaped, ``None`` when
+  valueless; duplicates are all passed (readers pick first or last);
+- ``handle_endtag(tag)``: the tag name lowercased, also for a tolerant
+  close such as ``</ h1>`` or ``</p junk>``;
+- ``handle_data(text)``: the entity-unescaped text between two
+  constructs; a literal ``<`` that opens nothing is its own ``"<"``
+  event;
+- a ``<script>``/``<style>`` body is raw text up to the first strict
+  close of its own element (``</script>``, any case, whitespace allowed
+  around the name): one raw ``handle_data`` (no unescaping; tags and
+  comments inside are text), then ``handle_endtag``;
+- comments, ``<!DOCTYPE>``/bogus declarations, processing instructions
+  and marked sections (``<![CDATA[..]]>``, ``<![if ..]>``) emit nothing;
+- a junk start tag (``<div class==>``-style) is emitted raw as data;
+  ``</>`` and bogus ``</...>`` emit nothing.
 
-- tolerant tag-name / attribute grammar (quotes delimit only after ``=``;
-  bare values may contain ``<``, ``/``, interior quotes);
-- junk start tags (``<div class==>``-style) are emitted as raw data;
-- <script>/<style> content is CDATA until a *strict* matching close tag;
-  a non-matching ``</scriptx>`` inside stays data;
-- ``</>`` and bogus ``</...>`` end tags are consumed silently;
-- an unterminated construct at EOF emits data up to and including the next
-  ``'>'`` (else up to the next ``'<'``, else one char) and resumes;
-- text runs are passed through ``html.unescape`` (convert_charrefs=True).
+EOF rules (html.parser's ``close()``):
+
+- a construct still open at EOF (a tag, comment or declaration with no
+  closing ``>``) is emitted as data up to and including the next
+  ``>``, else to the next ``<``, else one character, and the scan
+  resumes after it;
+- inside an unclosed ``<script>``/``<style>`` nothing is emitted after
+  its start event.
+
+Parity includes failure: an unknown marked-section keyword
+(``<![bogus[``) or ``<![`` followed by no name raises ``AssertionError``
+just as html.parser does, after the events before it. Callers decide
+what that means (pipeline.py: the CONVERT_TO_HTML error envelope;
+links.py: no links; tagscan.collect: end of document).
+
+Parity is enforced by tests/test_scan_events.py (event for event
+against a recording ``HTMLParser``), tests/test_fast_scanner.py (block
+lists) and tests/test_weblinks.py (anchors).
 """
 
 from __future__ import annotations
@@ -51,7 +77,10 @@ _COMMENT_CLOSE = re.compile(r"--\s*>")
 _DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
 _MARKED_CLOSE = re.compile(r"]\s*]\s*>")
 _MS_MARKED_CLOSE = re.compile(r"]\s*>")
-_CDATA_ELEMENTS = ("script", "style")
+# a script/style body ends at the first STRICT close of its own element
+# (html.parser's set_cdata_mode): '</scriptx>' or '</script junk>' is text
+_CDATA_CLOSE = {t: re.compile(r"</\s*%s\s*>" % t, re.I)
+                for t in ("script", "style")}
 _ASCII_ALPHA_EQ_SLASH = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/")
 
@@ -62,11 +91,10 @@ _ASCII_ALPHA_EQ_SLASH = frozenset(
 # falls back to the grammar-mirroring _starttag.
 _SIMPLE_START = re.compile(
     r"<([a-zA-Z][-a-zA-Z0-9]*)"
-    # attr names lowercase-only: the full path lowercases names before the
-    # class compare, so CLASS="x" must fall back to it
+    # attr names lowercase-only, so they need no lowercasing either
     r"((?:\s+[a-z_:][-a-z0-9_:.]*=\"[^\"<>&]*\")*)"
     r"\s*(/?)>")
-_SIMPLE_CLASS = re.compile(r"\bclass=\"([^\"]*)\"")
+_SIMPLE_ATTR = re.compile(r"([^\s=]+)=\"([^\"]*)\"")
 _SIMPLE_END = re.compile(r"</([a-zA-Z][-.a-zA-Z0-9:_]*)>")
 
 
@@ -103,8 +131,7 @@ def _starttag(html: str, i: int, n: int, sink) -> int:
             val = val[1:-1]
         if val:
             val = unescape(val)
-        if name.lower() == "class":  # the only attr the sink reads
-            attrs.append(("class", val))
+        attrs.append((name.lower(), val))
         k = am.end()
     end = html[k:endpos].strip()
     if end not in (">", "/>"):
@@ -114,31 +141,21 @@ def _starttag(html: str, i: int, n: int, sink) -> int:
         sink.handle_startendtag(tag, attrs)
     else:
         sink.handle_starttag(tag, attrs)
-        if tag in _CDATA_ELEMENTS:
+        if tag in _CDATA_CLOSE:
             return _cdata(html, endpos, n, sink, tag)
     return endpos
 
 
 def _cdata(html: str, pos: int, n: int, sink, elem: str) -> int:
-    """Raw-text mode: content until a STRICT matching close tag is data we
-    discard (the sink ignores script/style content); a close tag for a
-    different element stays data; EOF inside closes implicitly."""
-    finder = re.compile(r"</\s*%s" % elem, re.IGNORECASE)
-    while True:
-        cm = finder.search(html, pos)
-        if cm is None:
-            sink.handle_endtag(elem)  # EOF inside cdata
-            return n
-        em = _ENDTAG_STRICT.match(html, cm.start())
-        if em and em.group(1).lower() == elem:
-            sink.handle_endtag(elem)
-            return em.end()
-        # e.g. '</scriptx>' inside <script>: not a real close — stay in cdata
-        gt = html.find(">", cm.start() + 1)
-        if gt < 0:
-            sink.handle_endtag(elem)
-            return n
-        pos = gt + 1
+    """Raw-text mode: the body up to the strict close is one raw data
+    event, then the end tag; with no close, EOF swallows the rest."""
+    cm = _CDATA_CLOSE[elem].search(html, pos)
+    if cm is None:
+        return n
+    if cm.start() > pos:
+        sink.handle_data(html[pos:cm.start()])
+    sink.handle_endtag(elem)
+    return cm.end()
 
 
 def _endtag(html: str, i: int, n: int, sink) -> int:
@@ -163,9 +180,8 @@ def _endtag(html: str, i: int, n: int, sink) -> int:
 
 
 def scan(html: str, sink) -> None:
-    """Tokenize ``html``, dispatching to sink.handle_starttag /
-    handle_endtag / handle_startendtag / handle_data (html.parser callback
-    contract, attrs limited to what the sink reads: ``class``)."""
+    """Tokenize ``html`` into ``sink``'s html.parser callbacks under the
+    module-docstring contract."""
     pos = 0
     n = len(html)
     find = html.find
@@ -183,20 +199,14 @@ def scan(html: str, sink) -> None:
             if sm:
                 tag, attrstr, selfclose = sm.group(1, 2, 3)
                 tag = tag.lower()
-                if "class=\"" in attrstr:
-                    # last class wins — same as the full attr loop's append
-                    # order feeding the sink's overwrite loop
-                    attrs = [("class", v) for v in
-                             _SIMPLE_CLASS.findall(attrstr)]
-                else:
-                    attrs = []
+                attrs = _SIMPLE_ATTR.findall(attrstr) if attrstr else []
                 if selfclose:
                     sink.handle_startendtag(tag, attrs)
                     k = sm.end()
                 else:
                     sink.handle_starttag(tag, attrs)
                     k = (_cdata(html, sm.end(), n, sink, tag)
-                         if tag in _CDATA_ELEMENTS else sm.end())
+                         if tag in _CDATA_CLOSE else sm.end())
             else:
                 k = _starttag(html, lt, n, sink)
         elif c == "/":
@@ -235,10 +245,8 @@ def scan(html: str, sink) -> None:
             gt = find(">", lt + 1)
             k = (gt + 1) if gt >= 0 else -1  # decl / PI consumed silently
         else:
-            # literal '<': one char of data, resume right after it
-            nxt = find("<", lt + 1)
-            sink.handle_data(unescape(html[lt:nxt if nxt >= 0 else n]))
-            pos = nxt if nxt >= 0 else n
+            sink.handle_data("<")           # literal '<': its own event
+            pos = lt + 1
             continue
         if k < 0:
             # incomplete construct at EOF: html.parser's close() recovery —
@@ -249,8 +257,6 @@ def scan(html: str, sink) -> None:
                 k = gt + 1
             else:
                 nxt = find("<", lt + 1)
-                k = nxt if nxt >= 0 else n
-                if k == lt:
-                    k = lt + 1
+                k = nxt if nxt >= 0 else lt + 1
             sink.handle_data(unescape(html[lt:k]))
         pos = k

@@ -1,4 +1,4 @@
-"""DOM → flat block model, built on the stdlib ``html.parser``.
+"""DOM → flat block model, a sink of html.parser's callbacks.
 
 The reference recovers document structure with an LLM pass whose contract is
 "add structure tags, never alter text" (ref: apps/queue/src/pipeline/
@@ -301,10 +301,11 @@ class _BlockParser(HTMLParser):
 def parse_blocks(html: str, engine: str = "fast") -> list[Block]:
     """Parse an HTML string into document-ordered blocks.
 
-    ``engine="fast"`` (default) drives the same ``_BlockParser`` callbacks
-    from a single-regex tokenizer (extract/fast_scanner.py) — ~2x the
-    throughput of stdlib html.parser dispatch. ``engine="stdlib"`` keeps the
-    html.parser drive; tests/test_fast_scanner.py asserts both engines
+    ``engine="fast"`` (default) drives the ``_BlockParser`` callbacks from
+    the package's one tokenizer (extract/fast_scanner.py; its module
+    docstring states the event contract) — ~2x the throughput of stdlib
+    html.parser dispatch. ``engine="stdlib"`` keeps the html.parser drive
+    as the test reference; tests/test_fast_scanner.py asserts both engines
     produce identical blocks over the corpus, goldens, and malformed edges.
 
     Never raises on malformed input: both engines are recovery-oriented; any

@@ -6,8 +6,10 @@ Reference parity: the reference's DOM walk captures per-block anchors for
 link-density (apps/web/src/lib/extraction, mirrored in
 extract/html_blocks.py:109); here the anchors themselves are the payload.
 
-Design mirrors the extraction kernel: pure-Python, tolerant of malformed
-HTML (unclosed tags fine, stray end-tags ignored), NEVER raises — a page
+Design mirrors the extraction kernel: pure-Python, driven by the
+package's one tokenizer (extract/fast_scanner.scan, html.parser's event
+contract — see its module docstring), tolerant of malformed HTML
+(unclosed tags fine, stray end-tags ignored), NEVER raises — a page
 that cannot be decoded yields zero links, the page row itself stays
 accounted for upstream. Every anchor is emitted (never-drop), typed by
 ``kind`` so downstream decides what to keep:
@@ -32,6 +34,7 @@ from urllib.parse import urljoin
 
 from ocr_platform_spark.extract.charset import decode_html
 from ocr_platform_spark.extract.classify import CHROME_CLASS_RE
+from ocr_platform_spark.extract.fast_scanner import scan
 from ocr_platform_spark.extract.html_blocks import _collapse_ws
 
 _CHROME_TAGS = ("nav", "aside", "form", "footer")
@@ -54,6 +57,8 @@ _VOID_TAGS = frozenset((
 
 
 class _LinkParser(HTMLParser):
+    # production drives it with fast_scanner.scan; the HTMLParser base
+    # keeps the stdlib feed/close drive as the parity reference
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.anchors: list[tuple[str, list[str], int]] = []  # href, parts, chrome
@@ -98,8 +103,7 @@ def extract_links(url: str, html: bytes | None) -> list[Link]:
     try:
         text, _enc = decode_html(html)   # WHATWG sniff, same as pipeline
         p = _LinkParser()
-        p.feed(text)
-        p.close()
+        scan(text, p)
         # truncated pages leave anchors unclosed — flush them in document
         # order (never-drop)
         while p._open:

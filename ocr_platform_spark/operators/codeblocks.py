@@ -10,8 +10,9 @@ the reference's block classifier keeps pre-blocks verbatim for the
 same reason its HTML stripper exists at all, apps/queue's extraction
 target; SURVEY §2.2 P2/P8).
 
-Spec (implemented here as a collector over the tag events of
-extract/tagscan.py AND independently over html.parser events in
+Spec (implemented here as a collector over the events of
+extract/fast_scanner.scan, whose module docstring states the contract,
+AND independently over html.parser events in
 tools/make_driver_fixtures.py:CodeRefCollector):
 
 - a ``<pre>`` start while no block is open OPENS block ``block_idx``
@@ -24,7 +25,7 @@ tools/make_driver_fixtures.py:CodeRefCollector):
   HTML spells ``<`` in code). ``<br>``/``<br/>`` contributes a
   newline (pre-era forums line-break code that way). script/style
   bodies inside a block are CDATA: raw to their close tag, comments
-  not special inside (the tagscan rules — a ``<script>`` inside a
+  not special inside (the scanner's rules — a ``<script>`` inside a
   pre IS code, its source lands verbatim). Comments are invisible
   outside CDATA.
 - one leading newline of the committed text is dropped — the HTML5
@@ -61,8 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import (attr_map, map_pages,
-                                                scan_tags)
+from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
 CODE_DOCS = 200
 
@@ -177,19 +177,25 @@ class CodeCollector:
         self.lang: str | None = None
         self.buf: list[str] = []
 
-    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
+    def handle_starttag(self, tag: str, attrs: list) -> None:
+        self._start(tag, attrs, False)
+
+    def handle_startendtag(self, tag: str, attrs: list) -> None:
+        self._start(tag, attrs, True)
+
+    def _start(self, tag: str, attrs: list, selfclosed: bool) -> None:
         if not self.open:
             if tag == "pre" and not selfclosed:
                 self.open = True
-                self.lang = lang_from_class(attr_map(attrs).get("class"))
+                self.lang = lang_from_class(first_wins(attrs).get("class"))
                 self.buf = []
             return
         if tag == "br":
             self.buf.append("\n")
         elif tag == "code" and self.lang is None:
-            self.lang = lang_from_class(attr_map(attrs).get("class"))
+            self.lang = lang_from_class(first_wins(attrs).get("class"))
 
-    def end(self, tag: str) -> None:
+    def handle_endtag(self, tag: str) -> None:
         if self.open and tag == "pre":
             text = "".join(self.buf)
             if text.startswith("\n"):
@@ -199,15 +205,14 @@ class CodeCollector:
             self.lang = None
             self.buf = []
 
-    def data(self, text: str) -> None:
+    def handle_data(self, text: str) -> None:
         if self.open:
             self.buf.append(text)
 
 
 def scan_code(text: str) -> list[tuple[int, str | None, str, int, int]]:
     """(block_idx, lang, text, n_lines, n_chars) per committed block."""
-    col = CodeCollector()
-    scan_tags(text, col)
+    col = collect(text, CodeCollector())
     return [(i, lg, tx, tx.count("\n") + 1 if tx else 0, len(tx))
             for (i, lg, tx) in col.out]
 

@@ -5,11 +5,12 @@ crawlers DISCOVER fresh urls (next to sitemaps), and a feed's entries
 are (title, link, timestamp) triples in two dialects — RSS 2.0
 (``<item><title>t</title><link>url</link><pubDate>d</pubDate>``) and
 Atom (``<entry><title>t</title><link href="url"/><updated>d</updated>``).
-Both are XML, which the tag-event driver (extract/tagscan.py)
-tokenizes unchanged.
+Both are XML, which the package's one tokenizer (extract/fast_scanner)
+reads unchanged.
 
-Spec (implemented here as a collector over the tag events of
-extract/tagscan.py AND independently over html.parser events in
+Spec (implemented here as a collector over the events of
+extract/fast_scanner.scan, whose module docstring states the contract,
+AND independently over html.parser events in
 tools/make_driver_fixtures.py:feeds_fixture):
 
 - an ``<item>`` or ``<entry>`` start opens a new entry (entry_idx in
@@ -22,7 +23,7 @@ tools/make_driver_fixtures.py:feeds_fixture):
   close tag, implied-closed by the next field/entry start; open text
   at EOF never commits. FIRST value per (entry, field) wins.
 - comments invisible outside CDATA, raw inside script/style (the
-  tagscan rules — feeds rarely carry these, the fuzzer does).
+  scanner's rules — feeds rarely carry these, the fuzzer does).
 - output: one row per entry (incl. -1 when it has any field) with
   (title, link, updated, n_fields).
 
@@ -38,8 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import (attr_map, map_pages,
-                                                scan_tags)
+from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
 FEED_DOCS = 200
 
@@ -121,7 +121,13 @@ class FeedCollector:
         self.open_field = None
         self.buf = []
 
-    def start(self, tag: str, attrstr: str, selfclosed: bool) -> None:
+    def handle_starttag(self, tag: str, attrs: list) -> None:
+        self._start(tag, attrs, False)
+
+    def handle_startendtag(self, tag: str, attrs: list) -> None:
+        self._start(tag, attrs, True)
+
+    def _start(self, tag: str, attrs: list, selfclosed: bool) -> None:
         if tag in _ENTRY_TAGS or tag in _FIELD_TAGS:
             self._commit_open()
         if tag in _ENTRY_TAGS:
@@ -130,7 +136,7 @@ class FeedCollector:
             return
         if tag in _FIELD_TAGS:
             field = _FIELD_TAGS[tag]
-            href = attr_map(attrstr).get("href") if tag == "link" else None
+            href = first_wins(attrs).get("href") if tag == "link" else None
             if href is not None:
                 self._set(self.entry_idx, field, href)
             elif not selfclosed:
@@ -139,11 +145,11 @@ class FeedCollector:
             else:
                 self._set(self.entry_idx, field, "")
 
-    def end(self, tag: str) -> None:
+    def handle_endtag(self, tag: str) -> None:
         if self.open_field is not None and tag == self.open_field[2]:
             self._commit_open()
 
-    def data(self, text: str) -> None:
+    def handle_data(self, text: str) -> None:
         if self.open_field is not None:
             self.buf.append(text)
 
@@ -153,8 +159,7 @@ def scan_feed(text: str) -> list[tuple[int, str | None, str | None,
     """(entry_idx, title, link, updated, n_fields) rows; entries with
     zero fields still emit a row (an empty <item/> is an entry); the
     -1 header row emits only when it captured a field."""
-    col = FeedCollector()
-    scan_tags(text, col)
+    col = collect(text, FeedCollector())
     return [(e, d.get("title"), d.get("link"), d.get("updated"), len(d))
             for e, d in sorted(col.fields.items()) if e != -1 or d]
 

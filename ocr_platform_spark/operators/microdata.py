@@ -6,8 +6,9 @@ outlines, MICRODATA): product/article markup annotated inline with
 JSON-LD, and crawl pipelines mine it into (item, prop, value) triples.
 
 Simplified spec (a documented WHATWG subset — one spec, implemented
-twice: here as a collector over the tag events of extract/tagscan.py,
-independently over stdlib html.parser events in
+twice: here as a collector over the events of extract/fast_scanner.scan,
+whose module docstring states the contract, independently over stdlib
+html.parser events in
 tools/make_driver_fixtures.py):
 
 - every start tag bearing ``itemscope`` opens a new item (item_idx in
@@ -42,8 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import (attr_map, map_pages,
-                                                scan_tags)
+from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
 MICRO_DOCS = 300
 
@@ -130,7 +130,7 @@ def augment_micro(pages: DataFrame) -> DataFrame:
 
 class MicroCollector:
     """Event-driven collector for the module-docstring spec, fed by
-    extract/tagscan.scan_tags."""
+    extract/fast_scanner.scan."""
 
     def __init__(self) -> None:
         self.out: list[tuple[int, int, str, str]] = []
@@ -152,8 +152,14 @@ class MicroCollector:
         self.open_prop = None
         self.buf = []
 
-    def start(self, tag: str, attrstr: str, selfclosed: bool) -> None:
-        attrs = attr_map(attrstr)
+    def handle_starttag(self, tag: str, attrs: list) -> None:
+        self._start(tag, attrs, False)
+
+    def handle_startendtag(self, tag: str, attrs: list) -> None:
+        self._start(tag, attrs, True)
+
+    def _start(self, tag: str, attrlist: list, selfclosed: bool) -> None:
+        attrs = first_wins(attrlist)
         if "itemscope" in attrs or "itemprop" in attrs:
             self._commit_open()                 # implied close
         if "itemscope" in attrs:
@@ -172,20 +178,18 @@ class MicroCollector:
             else:
                 self._commit_value(self.item_idx, prop, "")
 
-    def end(self, tag: str) -> None:
+    def handle_endtag(self, tag: str) -> None:
         if self.open_prop is not None and tag == self.open_prop[2]:
             self._commit_open()
 
-    def data(self, text: str) -> None:
+    def handle_data(self, text: str) -> None:
         if self.open_prop is not None:
             self.buf.append(text)
 
 
 def scan_microdata(text: str) -> list[tuple[int, int, str, str]]:
     """(item_idx, prop_idx, prop, value) per prop commit."""
-    col = MicroCollector()
-    scan_tags(text, col)
-    return col.out
+    return collect(text, MicroCollector()).out
 
 
 def page_microdata(pages: DataFrame) -> DataFrame:

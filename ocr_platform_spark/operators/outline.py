@@ -9,8 +9,9 @@ this one needs NO augmentation: the synthetic pages carry natural
 ``<h2>``/``<h3>`` section headings.
 
 Semantics (one spec, implemented twice — here as a collector over the
-tag events of extract/tagscan.py, independently over stdlib html.parser
-events in tools/make_driver_fixtures.py:extract_headings_fixture):
+events of extract/fast_scanner.scan, whose module docstring states the
+contract, independently over stdlib html.parser events in
+tools/make_driver_fixtures.py:extract_headings_fixture):
 
 - heading_idx counts heading COMMITS per page in document order;
   level is the tag digit.
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import map_pages, scan_tags
+from ocr_platform_spark.extract.tagscan import collect, map_pages
 
 OUTLINE_DOCS = 300
 
@@ -61,28 +62,28 @@ class _OutlineCollector:
         self.level = 0
         self.buf = []
 
-    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
+    def handle_starttag(self, tag: str, attrs: list) -> None:
         if tag in _H_TAGS:
             self._commit()              # implied close of the open one
-            if selfclosed:
-                self.out.append((len(self.out), _H_TAGS[tag], ""))
-            else:
-                self.level = _H_TAGS[tag]
+            self.level = _H_TAGS[tag]
 
-    def end(self, tag: str) -> None:
+    def handle_startendtag(self, tag: str, attrs: list) -> None:
+        if tag in _H_TAGS:
+            self._commit()
+            self.out.append((len(self.out), _H_TAGS[tag], ""))
+
+    def handle_endtag(self, tag: str) -> None:
         if tag in _H_TAGS:
             self._commit()
 
-    def data(self, text: str) -> None:
+    def handle_data(self, text: str) -> None:
         if self.level:
             self.buf.append(text)
 
 
 def scan_headings(text: str) -> list[tuple[int, int, str]]:
     """(heading_idx, level, text) per heading, document order."""
-    col = _OutlineCollector()
-    scan_tags(text, col)
-    return col.out
+    return collect(text, _OutlineCollector()).out
 
 
 def page_headings(pages: DataFrame) -> DataFrame:

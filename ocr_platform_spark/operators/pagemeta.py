@@ -19,11 +19,10 @@ so a parser handling only one canonical shape fails the oracle. Pages
 with empty payloads get no injection and must survive as all-null rows
 (never-drop).
 
-The kernel is a first-wins head-metadata collector over the tag events
-of extract/tagscan.py (quote-aware tag grammar, invisible comments,
-raw script/style CDATA) — the block tokenizer (extract/fast_scanner)
-deliberately drops every attribute except ``class`` and discards
-script bodies, exactly the payload metadata extraction needs. The
+The kernel is a first-wins head-metadata collector over the
+html.parser events of extract/fast_scanner.scan (its module docstring
+states the contract: every attribute unescaped, invisible comments,
+raw script/style bodies), driven through extract/tagscan.collect. The
 committed fixture oracle
 (tools/make_driver_fixtures.py:extract_metadata_fixture) re-parses the
 same pages with stdlib ``html.parser`` — a genuinely different
@@ -48,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import attr_map, map_pages, scan_tags
+from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
 META_DOCS = 300
 
@@ -127,7 +126,7 @@ META_SCHEMA = StructType([
 class _PageMeta:
     """The _scan_head_meta collector: first-wins fields plus the open
     title and ld+json buffers. A self-closed tag is its start then its
-    end (html.parser's startendtag)."""
+    end (html.parser's default startendtag)."""
 
     __slots__ = ("title", "og_title", "og_type", "canonical",
                  "jsonld_type", "n_meta", "_tbuf", "_ld")
@@ -143,17 +142,17 @@ class _PageMeta:
         return (self.title, self.og_title, self.og_type, self.canonical,
                 self.jsonld_type, self.n_meta)
 
-    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
+    def handle_starttag(self, tag: str, attrs: list) -> None:
         if tag == "meta":
             self.n_meta += 1
-            a = attr_map(attrs)
+            a = first_wins(attrs)
             prop, content = a.get("property"), a.get("content")
             if prop == "og:title" and self.og_title is None:
                 self.og_title = content
             elif prop == "og:type" and self.og_type is None:
                 self.og_type = content
         elif tag == "link":
-            a = attr_map(attrs)
+            a = first_wins(attrs)
             if a.get("rel") == "canonical" and self.canonical is None:
                 self.canonical = a.get("href")
         elif tag == "title":
@@ -165,12 +164,14 @@ class _PageMeta:
                 self._tbuf = []
         elif (tag == "script" and self.jsonld_type is None
               and self._tbuf is None
-              and attr_map(attrs).get("type") == "application/ld+json"):
+              and first_wins(attrs).get("type") == "application/ld+json"):
             self._ld = []
-        if selfclosed:
-            self.end(tag)
 
-    def end(self, tag: str) -> None:
+    def handle_startendtag(self, tag: str, attrs: list) -> None:
+        self.handle_starttag(tag, attrs)
+        self.handle_endtag(tag)
+
+    def handle_endtag(self, tag: str) -> None:
         if tag == "title" and self._tbuf is not None:
             t = "".join(self._tbuf).strip()
             if self.title is None and t:
@@ -182,7 +183,7 @@ class _PageMeta:
                 self.jsonld_type = jm.group(1)
             self._ld = None
 
-    def data(self, text: str) -> None:
+    def handle_data(self, text: str) -> None:
         if self._tbuf is not None:
             self._tbuf.append(text)
         if self._ld is not None:
@@ -192,7 +193,7 @@ class _PageMeta:
 def _scan_head_meta(text: str) -> _PageMeta:
     """First-wins metadata scan (the WHATWG processing model takes the
     first og:* / canonical / title). Whole-document, single pass over
-    the tag events of extract/tagscan.scan_tags.
+    the events of extract/fast_scanner.scan.
 
     Title is a NORMAL element exactly as in html.parser: tags inside an
     (ill-formed) title still tokenize, and the title text is the data
@@ -201,9 +202,7 @@ def _scan_head_meta(text: str) -> _PageMeta:
     routes CDATA through handle_data without unescaping) — and an
     unterminated title at EOF is never committed. An ld+json body
     counts only outside a title."""
-    out = _PageMeta()
-    scan_tags(text, out)
-    return out
+    return collect(text, _PageMeta())
 
 
 def collect_meta(url: str, html: bytes | None) -> tuple:

@@ -20,8 +20,9 @@ a CDATA-blind parser would hallucinate into output. Pages with no
 ``<body>`` (empty/garbage payloads) get no injection and emit no rows.
 
 Cell semantics (one spec, implemented twice — here as a collector over
-the tag events of extract/tagscan.py, and independently over stdlib
-html.parser events in tools/make_driver_fixtures.py:
+the events of extract/fast_scanner.scan, whose module docstring states
+the contract, and independently over stdlib html.parser events in
+tools/make_driver_fixtures.py:
 extract_tables_fixture — so fixture agreement checks the state
 machine, not shared wiring):
 
@@ -55,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
 
-from ocr_platform_spark.extract.tagscan import map_pages, scan_tags
+from ocr_platform_spark.extract.tagscan import collect, map_pages
 
 TABLE_DOCS = 300
 
@@ -157,7 +158,7 @@ def augment_tables(pages: DataFrame) -> DataFrame:
 
 class TableCollector:
     """Event-driven cell collector implementing the module-docstring
-    spec, fed by extract/tagscan.scan_tags; the fixture feeds an
+    spec, fed by extract/fast_scanner.scan; the fixture feeds an
     INDEPENDENT copy of this logic from html.parser events."""
 
     def __init__(self) -> None:
@@ -179,12 +180,11 @@ class TableCollector:
         self.cell_open = False
         self.buf = []
 
-    def start(self, tag: str, attrs: str, selfclosed: bool) -> None:
-        self._open(tag)
-        if selfclosed:
-            self.end(tag)
+    def handle_startendtag(self, tag: str, attrs: list) -> None:
+        self.handle_starttag(tag, attrs)
+        self.handle_endtag(tag)
 
-    def _open(self, tag: str) -> None:
+    def handle_starttag(self, tag: str, attrs: list) -> None:
         if self.depth == 0:
             if tag == "table":
                 self.depth = 1
@@ -213,7 +213,7 @@ class TableCollector:
             self.cell_is_header = tag == "th"
             self.col_idx += 1
 
-    def end(self, tag: str) -> None:
+    def handle_endtag(self, tag: str) -> None:
         if self.depth == 0:
             return
         if tag == "table":
@@ -232,16 +232,14 @@ class TableCollector:
             self._commit_cell()
             self.row_open = False
 
-    def data(self, text: str) -> None:
+    def handle_data(self, text: str) -> None:
         if self.cell_open and self.depth >= 1:
             self.buf.append(text)
 
 
 def scan_tables(text: str) -> list[tuple[int, int, int, bool, str]]:
     """(table_idx, row_idx, col_idx, is_header, cell_text) per cell."""
-    col = TableCollector()
-    scan_tags(text, col)
-    return col.cells
+    return collect(text, TableCollector()).cells
 
 
 def page_tables(pages: DataFrame) -> DataFrame:

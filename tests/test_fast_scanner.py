@@ -69,6 +69,9 @@ EDGE_CASES = [
     "<script></ script ><p>ws close</p>",
     "<p class=\"x\" class='y'>dup class</p>",
     "<div\tclass\n=\r'ws'>attr ws</div>",
+    # a non-strict '</script' must not skip past the real close
+    "<script></script</script><p>after</p>",
+    "<p>x</p><script>a</script </script><p>after</p>",
 ]
 
 

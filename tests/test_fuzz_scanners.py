@@ -1,14 +1,13 @@
-"""Differential fuzzing: production regex-grammar scanners vs the
-html.parser reference collectors (tools/make_driver_fixtures.py).
+"""Differential fuzzing: the production collectors, driven by
+extract/fast_scanner.scan, vs the html.parser reference collectors
+(tools/make_driver_fixtures.py).
 
 The fixed md5 menus exercise each variant once; hypothesis composes the
 SAME building blocks into arbitrary (including wildly malformed)
 structures — stray closes, unbalanced nesting, interleaved comments and
-CDATA, EOF truncation at any token boundary — and the two independent
-implementations must agree on every one. Token alphabet stays inside
-the supported grammar (complete entities only, well-formed tag tokens):
-outside it html.parser's bogus-markup recovery is deliberately
-unspecified here.
+CDATA, marked sections, processing instructions, unclosed comments, EOF
+truncation at any token boundary — and the two independent
+implementations must agree on every one.
 """
 
 from __future__ import annotations
@@ -26,9 +25,14 @@ from tools.make_driver_fixtures import (HeadingRefCollector,  # noqa: E402
 
 _TEXT = st.text(alphabet="abc xyz", min_size=0, max_size=12)
 _ENTITY = st.sampled_from(["&amp;", "&lt;", "&#65;"])
+# markup every reader must skip the way html.parser does: a CDATA marked
+# section and a processing instruction vanish, an unclosed comment is
+# recovered as data, a doctype is a declaration
+_DECL = st.sampled_from(["<![CDATA[c]]>", "<?php y?>", "<!-- x",
+                         "<!DOCTYPE html>"])
 
 _TABLE_TOKENS = st.one_of(
-    _TEXT, _ENTITY,
+    _TEXT, _ENTITY, _DECL,
     st.sampled_from([
         "<table>", "</table>", "<tr>", "</tr>",
         "<td>", "</td>", "<th>", "</th>",
@@ -40,15 +44,15 @@ _TABLE_TOKENS = st.one_of(
         "<script>a <!-- kept --> b</script>",
         "<script>not closed by </scripty> keeps going</script>",
         "<script>spaced close </script >",
-        "<style>p{}</style>", "<script/>",
+        "<style>p{}</style>", "<script/>", "</ td>",
         "<thead>", "</thead>", "<tbody>", "</tbody>",
     ]))
 
 _HEADING_TOKENS = st.one_of(
-    _TEXT, _ENTITY,
+    _TEXT, _ENTITY, _DECL,
     st.sampled_from([
         "<h1>", "</h1>", "<h2>", "</h2>", "<h3>", "</h3>",
-        "<H2>", "</H3>", "<h2/>", "<h6>", "</h6>",
+        "<H2>", "</H3>", "<h2/>", "<h6>", "</h6>", "</ h1>",
         "<b>", "</b>", "<p>", "</p>",
         "<!-- c <h2>ghost</h2> -->",
         "<script>var t = \"<h1>f\";</script>",
@@ -95,7 +99,7 @@ def test_fuzz_headings_scanner_matches_html_parser(tokens):
 from tools.make_driver_fixtures import meta_ref_scan  # noqa: E402
 
 _META_TOKENS = st.one_of(
-    _TEXT, _ENTITY,
+    _TEXT, _ENTITY, _DECL,
     st.sampled_from([
         '<meta property="og:title" content="A">',
         "<META PROPERTY='og:title' CONTENT='B'>",
@@ -103,6 +107,7 @@ _META_TOKENS = st.one_of(
         '<meta property="og:title" content="D" property="og:title"'
         ' PROPERTY="og:type">',             # dup attrs: first-wins
         '<meta property="og:type" content="book"/>',
+        '<meta property="og:title" content="a&amp;b">',
         '<meta charset="utf-8">',
         '<link rel="canonical" href="https://c.example/x">',
         '<link href="https://c.example/y" rel="canonical">',
@@ -182,7 +187,7 @@ def test_fuzz_jsonl_kernel_total_over_raw_bytes(data):
 from tools.make_driver_fixtures import MicroRefCollector  # noqa: E402
 
 _MICRO_TOKENS = st.one_of(
-    _TEXT, _ENTITY,
+    _TEXT, _ENTITY, _DECL,
     st.sampled_from([
         "<div itemscope>", "</div>", "<p itemscope>", "</p>",
         '<div itemscope itemtype="https://schema.org/Product">',
@@ -190,6 +195,7 @@ _MICRO_TOKENS = st.one_of(
         '<span itemprop="a">', '<span itemprop="">', "<span itemprop>",
         '<meta itemprop="m" content="v">', '<meta itemprop="m">',
         '<meta itemprop="m" content="">',
+        '<meta itemprop="m" content="a&amp;b">',
         '<a itemprop="u" href="/x">', '<a itemprop="u">', "</a>",
         '<img itemprop="i" src="/p.png">', '<img itemprop="i">',
         '<time itemprop="t" datetime="2024-01-01">', "<time itemprop='t'>",
@@ -251,7 +257,7 @@ def test_fuzz_cdc_matches_independent_rolling_pass(data):
 from tools.make_driver_fixtures import FeedRefCollector  # noqa: E402
 
 _FEED_TOKENS = st.one_of(
-    _TEXT, _ENTITY,
+    _TEXT, _ENTITY, _DECL,
     st.sampled_from([
         "<rss>", "</rss>", "<channel>", "</channel>",
         "<feed>", "</feed>", "<item>", "</item>", "<entry>", "</entry>",
@@ -259,6 +265,7 @@ _FEED_TOKENS = st.one_of(
         "<title>", "</title>", "<title/>",
         "<link>", "</link>", '<link href="https://x/a"/>',
         '<link href="https://x/b">', "<link href>",
+        '<link href="https://x/c?a=1&amp;b=2"/>',
         "<pubDate>", "</pubDate>", "<updated>", "</updated>",
         "<TITLE>", "</TITLE>", "<PubDate>",
         "<!-- <item><title>ghost</title></item> -->",
@@ -295,7 +302,7 @@ def test_fuzz_feed_scanner_matches_html_parser(tokens):
 from tools.make_driver_fixtures import CodeRefCollector  # noqa: E402
 
 _CODE_TOKENS = st.one_of(
-    _TEXT, _ENTITY, st.sampled_from(["\n", "    ", "\n    "]),
+    _TEXT, _ENTITY, _DECL, st.sampled_from(["\n", "    ", "\n    "]),
     st.sampled_from([
         "<pre>", "</pre>", "<pre/>", "<PRE>", "</PRE>",
         '<pre class="language-python">', "<pre class='lang-JS high'>",

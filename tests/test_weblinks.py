@@ -4,6 +4,8 @@ the links → host-graph chain."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.extract.links import extract_links
@@ -74,6 +76,69 @@ def test_kernel_fuzz_never_raises_and_is_deterministic():
         assert [lk.link_no for lk in out1] == list(range(len(out1)))
         noise = bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
         assert isinstance(extract_links("u", noise), list)
+
+
+# --- anchor parity: fast_scanner drive ≡ stdlib feed/close drive -----------
+# (the extract_links fixture is generated by extract_links itself, so only
+# a second drive of the same _LinkParser can catch tokenizer drift)
+
+def _anchors(text: str, drive) -> tuple:
+    """(closed anchors, anchors still open at EOF), or 'raise'."""
+    from ocr_platform_spark.extract.links import _LinkParser
+
+    p = _LinkParser()
+    try:
+        drive(text, p)
+    except AssertionError:
+        return "raise"
+    return p.anchors, p._open
+
+
+def _feed_close(text: str, p) -> None:
+    p.feed(text)
+    p.close()
+
+
+def _assert_anchor_parity(text: str) -> None:
+    from ocr_platform_spark.extract.fast_scanner import scan
+
+    assert _anchors(text, scan) == _anchors(text, _feed_close), repr(text)
+
+
+def test_anchor_parity_corpus_and_adversarial_pages():
+    from ocr_platform_spark.datagen import adversarial_pages, gen_document
+    from ocr_platform_spark.extract.charset import decode_html
+
+    docs = [gen_document(i, 42)["html"] for i in range(400)]
+    docs += [p["html"] for p in adversarial_pages()]
+    for html in docs:
+        _assert_anchor_parity(decode_html(html)[0])
+
+
+def test_anchor_parity_edge_cases():
+    from tests.test_fast_scanner import EDGE_CASES
+
+    for text in EDGE_CASES + ["<p><a href='/x'>open at <a href=y>EOF"]:
+        _assert_anchor_parity(text)
+
+
+_ANCHOR_TOKENS = st.one_of(
+    st.text(alphabet="abc xyz", max_size=12),
+    st.sampled_from([
+        '<a href="/x">', "<a href='#f'>", "<a href=y>", "<a>", "</a>",
+        '<A HREF="HTTP://X.Y/Z">', '<a href="/q?a=1&amp;b=2">',
+        '<a class="menu" href="//h.t/p">', "<a href>", "</ a>",
+        "<nav>", "</nav>", '<div class="sidebar">', "</div>",
+        "<p>", "</p>", "<br>", "<img src=x>", "&amp;", "&lt;",
+        "<script>var a = '<a href=\"/s\">s</a>';</script>",
+        "<!-- <a href='/c'>c</a> -->", "<![CDATA[x]]>", "<!-- open",
+    ]))
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_ANCHOR_TOKENS, max_size=30))
+def test_fuzz_anchor_parity(tokens):
+    _assert_anchor_parity("".join(tokens))
 
 
 def test_links_plan_has_no_exchange(spark):
