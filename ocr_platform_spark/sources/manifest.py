@@ -65,8 +65,9 @@ def build_manifest(extracted: DataFrame, run_id: str) -> DataFrame:
 def write_with_manifest(extracted: DataFrame, output_path: str,
                         run_id: str,
                         processed_buckets: DataFrame | None = None,
-                        table: str | None = None) -> None:
-    """Write extraction output partitioned by bucket + append manifest rows.
+                        table: str | None = None) -> DataFrame:
+    """Write extraction output partitioned by bucket + append manifest rows;
+    returns the whole output read back (the table downstream queries see).
 
     Two sinks behind one seam (SURVEY §7):
 
@@ -102,14 +103,16 @@ def write_with_manifest(extracted: DataFrame, output_path: str,
         # manifest derives from what is now durably on disk (not from the
         # pre-write plan — a lost task would otherwise go unnoticed)
         done = spark.read.parquet(output_path)
+    scope = done
     if processed_buckets is not None:
-        done = done.join(F.broadcast(processed_buckets.select("bucket")
-                                     .distinct()), "bucket", "left_semi")
-    manifest = build_manifest(done, run_id)
+        scope = done.join(F.broadcast(processed_buckets.select("bucket")
+                                      .distinct()), "bucket", "left_semi")
+    manifest = build_manifest(scope, run_id)
     if table is not None:
         manifest.writeTo(table + "_manifest").append()
     else:
         manifest.write.mode("append").parquet(manifest_path(output_path))
+    return done
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:

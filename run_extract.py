@@ -23,9 +23,10 @@ Sandbox usage (local mode, synthesizes input when --gen N is given):
     python run_extract.py --gen 10000 --output /tmp/extracted
 
 The job: read pages(url, warc_ts, html, text, lang) → salted url-hash
-repartition → mapInPandas(extract) → parquet/Iceberg partitioned by bucket
-+ per-partition lineage manifest. Re-running after a failure processes only
-buckets absent from the manifest (exact resume-from-checkpoint).
+repartition (two tasks per core) → mapInPandas(extract) → parquet/Iceberg
+partitioned by bucket + per-partition lineage manifest. Re-running after a
+failure processes only buckets absent from the manifest (exact
+resume-from-checkpoint).
 """
 
 from __future__ import annotations

@@ -10,6 +10,8 @@ wrong answer.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,17 +139,33 @@ def test_extract_job_shuffles_exactly_once(spark):
     assert "ArrowEvalPython" in p or "MapInPandas" in p
 
 
-def test_extract_repartition_not_coalesced_by_aqe(spark):
+@pytest.mark.parametrize("kwargs, want", [
+    ({"n_buckets": 16, "n_partitions": 12}, None),
+    ({"n_buckets": 64}, lambda cores: min(64 * 4, 2 * cores)),
+    ({"n_buckets": 1, "salt": 2}, lambda cores: 2),
+], ids=["explicit-12", "default-64x4", "default-1x2"])
+def test_extract_repartition_not_coalesced_by_aqe(spark, kwargs, want):
     """The explicit partition count must survive AQE: the compute-bound UDF
     stage would serialize if byte-based coalescing shrank it (measured:
-    local[32] slower than local[8] without this)."""
+    local[32] slower than local[8] without this). Left unset, the count is
+    min(bucket x salt, 2 x cores)."""
     from ocr_platform_spark.plans.extract_job import extract_pages
     from ocr_platform_spark.sources.pages import pages_df
 
-    ext = extract_pages(pages_df(spark, 2000), n_buckets=16, n_partitions=12)
-    n_parts = (ext.select(F.spark_partition_id().alias("pid"))
-               .distinct().count())
-    assert n_parts >= 10, f"extraction ran on only {n_parts} partitions"
+    ext = extract_pages(pages_df(spark, 2000), **kwargs)
+    pids = ext.select(F.spark_partition_id().alias("pid")).distinct()
+    n_parts = len(pids.collect())
+    if want is None:
+        assert n_parts >= 10, f"extraction ran on only {n_parts} partitions"
+        return
+    # the AQE-final plan's extraction exchange carries the task count
+    # (distinct partition ids can undercount: two keys may share a task)
+    plan = plan_of(pids)
+    exchange = re.search(r"hashpartitioning\(bucket#\d+, salt#\d+L?, (\d+)\), "
+                         r"REPARTITION_BY_NUM", plan)
+    assert exchange, plan
+    cores = spark.sparkContext.defaultParallelism
+    assert int(exchange.group(1)) == want(cores)
 
 
 def test_scalar_queries_stay_in_codegen(spark):
@@ -219,15 +237,21 @@ def test_repeated_identical_call_keeps_its_cache(spark, query):
 def test_repeated_call_on_new_input_holds_one_calls_cache(spark):
     """minhash_pairs runs once per micro-batch in the streaming top-up:
     each call's persisted relations replace the previous call's instead
-    of piling up in the session. The suite shares a session, so compare
-    the change between calls, not absolute counts."""
+    of piling up in the session. The suite shares a session, and the
+    JVM's registry holds persisted RDDs weakly, so an earlier test's
+    relation can drop out at any GC: count only the RDDs that were not
+    persisted before the first call."""
     from ocr_platform_spark.operators.dedup import minhash_pairs
 
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent_ids()
     persistent = []
     for run in range(3):
         docs = spark.createDataFrame(
             [(i, f"batch {run} page {i % 12} " + "common words here " * 4)
              for i in range(30)], "doc_id long, text string")
         minhash_pairs(docs).count()
-        persistent.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+        persistent.append(len(persistent_ids() - before))
     assert persistent[2] == persistent[0], persistent
