@@ -11,7 +11,7 @@ the north rule fixes (url, warc_ts, html, text, lang):
                            BEFORE the kernel: rows are dropped while they
                            are still one url string, never after paying
                            Python extraction for them)
-      → extraction kernel (extract_pages: salted url-hash repartition →
+      → extraction kernel (extract_pages: (bucket, salt) placement →
                            mapInPandas, the flagship job's exact shape)
       → failure routing   (failed_stage rows split off, never dropped)
       → language gate     (detect_language over EXTRACTED text;

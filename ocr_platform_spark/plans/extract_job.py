@@ -4,7 +4,7 @@ Spark equivalent of the reference's whole queue pipeline
 (apps/queue/src/pipeline/index.ts:8-130 + queues/page/worker.ts:19-106),
 collapsed into ONE Spark job:
 
-    read pages → salted url-hash repartition → mapInPandas(extract)
+    read pages → place rows by (bucket rank, salt) → mapInPandas(extract)
                → write partitioned parquet + lineage manifest
 
 Physical notes (SURVEY.md §4.2):
@@ -13,6 +13,9 @@ Physical notes (SURVEY.md §4.2):
   hot domains (Zipf-skewed, larger blobs) do not serialize one task —
   AQE's skew handling only covers join/shuffle-read skew, not UDF compute
   skew, so the salt is ours (§4.2.1).
+- the exchange places each row directly (``repartitionById``): every task
+  owns one contiguous run of the wave's (bucket rank, salt) keys, so a
+  bucket lands in few tasks and a wave writes few files (``place_wave``).
 - extraction runs in ``mapInPandas`` over Arrow batches — no per-row Python
   UDFs, no RDD.map (enforced by tests/test_no_per_row_python.py).
 - each batch calls the pure-Python core (ocr_platform_spark.extract), the
@@ -24,7 +27,7 @@ from __future__ import annotations
 
 import time
 import uuid
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -112,16 +115,60 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame((row + (cost,) for row in out), columns=cols)
 
 
+def place_wave(df: DataFrame, n_buckets: int, salt: int,
+               n_partitions: int | None = None,
+               buckets: Sequence[int] | None = None) -> DataFrame:
+    """Send each row of ``df`` (with ``bucket``) to the task that owns its key.
+
+    The key is ``rank * salt + pmod(xxhash64(url, 1), salt)``, where rank is
+    the bucket's position in the sorted wave ``buckets`` (default: all
+    ``n_buckets``). With K buckets and N tasks, task ``key * N div (K *
+    salt)`` owns one contiguous run of keys. So a bucket spans at most
+    ``ceil(N / K) + 1`` tasks (2 when K >= N) and a wave writes at most
+    ``K + N - 1`` files, while the salt still splits each bucket over
+    several tasks when the wave has fewer buckets than tasks. Ranking
+    within the wave, not over ``n_buckets``, keeps a small resume wave
+    spread over every task. ``repartitionById`` takes the task id as is:
+    no hash, no sampling job.
+    """
+    wave = sorted(set(buckets)) if buckets is not None else range(n_buckets)
+    k = len(wave)
+    if n_partitions is None:
+        # two tasks per core keep waves balanced; more only add per-task
+        # cost (~74 ms CPU each on a 4-core Xeon: shuffle read, Python
+        # runner, Arrow streams, parquet writer and commit). K x salt
+        # bounds it so a tiny input gets no empty tasks. At scale a task's
+        # input is bounded by the max_buckets wave, not by this.
+        cores = df.sparkSession.sparkContext.defaultParallelism
+        n_partitions = min(k * salt, 2 * cores)
+    if wave[-1] == k - 1:
+        rank = F.col("bucket")  # the wave is buckets 0..K-1
+    else:
+        # int-array literal indexed by bucket (folded at planning: O(1) a
+        # row); one string keeps it a single call at 2^16 buckets
+        by_bucket = [0] * (wave[-1] + 1)
+        for r, b in enumerate(wave):
+            by_bucket[b] = r
+        ranks = F.split(F.lit(",".join(map(str, by_bucket))), ",")
+        rank = F.element_at(ranks.cast("array<int>"), F.col("bucket") + 1)
+    key = (rank.cast("long") * salt
+           + F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
+    task = F.call_function("div", key * n_partitions, F.lit(k * salt))
+    return df.repartitionById(n_partitions, task.cast("int"))
+
+
 def extract_pages(pages: DataFrame,
                   n_buckets: int = DEFAULT_BUCKETS,
                   salt: int = DEFAULT_SALT,
                   shuffle: bool = True,
-                  n_partitions: int | None = None) -> DataFrame:
+                  n_partitions: int | None = None,
+                  buckets: Sequence[int] | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted DataFrame.
 
     ``shuffle=False`` skips the repartition when the input is already
     well-distributed (e.g. freshly generated from spark.range) — the
-    classifier then runs map-side with zero shuffles.
+    classifier then runs map-side with zero shuffles. ``buckets`` names the
+    wave the input holds (see ``place_wave``); None means all buckets.
 
     The repartition carries an EXPLICIT partition count: extraction cost is
     Python compute per row, not shuffle bytes, so AQE's byte-based partition
@@ -131,20 +178,7 @@ def extract_pages(pages: DataFrame,
     """
     df = with_bucket(pages, n_buckets)
     if shuffle:
-        # salt splits each bucket into `salt` deterministic sub-keys; heavy
-        # buckets spread over `salt` tasks instead of serializing one.
-        if n_partitions is None:
-            # two tasks per core keep waves balanced; more only add per-task
-            # cost (~74 ms CPU each on a 4-core Xeon: shuffle read, Python
-            # runner, Arrow streams, parquet writer and commit). bucket x
-            # salt bounds it so a tiny input gets no empty tasks. At scale a
-            # task's input is bounded by the max_buckets wave, not by this.
-            cores = df.sparkSession.sparkContext.defaultParallelism
-            n_partitions = min(n_buckets * salt, 2 * cores)
-        df = df.withColumn(
-            "salt", F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
-        df = df.repartition(n_partitions, F.col("bucket"), F.col("salt"))
-        df = df.drop("salt")
+        df = place_wave(df, n_buckets, salt, n_partitions, buckets)
     cols = ["url", "html", "lang", "bucket"]
     if "transport_charset" in df.columns:
         cols.append("transport_charset")
@@ -168,7 +202,7 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame,
     shuffle scratch is a wave's share of the corpus, each wave a normal
     resume (D6), until pending drains to zero."""
     from ocr_platform_spark.sources.manifest import (
-        pending_buckets, write_with_manifest)
+        pending_buckets, read_output, write_with_manifest)
 
     run_id = run_id or uuid.uuid4().hex[:12]
     todo = with_bucket(pages, n_buckets)
@@ -183,9 +217,9 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame,
         todo_buckets = sorted(todo_buckets)[:max_buckets]
         todo = todo.filter(F.col("bucket").isin(todo_buckets))
     if todo_buckets:
-        extracted = extract_pages(todo, n_buckets, salt)
+        extracted = extract_pages(todo, n_buckets, salt, buckets=todo_buckets)
         return write_with_manifest(
             extracted, output_path, run_id,
             processed_buckets=spark.createDataFrame(
                 [(b,) for b in todo_buckets], "bucket int"))
-    return spark.read.parquet(output_path)
+    return read_output(spark, output_path)

@@ -16,13 +16,22 @@ apps/queue/src/queues/book/worker.ts:38-44). Spark-first equivalent
   skipped buckets are never scanned).
 
 Manifest rows are derived by aggregating the ACTUAL written output — not by
-accumulators, which double-count under task retries.
+accumulators, which double-count under task retries. The output is listed
+on the driver (``read_output``): a distributed listing job costs more than
+it saves for a few thousand bucket directories.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# bucket directories up to which the output is listed on the driver; above
+# it (2^16-bucket layouts on object stores) Spark lists them in a job
+DRIVER_LISTING_MAX_PATHS = 1024
 
 MANIFEST_COLS = [
     "bucket", "run_id", "docs_in", "docs_out", "docs_failed",
@@ -33,6 +42,27 @@ MANIFEST_COLS = [
 
 def manifest_path(output_path: str) -> str:
     return output_path.rstrip("/") + "_manifest"
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the body of a ``with``, then restore it."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def read_output(spark: SparkSession, output_path: str) -> DataFrame:
+    """The partitioned output, listed on the driver. Spark's default
+    discovery threshold (32 paths) would start a distributed listing job
+    for any output with more bucket directories than that."""
+    with _session_conf(
+            spark, "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DRIVER_LISTING_MAX_PATHS)):
+        return spark.read.parquet(output_path)
 
 
 def build_manifest(extracted: DataFrame, run_id: str) -> DataFrame:
@@ -67,7 +97,8 @@ def write_with_manifest(extracted: DataFrame, output_path: str,
                         processed_buckets: DataFrame | None = None,
                         table: str | None = None) -> DataFrame:
     """Write extraction output partitioned by bucket + append manifest rows;
-    returns the whole output read back (the table downstream queries see).
+    returns the whole output read back (the table downstream queries see),
+    listed on the driver by ``read_output`` on the parquet path.
 
     Two sinks behind one seam (SURVEY §7):
 
@@ -92,17 +123,13 @@ def write_with_manifest(extracted: DataFrame, output_path: str,
         extracted.writeTo(table).overwritePartitions()
         done = spark.read.table(table)
     else:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with _session_conf(spark, "spark.sql.sources.partitionOverwriteMode",
+                           "dynamic"):
             (extracted.write.mode("overwrite").partitionBy("bucket")
              .parquet(output_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         # manifest derives from what is now durably on disk (not from the
         # pre-write plan — a lost task would otherwise go unnoticed)
-        done = spark.read.parquet(output_path)
+        done = read_output(spark, output_path)
     scope = done
     if processed_buckets is not None:
         scope = done.join(F.broadcast(processed_buckets.select("bucket")

@@ -22,8 +22,9 @@ Sandbox usage (local mode, synthesizes input when --gen N is given):
 
     python run_extract.py --gen 10000 --output /tmp/extracted
 
-The job: read pages(url, warc_ts, html, text, lang) → salted url-hash
-repartition (two tasks per core) → mapInPandas(extract) → parquet/Iceberg
+The job: read pages(url, warc_ts, html, text, lang) → place rows by
+(bucket, salt), each task a contiguous run of buckets (two tasks per core)
+→ mapInPandas(extract) → parquet/Iceberg
 partitioned by bucket + per-partition lineage manifest. Re-running after a
 failure processes only buckets absent from the manifest (exact
 resume-from-checkpoint).

@@ -127,8 +127,8 @@ def test_catalog_page_broadcasts_all_dims(spark):
 
 
 def test_extract_job_shuffles_exactly_once(spark):
-    """The extraction plan has exactly ONE Exchange: the explicit salted
-    url-hash repartition. Anything more means an accidental extra shuffle
+    """The extraction plan has exactly ONE Exchange: the explicit
+    (bucket, salt) placement. Anything more means an accidental extra shuffle
     of the multi-KiB html blobs."""
     from ocr_platform_spark.plans.extract_job import extract_pages
     from ocr_platform_spark.sources.pages import pages_df
@@ -161,7 +161,8 @@ def test_extract_repartition_not_coalesced_by_aqe(spark, kwargs, want):
     # the AQE-final plan's extraction exchange carries the task count
     # (distinct partition ids can undercount: two keys may share a task)
     plan = plan_of(pids)
-    exchange = re.search(r"hashpartitioning\(bucket#\d+, salt#\d+L?, (\d+)\), "
+    exchange = re.search(r"shufflepartitionidpassthrough\("
+                         r"direct_shuffle_partition_id\(.*\), (\d+)\), "
                          r"REPARTITION_BY_NUM", plan)
     assert exchange, plan
     cores = spark.sparkContext.defaultParallelism

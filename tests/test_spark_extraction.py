@@ -14,7 +14,7 @@ import pytest
 from ocr_platform_spark.datagen import gen_document
 from ocr_platform_spark.extract import extract_document
 from ocr_platform_spark.plans.extract_job import (
-    extract_pages, run_extraction_job, with_bucket)
+    extract_pages, place_wave, run_extraction_job, with_bucket)
 from ocr_platform_spark.sources.pages import pages_df
 
 N_DOCS = 200
@@ -154,18 +154,18 @@ def test_manifest_counters_consistent(spark, tmp_path):
 
 def test_salt_balances_partition_cost(spark):
     """Salt sub-splits coarse resume buckets so per-partition compute cost
-    (proxied by html bytes) balances: max/mean per-partition cost must be
-    strictly better with salt=4 than salt=1 at equal partition count
-    (SURVEY §4.2.1 — AQE cannot fix UDF compute skew)."""
+    (proxied by html bytes) balances: on a wave with fewer buckets than
+    tasks, max/mean per-partition cost must be strictly better with salt=4
+    than salt=1 at equal partition count (SURVEY §4.2.1 — AQE cannot fix
+    UDF compute skew)."""
     from pyspark.sql import functions as F
 
-    pages = pages_df(spark, 3000)
+    pages = with_bucket(pages_df(spark, 3000), n_buckets=8)
+    wave = [0, 1, 2]
 
     def imbalance(salt: int) -> float:
-        df = with_bucket(pages, n_buckets=8)
-        df = df.withColumn(
-            "salt", F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
-        df = df.repartition(8, F.col("bucket"), F.col("salt"))
+        df = place_wave(pages.filter(F.col("bucket").isin(wave)),
+                        n_buckets=8, salt=salt, n_partitions=8, buckets=wave)
         per_part = (df.groupBy(F.spark_partition_id().alias("pid"))
                     .agg(F.sum(F.length("html")).alias("cost")))
         rows = [r["cost"] for r in per_part.collect()]
@@ -173,6 +173,38 @@ def test_salt_balances_partition_cost(spark):
         return max(rows) / (sum(rows) / len(rows))
 
     assert imbalance(4) < imbalance(1)
+
+
+@pytest.mark.parametrize("waves_before, max_buckets, wave", [
+    (0, None, range(8)),
+    (0, 3, range(3)),
+    (1, 3, range(3, 6)),
+], ids=["all-8", "wave-0-2", "wave-3-5"])
+def test_wave_layout_contiguous_per_task(spark, tmp_path, waves_before,
+                                         max_buckets, wave):
+    """Each task owns a contiguous run of the wave's (bucket rank, salt)
+    keys. A bucket spans at most ceil(N / K) + 1 tasks (2 once K >= N), a
+    wave of K buckets on N = min(K x salt, 2 x cores) tasks writes at most
+    K + N - 1 files, and a resume wave over a subset of buckets still runs
+    on all N tasks (rows are ranked within the wave, not over n_buckets)."""
+    from pyspark.sql import functions as F
+
+    out = tmp_path / "layout"
+    pages = pages_df(spark, 400)
+    for _ in range(waves_before + 1):
+        run_extraction_job(spark, pages, str(out), n_buckets=8, salt=4,
+                           max_buckets=max_buckets)
+    k = len(wave)
+    n = min(k * 4, 2 * spark.sparkContext.defaultParallelism)
+    files = {b: len(list((out / f"bucket={b}").glob("*.parquet")))
+             for b in wave}
+    assert max(files.values()) <= -(-n // k) + 1, files  # 2 once k >= n
+    assert sum(files.values()) <= k + n - 1, files
+
+    todo = with_bucket(pages, 8).filter(F.col("bucket").isin(list(wave)))
+    tasks = (extract_pages(todo, 8, 4, buckets=list(wave))
+             .select(F.spark_partition_id().alias("pid")).distinct())
+    assert tasks.count() == n
 
 
 def test_manifest_cost_column(spark, tmp_path):
