@@ -74,22 +74,6 @@ def _bucket_projection(sigs: DataFrame, id_alias: str) -> DataFrame:
         F.posexplode(_band_bucket_array()).alias("band", "bucket")))
 
 
-def _dynamic_overwrite(df: DataFrame, path: str, *cols: str) -> None:
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*cols).parquet(path)
-    finally:
-        # restore EXACTLY the prior state: an unset conf must go back to
-        # unset (static default), not stay dynamic for later writers
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-
-
 def write_signature_store(sigs: DataFrame, store_dir: str,
                           epoch: str | None = None) -> None:
     """Append a batch's signatures to the persisted store.
@@ -111,12 +95,12 @@ def write_signature_store(sigs: DataFrame, store_dir: str,
          .write.mode("append").partitionBy("pk")
          .parquet(store_dir + "/buckets"))
         return
-    _dynamic_overwrite(sigs.withColumn("epoch", F.lit(epoch)),
-                       store_dir + "/sigs", "epoch")
-    _dynamic_overwrite(
-        _bucket_projection(sigs, "doc_id").withColumn("epoch",
-                                                      F.lit(epoch)),
-        store_dir + "/buckets", "pk", "epoch")
+    (sigs.withColumn("epoch", F.lit(epoch))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("epoch").parquet(store_dir + "/sigs"))
+    (_bucket_projection(sigs, "doc_id").withColumn("epoch", F.lit(epoch))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("pk", "epoch").parquet(store_dir + "/buckets"))
 
 
 def read_signature_store(spark: SparkSession, store_dir: str,

@@ -35,15 +35,15 @@ Scale: one mapInPandas fan-out projection, zero shuffle.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
+from ocr_platform_spark.extract.tagscan import (augment_pages, collect,
+                                                first_wins, inject_after,
+                                                map_pages)
 
 MICRO_DOCS = 300
 
@@ -104,26 +104,7 @@ def micro_block(url: str) -> str:
 
 
 def augment_html_micro(url: str, html: bytes | None) -> bytes | None:
-    if html is None:
-        return None
-    text = bytes(html).decode("utf-8", "replace")
-    if "<body>" not in text:
-        return html
-    return text.replace("<body>", "<body>" + micro_block(url), 1) \
-        .encode("utf-8")
-
-
-def augment_micro(pages: DataFrame) -> DataFrame:
-    cols = pages.columns
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["html"] = [augment_html_micro(u, h)
-                           for u, h in zip(pdf["url"], pdf["html"])]
-            yield pdf
-
-    return pages.mapInPandas(gen, schema=pages.schema).select(cols)
+    return inject_after(html, "<body>", micro_block(url))
 
 
 # --- collection state machine (production side) ----------------------------
@@ -203,7 +184,8 @@ def extract_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently written collector."""
     from ocr_platform_spark.sources.pages import pages_df
 
-    return page_microdata(augment_micro(pages_df(spark, MICRO_DOCS)))
+    return page_microdata(augment_pages(pages_df(spark, MICRO_DOCS),
+                                        augment_html_micro))
 
 
 

@@ -12,7 +12,7 @@ crawl HTML instead of a provider API.
 
 The synthetic pages carry no natural head metadata (datagen.py:100
 emits a bare ``<title>``), so — the ta_pii_scrub augmentation pattern
-(text_analysis.py:449) — ``augment_meta`` injects a deterministic
+(text_analysis.py:449) — ``augment_html`` injects a deterministic
 md5-menu meta block after ``<head>``: PRESENCE, attribute ORDER,
 quoting style, tag-name CASE and self-closing form all vary per url,
 so a parser handling only one canonical shape fails the oracle. Pages
@@ -39,15 +39,15 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
+from ocr_platform_spark.extract.tagscan import (augment_pages, collect,
+                                                first_wins, inject_after,
+                                                map_pages)
 
 META_DOCS = 300
 
@@ -87,29 +87,8 @@ def meta_block(url: str) -> str:
 
 
 def augment_html(url: str, html: bytes | None) -> bytes | None:
-    """Inject the block right after ``<head>``; payloads without a head
-    (empty/garbage rows) are passed through untouched so the error
-    envelope stays live downstream."""
-    if html is None:
-        return None
-    text = bytes(html).decode("utf-8", "replace")
-    if "<head>" not in text:
-        return html
-    return text.replace("<head>", "<head>" + meta_block(url), 1) \
-        .encode("utf-8")
-
-
-def augment_meta(pages: DataFrame) -> DataFrame:
-    cols = pages.columns
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["html"] = [augment_html(u, h)
-                           for u, h in zip(pdf["url"], pdf["html"])]
-            yield pdf
-
-    return pages.mapInPandas(gen, schema=pages.schema).select(cols)
+    """The page with its metadata block right after ``<head>``."""
+    return inject_after(html, "<head>", meta_block(url))
 
 
 META_SCHEMA = StructType([
@@ -223,7 +202,8 @@ def extract_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-parses the same augmented pages with stdlib html.parser."""
     from ocr_platform_spark.sources.pages import pages_df
 
-    return page_metadata(augment_meta(pages_df(spark, META_DOCS)))
+    return page_metadata(augment_pages(pages_df(spark, META_DOCS),
+                                       augment_html))
 
 
 def cx_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

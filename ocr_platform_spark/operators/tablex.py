@@ -9,7 +9,7 @@ this is the inverse operation at crawl scale — recovering the records
 from the rendered markup.
 
 The synthetic pages carry no tables, so — the pagemeta/ta_pii_scrub
-augmentation pattern — ``augment_tables`` injects a deterministic
+augmentation pattern — ``augment_html_tables`` injects a deterministic
 md5-menu table right after ``<body>``: row/column counts, header rows
 (plain or ``<thead>``-wrapped), OMITTED ``</td>``/``</tr>`` close tags
 (legal HTML the spec resolves by implied closes), tag-name case,
@@ -49,14 +49,13 @@ extraction stage's Arrow batches at any corpus size.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
 
-from ocr_platform_spark.extract.tagscan import collect, map_pages
+from ocr_platform_spark.extract.tagscan import (augment_pages, collect,
+                                                inject_after, map_pages)
 
 TABLE_DOCS = 300
 
@@ -132,26 +131,7 @@ def table_block(url: str) -> str:
 
 
 def augment_html_tables(url: str, html: bytes | None) -> bytes | None:
-    if html is None:
-        return None
-    text = bytes(html).decode("utf-8", "replace")
-    if "<body>" not in text:
-        return html
-    return text.replace("<body>", "<body>" + table_block(url), 1) \
-        .encode("utf-8")
-
-
-def augment_tables(pages: DataFrame) -> DataFrame:
-    cols = pages.columns
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["html"] = [augment_html_tables(u, h)
-                           for u, h in zip(pdf["url"], pdf["html"])]
-            yield pdf
-
-    return pages.mapInPandas(gen, schema=pages.schema).select(cols)
+    return inject_after(html, "<body>", table_block(url))
 
 
 # --- the collection state machine (production side) -----------------------
@@ -255,7 +235,8 @@ def extract_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     an independently written collector."""
     from ocr_platform_spark.sources.pages import pages_df
 
-    return page_tables(augment_tables(pages_df(spark, TABLE_DOCS)))
+    return page_tables(augment_pages(pages_df(spark, TABLE_DOCS),
+                                     augment_html_tables))
 
 
 from ocr_platform_spark.operators.registry import \

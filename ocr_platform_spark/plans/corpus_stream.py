@@ -76,8 +76,6 @@ def curate_extracted(extracted: DataFrame) -> DataFrame:
 
 def _process_batch(batch: DataFrame, epoch_id: int, corpus_dir: str,
                    store_dir: str) -> None:
-    from ocr_platform_spark.operators.incremental import _dynamic_overwrite
-
     spark = batch.sparkSession
     batch = batch.persist()
     gated = curate_extracted(batch).persist()
@@ -91,12 +89,15 @@ def _process_batch(batch: DataFrame, epoch_id: int, corpus_dir: str,
                    "lang_det", "n_tok", "fp")
            .withColumn("ingest_epoch", F.lit(int(epoch_id)))
            .persist())
-    _dynamic_overwrite(out, corpus_dir + "/docs", "ingest_epoch")
+    (out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("ingest_epoch").parquet(corpus_dir + "/docs"))
     counters = spark.createDataFrame(
         [(int(epoch_id), int(batch.count()), int(gated.count()),
           int(out.count()))],
         "ingest_epoch long, extracted long, gated long, ingested long")
-    _dynamic_overwrite(counters, corpus_dir + "/manifest", "ingest_epoch")
+    (counters.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("ingest_epoch").parquet(corpus_dir + "/manifest"))
     out.unpersist()
     gated.unpersist()
     batch.unpersist()

@@ -59,8 +59,7 @@ def run_linkgraph_job(spark: SparkSession, warc_glob: str,
 
 
 def run_links_stream(spark: SparkSession, warc_dir: str, output_dir: str,
-                     checkpoint_dir: str, available_now: bool = True,
-                     max_files_per_trigger: int | None = None):
+                     checkpoint_dir: str):
     """Incremental variant of the anchor pass: new crawl files → the SAME
     parse + link kernels → checkpointed parquet append of anchor rows.
     Exactly-once per file via the file-source log (the contract of
@@ -69,17 +68,10 @@ def run_links_stream(spark: SparkSession, warc_dir: str, output_dir: str,
     whole-graph fixpoint, so the iterate stays batch (the standard
     lambda-architecture split for graph metrics over a growing crawl)."""
     from ocr_platform_spark.sources.warc import read_warc_stream
+    from ocr_platform_spark.streaming.ingest import drain
 
-    pages = read_warc_stream(spark, warc_dir + "/*.warc.gz",
-                             max_files_per_trigger)
+    pages = read_warc_stream(spark, warc_dir + "/*.warc.gz")
     clean = pages.filter(F.col("parse_error").isNull()
                          & F.col("html").isNotNull())
-    links = links_df(clean.select("url", "html"))
-    writer = (links.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(links_df(clean.select("url", "html")), output_dir,
+                 checkpoint_dir)

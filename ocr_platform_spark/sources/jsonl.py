@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from ocr_platform_spark.sources.binfile import read_binary_files
+
 FIXTURE_DIR = (pathlib.Path(__file__).resolve().parents[2]
                / "tests" / "fixtures" / "jsonl")
 
@@ -92,17 +94,9 @@ def parse_jsonl_bytes(name: str, data: bytes) -> list[tuple]:
             for i, ln in enumerate(lines)]
 
 
-def read_jsonl(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Glob of .jsonl shard files → one row per line, never-drop."""
-    path = pathlib.Path(path_glob)
-    reader = spark.read.format("binaryFile")
-    if any(ch in path.name for ch in "*?["):
-        reader = reader.option("pathGlobFilter", path.name)
-        src = str(path.parent)
-    else:
-        src = path_glob
-    files = reader.load(src).select("path", "content")
-
+def _jsonl_rows(files: DataFrame) -> DataFrame:
+    """(path, content) DataFrame → one row per line. One shared transform
+    for the batch and streaming readers (the warc._warc_records shape)."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple] = []
@@ -115,44 +109,19 @@ def read_jsonl(spark: SparkSession, path_glob: str) -> DataFrame:
     return files.mapInPandas(gen, schema=JSONL_SCHEMA)
 
 
-def read_jsonl_stream(spark: SparkSession, path_glob: str,
-                      max_files_per_trigger: int | None = None
-                      ) -> DataFrame:
+def read_jsonl(spark: SparkSession, path_glob: str) -> DataFrame:
+    """Glob of .jsonl shard files → one row per line, never-drop."""
+    return _jsonl_rows(read_binary_files(spark, path_glob))
+
+
+def read_jsonl_stream(spark: SparkSession, path_glob: str) -> DataFrame:
     """Streaming variant: a binaryFile file-source stream over a growing
     shard directory — new .jsonl files are discovered per micro-batch
     and parsed by the SAME kernel, so streamed rows are row-identical to
     a batch ``read_jsonl`` over the same files (the read_warc_stream
-    contract: explicit source schema, maxFilesPerTrigger bounds batch
-    size, the checkpoint's file log gives exactly-once per file)."""
-    from pyspark.sql.types import BinaryType, TimestampType
-
-    binfile_schema = StructType([
-        StructField("path", StringType(), False),
-        StructField("modificationTime", TimestampType(), False),
-        StructField("length", LongType(), False),
-        StructField("content", BinaryType(), True),
-    ])
-    path = pathlib.Path(path_glob)
-    reader = spark.readStream.format("binaryFile").schema(binfile_schema)
-    if any(ch in path.name for ch in "*?["):
-        reader = reader.option("pathGlobFilter", path.name)
-        src = str(path.parent)
-    else:
-        src = path_glob
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(src).select("path", "content")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                rows.extend(parse_jsonl_bytes(name, bytes(content)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JSONL_SCHEMA])
-
-    return files.mapInPandas(gen, schema=JSONL_SCHEMA)
+    contract: no ``maxFilesPerTrigger``, so one drain takes every new
+    file; the checkpoint's file log gives exactly-once per file)."""
+    return _jsonl_rows(read_binary_files(spark, path_glob, stream=True))
 
 
 def write_jsonl(docs: DataFrame, output_dir: str,

@@ -23,9 +23,6 @@ it saves for a few thousand bucket directories.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,25 +41,18 @@ def manifest_path(output_path: str) -> str:
     return output_path.rstrip("/") + "_manifest"
 
 
-@contextmanager
-def _session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
-    """Set one session conf for the body of a ``with``, then restore it."""
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:
     """The partitioned output, listed on the driver. Spark's default
     discovery threshold (32 paths) would start a distributed listing job
-    for any output with more bucket directories than that."""
-    with _session_conf(
-            spark, "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            str(DRIVER_LISTING_MAX_PATHS)):
+    for any output with more bucket directories than that; the session's
+    own threshold is restored once the listing is done."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(DRIVER_LISTING_MAX_PATHS))
+    try:
         return spark.read.parquet(output_path)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def build_manifest(extracted: DataFrame, run_id: str) -> DataFrame:
@@ -123,10 +113,9 @@ def write_with_manifest(extracted: DataFrame, output_path: str,
         extracted.writeTo(table).overwritePartitions()
         done = spark.read.table(table)
     else:
-        with _session_conf(spark, "spark.sql.sources.partitionOverwriteMode",
-                           "dynamic"):
-            (extracted.write.mode("overwrite").partitionBy("bucket")
-             .parquet(output_path))
+        (extracted.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(output_path))
         # manifest derives from what is now durably on disk (not from the
         # pre-write plan — a lost task would otherwise go unnoticed)
         done = read_output(spark, output_path)

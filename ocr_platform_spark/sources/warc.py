@@ -10,10 +10,10 @@ the crawl container itself is the source.
 
 Scale design (100 TB): Common Crawl stores EACH record as its own gzip
 member inside ~1 GiB files, and the corpus ships as ~100k such files per
-crawl — the format's own sharding IS the partitioning. ``read_warc`` uses
-``spark.read.format("binaryFile")`` (one row per file, files packed into
-tasks by size), so a 100 TB crawl becomes ~100k well-sized tasks with zero
-skew and no shuffle; parsing streams member-by-member, so peak memory per
+crawl — the format's own sharding IS the partitioning. ``read_warc`` reads
+``binaryFile`` through sources/binfile.py (one row per file, files packed
+into tasks by size), so a 100 TB crawl becomes ~100k well-sized tasks with
+zero skew and no shuffle; parsing streams member-by-member, so peak memory per
 task is one compressed file + ONE decompressed record, never the whole
 decompressed file.
 
@@ -33,6 +33,8 @@ import zlib
 from collections.abc import Iterator
 from datetime import datetime, timezone
 from pathlib import Path
+
+from ocr_platform_spark.sources.binfile import read_binary_files
 
 FIXTURE_DIR = (Path(__file__).resolve().parents[2]
                / "tests" / "fixtures" / "warc")
@@ -337,67 +339,34 @@ def _warc_records(raw, include_conversion: bool = False):
     return raw.mapInPandas(part, schema=schema)
 
 
-def _split_glob(path_glob: str) -> tuple[str, str | None]:
-    # binaryFile resolves a trailing glob via pathGlobFilter, not the path
-    base, _, leaf = str(path_glob).rpartition("/")
-    return (base, leaf) if "*" in leaf else (str(path_glob), None)
-
-
 def read_warc(spark, path_glob: str):
     """Directory/glob of WARC files → DataFrame of parsed records.
 
-    ``binaryFile`` yields one row per file and packs files into tasks by
-    size (``spark.sql.files.maxPartitionBytes``) — at CC scale each ~1 GiB
-    file is its own task, so parallelism comes free from the format's
-    sharding and there is NO shuffle anywhere in ingest."""
-    path, leaf = _split_glob(path_glob)
-    reader = spark.read.format("binaryFile")
-    if leaf:
-        reader = reader.option("pathGlobFilter", leaf)
-    return _warc_records(reader.load(path).select("path", "content"))
+    ``binaryFile`` (sources/binfile.py) yields one row per file and packs
+    files into tasks by size (``spark.sql.files.maxPartitionBytes``) — at
+    CC scale each ~1 GiB file is its own task, so parallelism comes free
+    from the format's sharding and there is NO shuffle anywhere in
+    ingest."""
+    return _warc_records(read_binary_files(spark, path_glob))
 
 
 def read_wet(spark, path_glob: str):
     """Directory/glob of WET files → DataFrame of conversion records
     (url, warc_ts, html=text bytes, content_type='text/plain'). Same
     binaryFile sharding/no-shuffle contract as read_warc."""
-    path, leaf = _split_glob(path_glob)
-    reader = spark.read.format("binaryFile")
-    if leaf:
-        reader = reader.option("pathGlobFilter", leaf)
-    return _warc_records(reader.load(path).select("path", "content"),
+    return _warc_records(read_binary_files(spark, path_glob),
                          include_conversion=True)
 
 
-def read_warc_stream(spark, path_glob: str,
-                     max_files_per_trigger: int | None = None):
+def read_warc_stream(spark, path_glob: str):
     """Streaming variant: a binaryFile file-source stream over a growing
     crawl directory — new WARC files are discovered per micro-batch and
     parsed by the SAME kernel, so streamed rows are byte-identical to a
-    batch ``read_warc`` over the same files. ``maxFilesPerTrigger`` bounds
-    micro-batch size (→ bounded executor memory); the checkpoint's
-    file-source log gives exactly-once file processing across restarts,
-    same contract as streaming/ingest.py."""
-    from pyspark.sql.types import (
-        BinaryType, LongType, StringType, StructField, StructType,
-        TimestampType,
-    )
-
-    # the binaryFile source's fixed schema — streaming sources require it
-    # stated explicitly (no inference pass over a possibly-empty dir)
-    binfile_schema = StructType([
-        StructField("path", StringType(), False),
-        StructField("modificationTime", TimestampType(), False),
-        StructField("length", LongType(), False),
-        StructField("content", BinaryType(), True),
-    ])
-    path, leaf = _split_glob(path_glob)
-    reader = spark.readStream.format("binaryFile").schema(binfile_schema)
-    if leaf:
-        reader = reader.option("pathGlobFilter", leaf)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _warc_records(reader.load(path).select("path", "content"))
+    batch ``read_warc`` over the same files. No ``maxFilesPerTrigger`` is
+    set, so one drain takes every new file in one micro-batch; the
+    checkpoint's file-source log gives exactly-once file processing
+    across restarts, same contract as streaming/ingest.py."""
+    return _warc_records(read_binary_files(spark, path_glob, stream=True))
 
 
 def warc_pages(df, with_transport_charset: bool = False):

@@ -45,7 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_platform_spark.streaming.windowed import EVENTS_SCHEMA
+from ocr_platform_spark.streaming.ingest import drain
+from ocr_platform_spark.streaming.windowed import WATERMARK, events_stream
 
 ATTR_WINDOW = "24 hours"
 ATTR_WINDOW_US = 24 * 3600 * 1_000_000
@@ -137,17 +138,14 @@ WHERE c.event_type = 'click'
 """
 
 
-def stream_click_pairs(spark: SparkSession, input_dir: str,
-                       watermark: str = "2 hours") -> DataFrame:
+def stream_click_pairs(spark: SparkSession, input_dir: str) -> DataFrame:
     """Stream-stream twin: two watermarked reads of the same drop
     directory, inner-joined with the identical range predicate. The
     range constraint lets Spark evict a buffered view once the
     watermark passes view_ts + WINDOW."""
     def side(event_type: str, prefix: str) -> DataFrame:
-        s = (spark.readStream.schema(EVENTS_SCHEMA)
-             .format("parquet").load(input_dir))
-        return _typed(s, event_type, prefix).withWatermark(
-            f"{prefix}_ts", watermark)
+        return _typed(events_stream(spark, input_dir), event_type,
+                      prefix).withWatermark(f"{prefix}_ts", WATERMARK)
 
     clicks = side("click", "click")
     views = side("view", "imp").withColumnRenamed("user_id",
@@ -165,14 +163,9 @@ def stream_click_pairs(spark: SparkSession, input_dir: str,
 
 
 def run_click_pairs_stream(spark: SparkSession, input_dir: str,
-                           output_dir: str, checkpoint_dir: str,
-                           watermark: str = "2 hours"):
-    pairs = stream_click_pairs(spark, input_dir, watermark)
-    return (pairs.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True).start())
+                           output_dir: str, checkpoint_dir: str):
+    return drain(stream_click_pairs(spark, input_dir), output_dir,
+                 checkpoint_dir)
 
 
 QUERIES: dict = {

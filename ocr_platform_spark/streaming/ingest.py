@@ -9,8 +9,10 @@ over the pages table directory → the identical ``mapInPandas`` extraction
 kernel → an append sink with checkpointing.
 
 Why this shape at 10^12-doc scale:
-- ``readStream`` file source lists only NEW files per micro-batch
-  (``maxFilesPerTrigger`` bounds batch size → bounded executor memory);
+- ``readStream`` file source lists only NEW files per micro-batch. No
+  ``maxFilesPerTrigger`` is set, so one drain reads every new file in a
+  single micro-batch: its size is not bounded, it is the size of the
+  drop;
 - the extraction kernel is literally ``extract_pages`` — same bucketing,
   same salt, same Arrow batches, so streamed output is byte-identical to a
   batch run over the same files (asserted in tests/test_streaming.py);
@@ -19,6 +21,9 @@ Why this shape at 10^12-doc scale:
   manifest resume (sources/manifest.py);
 - ``Trigger.AvailableNow`` drains the backlog then stops, which is how an
   incremental daily top-up runs on a real cluster (and how tests run it).
+  ``drain`` is that sink for every stream job in the package (ingest,
+  the event-time aggregates, the anchor pass); only the corpus top-up
+  (plans/corpus_stream.py) writes through its own ``foreachBatch``.
 
 The watermark/stateful-aggregation surface is intentionally absent: the
 reference has no event-time semantics (SURVEY.md §2.6) — its queue is a
@@ -29,14 +34,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ocr_platform_spark.extract.tagscan import augment_pages
 from ocr_platform_spark.plans.extract_job import extract_pages
 from ocr_platform_spark.sources.pages import PAGES_SCHEMA
 
 
+def drain(df: DataFrame, output_dir: str, checkpoint_dir: str):
+    """Drain every file the stream has not processed yet into a parquet
+    append sink, then stop; returns the StreamingQuery. Call again as new
+    files land: the checkpoint's file log makes each file exactly-once
+    across runs and restarts, like batch resume from the manifest."""
+    return (df.writeStream
+            .format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
+
+
 def extract_stream(spark: SparkSession, input_dir: str,
-                   n_buckets: int = 64,
-                   max_files_per_trigger: int | None = None,
-                   pre_gate=None) -> DataFrame:
+                   n_buckets: int = 64, pre_gate=None) -> DataFrame:
     """Streaming DataFrame of extraction results over a growing pages dir.
 
     The transform is the batch plan verbatim — ``extract_pages`` with
@@ -49,19 +67,14 @@ def extract_stream(spark: SparkSession, input_dir: str,
     plan's gate-before-extraction invariant (blocked urls never pay
     Python extraction).
     """
-    reader = (spark.readStream.schema(PAGES_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.load(input_dir)
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
     if pre_gate is not None:
         pages = pre_gate(pages)
     return extract_pages(pages, n_buckets=n_buckets, shuffle=False)
 
 
 def warc_extract_stream(spark: SparkSession, warc_dir: str,
-                        n_buckets: int = 64,
-                        max_files_per_trigger: int | None = None) -> DataFrame:
+                        n_buckets: int = 64) -> DataFrame:
     """The full incremental-crawl path in ONE streaming plan: WARC
     container files land in a directory → parse (sources/warc.py kernel)
     → clean-capture projection → the identical extraction kernel. This is
@@ -71,7 +84,7 @@ def warc_extract_stream(spark: SparkSession, warc_dir: str,
     granularity."""
     from ocr_platform_spark.sources.warc import read_warc_stream, warc_pages
 
-    records = read_warc_stream(spark, warc_dir, max_files_per_trigger)
+    records = read_warc_stream(spark, warc_dir)
     # the ingest path HAS the HTTP head in hand — thread the Content-Type
     # charset through so header-only-labeled legacy captures decode
     # correctly (extract/charset.py ranks it BOM > transport > meta); the
@@ -82,41 +95,17 @@ def warc_extract_stream(spark: SparkSession, warc_dir: str,
 
 def run_warc_ingest_stream(spark: SparkSession, warc_dir: str,
                            output_dir: str, checkpoint_dir: str,
-                           n_buckets: int = 64,
-                           available_now: bool = True):
-    """Drain all unprocessed WARC files into the extracted-pages sink
-    (parquet append; exactly-once via the checkpoint)."""
-    ext = warc_extract_stream(spark, warc_dir, n_buckets)
-    writer = (ext.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+                           n_buckets: int = 64):
+    """Drain all unprocessed WARC files into the extracted-pages sink."""
+    return drain(warc_extract_stream(spark, warc_dir, n_buckets),
+                 output_dir, checkpoint_dir)
 
 
 def run_ingest_stream(spark: SparkSession, input_dir: str, output_dir: str,
-                      checkpoint_dir: str, n_buckets: int = 64,
-                      available_now: bool = True,
-                      max_files_per_trigger: int | None = None):
-    """Run the ingest stream into a parquet append sink.
-
-    Returns the StreamingQuery. With ``available_now`` the query drains
-    every unprocessed file (exactly once, per the checkpoint's file log)
-    and stops — call repeatedly as new crawl files land; restarts resume
-    from the checkpoint exactly like batch resume from the manifest.
-    """
-    ext = extract_stream(spark, input_dir, n_buckets, max_files_per_trigger)
-    writer = (ext.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+                      checkpoint_dir: str, n_buckets: int = 64):
+    """Drain all unprocessed pages files into the extracted-pages sink."""
+    return drain(extract_stream(spark, input_dir, n_buckets),
+                 output_dir, checkpoint_dir)
 
 
 # --- structured-extraction kernels over the same file-source stream --------
@@ -129,42 +118,28 @@ def run_ingest_stream(spark: SparkSession, input_dir: str, output_dir: str,
 # daily top-up share one downstream schema with the backfill.
 
 def metadata_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    from ocr_platform_spark.operators.pagemeta import (augment_meta,
+    from ocr_platform_spark.operators.pagemeta import (augment_html,
                                                        page_metadata)
 
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    return page_metadata(augment_meta(pages))
+    return page_metadata(augment_pages(pages, augment_html))
 
 
 def tables_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    from ocr_platform_spark.operators.tablex import (augment_tables,
+    from ocr_platform_spark.operators.tablex import (augment_html_tables,
                                                      page_tables)
 
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    return page_tables(augment_tables(pages))
-
-
-def _run_kernel_stream(df: DataFrame, output_dir: str,
-                       checkpoint_dir: str, available_now: bool = True):
-    writer = (df.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return page_tables(augment_pages(pages, augment_html_tables))
 
 
 def run_metadata_stream(spark: SparkSession, input_dir: str,
-                        output_dir: str, checkpoint_dir: str,
-                        available_now: bool = True):
-    return _run_kernel_stream(metadata_stream(spark, input_dir),
-                              output_dir, checkpoint_dir, available_now)
+                        output_dir: str, checkpoint_dir: str):
+    return drain(metadata_stream(spark, input_dir), output_dir,
+                 checkpoint_dir)
 
 
 def run_tables_stream(spark: SparkSession, input_dir: str,
-                      output_dir: str, checkpoint_dir: str,
-                      available_now: bool = True):
-    return _run_kernel_stream(tables_stream(spark, input_dir),
-                              output_dir, checkpoint_dir, available_now)
+                      output_dir: str, checkpoint_dir: str):
+    return drain(tables_stream(spark, input_dir), output_dir,
+                 checkpoint_dir)

@@ -34,7 +34,8 @@ from pyspark.sql.types import (
     LongType, StructField, StructType, TimestampType,
 )
 
-from ocr_platform_spark.streaming.windowed import EVENTS_SCHEMA
+from ocr_platform_spark.streaming.ingest import drain
+from ocr_platform_spark.streaming.windowed import WATERMARK, events_stream
 
 GAP_US = 1800 * 1_000_000            # 30-minute inactivity gap
 
@@ -245,15 +246,12 @@ def _session_state_fn(key, pdf_iter, state):
                                          SESSION_SCHEMA.fields])
 
 
-def sessionize_stream(spark: SparkSession, input_dir: str,
-                      watermark: str = "2 hours") -> DataFrame:
+def sessionize_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming sessionization: same output rows as ``sessionize`` for
     every session the watermark has closed."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    events = (spark.readStream.schema(EVENTS_SCHEMA)
-              .format("parquet").load(input_dir)
-              .withWatermark("ts", watermark))
+    events = events_stream(spark, input_dir).withWatermark("ts", WATERMARK)
     return (events.groupBy("user_id")
             .applyInPandasWithState(
                 _session_state_fn, SESSION_SCHEMA, _STATE_SCHEMA,
@@ -261,14 +259,9 @@ def sessionize_stream(spark: SparkSession, input_dir: str,
 
 
 def run_session_stream(spark: SparkSession, input_dir: str, output_dir: str,
-                       checkpoint_dir: str, watermark: str = "2 hours"):
-    return (sessionize_stream(spark, input_dir, watermark)
-            .writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+                       checkpoint_dir: str):
+    return drain(sessionize_stream(spark, input_dir), output_dir,
+                 checkpoint_dir)
 
 
 QUERIES: dict = {

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ocr_platform_spark.streaming.ingest import drain
+
 EVENTS_SCHEMA = StructType([
     StructField("event_id", LongType(), True),
     StructField("ts", TimestampType(), True),
@@ -46,6 +48,9 @@ EVENTS_SCHEMA = StructType([
 ])
 
 WINDOW = "1 hour"
+# event-time lateness every stream here tolerates (windowed, sessions,
+# attribution); rows further behind the max seen ts are dropped
+WATERMARK = "2 hours"
 
 
 def windowed_event_aggregate(events: DataFrame) -> DataFrame:
@@ -126,47 +131,38 @@ GROUP BY 1, 2
 """
 
 
-def stream_windowed_aggregate(spark: SparkSession, input_dir: str,
-                              watermark: str = "2 hours") -> DataFrame:
+def events_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """File-source stream over a directory of ``events`` parquet drops."""
+    return spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
+
+
+def stream_windowed_aggregate(spark: SparkSession,
+                              input_dir: str) -> DataFrame:
     """Streaming variant: identical plan behind a watermark."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA)
-              .format("parquet").load(input_dir))
-    return windowed_event_aggregate(events.withWatermark("ts", watermark))
+    events = events_stream(spark, input_dir)
+    return windowed_event_aggregate(events.withWatermark("ts", WATERMARK))
 
 
 def run_windowed_stream(spark: SparkSession, input_dir: str,
-                        output_dir: str, checkpoint_dir: str,
-                        watermark: str = "2 hours"):
+                        output_dir: str, checkpoint_dir: str):
     """Drain available files into an append parquet sink (exactly-once via
     the checkpoint; finalized windows only). Returns the StreamingQuery."""
-    agg = stream_windowed_aggregate(spark, input_dir, watermark)
-    return (agg.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return drain(stream_windowed_aggregate(spark, input_dir), output_dir,
+                 checkpoint_dir)
 
 
-
-def stream_hopping_aggregate(spark: SparkSession, input_dir: str,
-                             watermark: str = "2 hours") -> DataFrame:
+def stream_hopping_aggregate(spark: SparkSession,
+                             input_dir: str) -> DataFrame:
     """Streaming twin of the hopping aggregate: identical plan behind a
     watermark (Spark's sliding window is stateful-streaming-native)."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA)
-              .format("parquet").load(input_dir))
-    return hopping_event_aggregate(events.withWatermark("ts", watermark))
+    events = events_stream(spark, input_dir)
+    return hopping_event_aggregate(events.withWatermark("ts", WATERMARK))
 
 
 def run_hopping_stream(spark: SparkSession, input_dir: str,
-                       output_dir: str, checkpoint_dir: str,
-                       watermark: str = "2 hours"):
-    agg = stream_hopping_aggregate(spark, input_dir, watermark)
-    return (agg.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True).start())
+                       output_dir: str, checkpoint_dir: str):
+    return drain(stream_hopping_aggregate(spark, input_dir), output_dir,
+                 checkpoint_dir)
 
 
 QUERIES: dict = {

@@ -74,7 +74,7 @@ def _drop(spark, inp, spec):
 
 
 def _drain(spark, inp, out, ckpt):
-    q = run_click_pairs_stream(spark, inp, out, ckpt, watermark="2 hours")
+    q = run_click_pairs_stream(spark, inp, out, ckpt)
     q.awaitTermination(120)
 
 

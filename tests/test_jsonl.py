@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from ocr_platform_spark.sources.jsonl import (parse_jsonl_bytes,
                                               parse_jsonl_line)
 
@@ -76,6 +78,7 @@ def test_jsonl_stream_matches_batch_and_resumes(spark, tmp_path):
 
     from ocr_platform_spark.sources.jsonl import (FIXTURE_DIR, read_jsonl,
                                                   read_jsonl_stream)
+    from ocr_platform_spark.streaming.ingest import drain
 
     inp = tmp_path / "shards"
     inp.mkdir()
@@ -83,11 +86,8 @@ def test_jsonl_stream_matches_batch_and_resumes(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run():
-        q = (read_jsonl_stream(spark, str(inp / "*.jsonl"))
-             .writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(read_jsonl_stream(spark, str(inp / "*.jsonl")), out,
+              ckpt).awaitTermination(120)
 
     shutil.copy(FIXTURE_DIR / "docs-00.jsonl", inp / "docs-00.jsonl")
     run()
@@ -100,6 +100,42 @@ def test_jsonl_stream_matches_batch_and_resumes(spark, tmp_path):
     batch = {(r["jsonl_file"], r["line_no"]): tuple(r)
              for r in read_jsonl(spark, str(inp / "*.jsonl")).collect()}
     assert got == batch and len(got) == 92
+
+
+_CRAWL = {f"crawl-0{i}.warc.gz" for i in range(3)}
+_DOCS = {f"docs-0{i}.jsonl" for i in range(3)}
+
+
+@pytest.mark.parametrize("leaf, warcs, docs", [
+    ("0*", _CRAWL, _DOCS),
+    ("0?", _CRAWL, _DOCS),
+    ("0[01]", _CRAWL - {"crawl-02.warc.gz"}, _DOCS - {"docs-02.jsonl"}),
+    # emptyfile.jsonl has no lines, so no rows name it
+    (None, _CRAWL | {"badgzip.warc.gz", "hostile.warc.gz",
+                     "legacy.warc.gz"}, _DOCS | {"hostile.jsonl"}),
+], ids=["star", "qmark", "class", "dir"])
+def test_leaf_glob_rule(spark, tmp_path, leaf, warcs, docs):
+    """One rule for every binaryFile reader: a ``*``, ``?`` or ``[`` leaf
+    filters its directory, a bare directory reads every file. The batch
+    WARC and JSONL readers and the JSONL stream select the same files."""
+    from ocr_platform_spark.sources import jsonl, warc
+    from ocr_platform_spark.streaming.ingest import drain
+
+    def glob(d, name):
+        return str(d) if leaf is None else str(d / name.format(leaf))
+
+    def names(df, col):
+        return {r[0].rsplit("/", 1)[-1]
+                for r in df.select(col).distinct().collect()}
+
+    warc_glob = glob(warc.FIXTURE_DIR, "crawl-{}.warc.gz")
+    jsonl_glob = glob(jsonl.FIXTURE_DIR, "docs-{}.jsonl")
+    assert names(warc.read_warc(spark, warc_glob), "warc_file") == warcs
+    assert names(jsonl.read_jsonl(spark, jsonl_glob), "jsonl_file") == docs
+    out = str(tmp_path / "rows")
+    drain(jsonl.read_jsonl_stream(spark, jsonl_glob), out,
+          str(tmp_path / "ckpt")).awaitTermination(120)
+    assert names(spark.read.parquet(out), "jsonl_file") == docs
 
 
 def test_write_jsonl_roundtrip_and_deterministic_shards(spark, tmp_path):

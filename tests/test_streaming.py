@@ -123,7 +123,8 @@ def test_metadata_stream_matches_batch_and_resumes(spark, tmp_path):
     import pandas as pd
 
     from ocr_platform_spark.datagen import gen_document
-    from ocr_platform_spark.operators.pagemeta import (augment_meta,
+    from ocr_platform_spark.extract.tagscan import augment_pages
+    from ocr_platform_spark.operators.pagemeta import (augment_html,
                                                        page_metadata)
     from ocr_platform_spark.sources.pages import PAGES_SCHEMA
     from ocr_platform_spark.streaming.ingest import run_metadata_stream
@@ -145,8 +146,9 @@ def test_metadata_stream_matches_batch_and_resumes(spark, tmp_path):
     got = {r["url"]: r for r in spark.read.parquet(out).collect()}
     assert len(got) == 70, "re-run must not duplicate old files"
 
-    batch = {r["url"]: r for r in page_metadata(augment_meta(
-        spark.read.schema(PAGES_SCHEMA).parquet(inp))).collect()}
+    batch = {r["url"]: r for r in page_metadata(augment_pages(
+        spark.read.schema(PAGES_SCHEMA).parquet(inp),
+        augment_html)).collect()}
     assert set(got) == set(batch)
     for url, r in got.items():
         b = batch[url]
@@ -160,7 +162,8 @@ def test_tables_stream_matches_batch(spark, tmp_path):
     import pandas as pd
 
     from ocr_platform_spark.datagen import gen_document
-    from ocr_platform_spark.operators.tablex import (augment_tables,
+    from ocr_platform_spark.extract.tagscan import augment_pages
+    from ocr_platform_spark.operators.tablex import (augment_html_tables,
                                                      page_tables)
     from ocr_platform_spark.sources.pages import PAGES_SCHEMA
     from ocr_platform_spark.streaming.ingest import run_tables_stream
@@ -178,6 +181,7 @@ def test_tables_stream_matches_batch(spark, tmp_path):
            for r in spark.read.parquet(out).collect()}
     batch = {(r["url"], r["table_idx"], r["row_idx"], r["col_idx"]):
              (r["is_header"], r["cell_text"])
-             for r in page_tables(augment_tables(
-                 spark.read.schema(PAGES_SCHEMA).parquet(inp))).collect()}
+             for r in page_tables(augment_pages(
+                 spark.read.schema(PAGES_SCHEMA).parquet(inp),
+                 augment_html_tables)).collect()}
     assert got == batch and got

@@ -43,7 +43,7 @@ def _drop(spark, inp, spec):
 
 
 def _drain(run_fn, spark, inp, out, ckpt):
-    q = run_fn(spark, inp, out, ckpt, watermark="2 hours")
+    q = run_fn(spark, inp, out, ckpt)
     q.awaitTermination(120)
 
 
