@@ -4,12 +4,14 @@ Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
 Scale design notes (the part that must survive 10^12 docs):
 - exact dedup is a hash-groupBy on a canonical fingerprint — one shuffle on
   the md5 key, map-side partial agg for the counts;
-- MinHash runs ENTIRELY JVM-side: shingle explode → per-permutation
-  ``min(md5-derived seeded hash)`` hash-agg → LSH banding → self-join on
-  (band, bucket). No Python in the hot path; the only O(n²) work happens
-  inside LSH buckets (candidates), never across the corpus; the seeded
-  hash family is md5-based so DuckDB reproduces every stage bit-for-bit
-  (full value-hash oracles, not just recall tests);
+- MinHash is ONE Arrow-batched pass per document (tokens → md5 token
+  hashes → 3-gram shingle hashes → 16 universal-hash minhashes, numpy over
+  int64) that also keeps the distinct shingle-hash set; LSH banding, the
+  (band, bucket) self-join and the exact-Jaccard verification then run
+  JVM-side over that one relation. The only O(n²) work happens inside LSH
+  buckets (candidates), never across the corpus; the seeded hash family
+  is md5-based so DuckDB reproduces every stage bit-for-bit (full
+  value-hash oracles, not just recall tests);
 - brute-force n-gram Jaccard (quadratic) exists as the small-scale oracle
   that the probabilistic paths are verified against in pytest;
 - SimHash signatures are one Arrow-batched pandas UDF; pair generation is
@@ -18,10 +20,15 @@ Scale design notes (the part that must survive 10^12 docs):
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
@@ -133,65 +140,92 @@ WHERE inter * 2 >= sa.n_sh + sb.n_sh - inter
 """
 
 
-# --- MinHash + LSH (the scale path; all JVM, DuckDB-oracled) --------------
+# --- MinHash + LSH (the scale path; DuckDB-oracled) -----------------------
 # The base hash is md5-derived on BOTH engines: a 60-bit integer from the
-# md5 hex prefix — Spark `conv(substring(md5(x),1,15),16,10)` (all-JVM
-# builtins, no Python) ≡ DuckDB `CAST(concat('0x', substr(md5(x),1,15))
-# AS BIGINT)` — which is what lets the whole LSH path be value-hash
-# verified by the driver, not just recall-tested in pytest. (xxhash64
-# would be marginally cheaper per byte but exists only in Spark.)
+# md5 hex prefix — Python ``int(md5(tok).hexdigest()[:15], 16)`` in the
+# Arrow kernel ≡ DuckDB `CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)`
+# — which is what lets the whole LSH path be value-hash verified by the
+# driver, not just recall-tested in pytest.
 #
 # MinHash works entirely in a 31-bit integer field: md5 hashes each TOKEN
 # once (the only byte-level hashing), shingle identity is a modular
 # combination of its 3 token hashes, and the 16 permutations are the
-# classic universal-hash family perm_k(h) = (a_k*h + b_k) mod p. This
-# keeps the hot path free of per-shingle string building + hashing
-# (measured 13s -> 1.8s for the signature stage at sf0.1) while every
-# value stays exactly reproducible in DuckDB. p = 2^31-1 bounds all
-# products below 2^62: no 64-bit overflow in either engine (DuckDB errors
-# on BIGINT overflow, Java would wrap silently — both stay exact).
+# classic universal-hash family perm_k(h) = (a_k*h + b_k) mod p. Shingles
+# never exist as strings, and every value stays exactly reproducible in
+# DuckDB. p = 2^31-1 bounds all products below 2^62: numpy int64 and
+# DuckDB BIGINT (which errors on overflow) both stay exact.
 MINHASH_P = (1 << 31) - 1
 _SHINGLE_COEF = (1000003, 999983, 31)   # order-sensitivity of the 3-gram
 
 
 def _perm_consts(k: int) -> tuple[int, int]:
     """(a_k, b_k) derived from md5(k) driver-side — deterministic literals
-    in both the Spark plan and the SQL oracle."""
-    import hashlib
-
+    in both the kernel and the SQL oracle."""
     d = hashlib.md5(f"perm:{k}".encode()).digest()
     a = int.from_bytes(d[:4], "big") % (MINHASH_P - 1) + 1   # 1..p-1
     b = int.from_bytes(d[4:8], "big") % MINHASH_P
     return a, b
 
 
-def _hashed_shingles(docs: DataFrame) -> DataFrame:
-    """doc_id → exploded DISTINCT 3-gram shingle hashes (31-bit field).
-    One md5 per token; shingles never exist as strings."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    th = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 15),
-                         16, 10).cast("long") % MINHASH_P)
+# Spark's tokenization, reproduced exactly: `trim` strips U+0020 only, and
+# `split(.., '\s+')` is Java's \s, i.e. [ \t\n\x0b\f\r] (no Unicode
+# spaces); re.split keeps a leading empty token just as Spark's split does.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _minhash_batches(batches):
+    """``(doc_id, text)`` Arrow batches → ``(doc_id, mh0.., sh)``: the
+    distinct 3-gram shingle hashes ``sh`` and their MINHASH_PERMS minhashes,
+    one numpy pass per row. Null texts and texts of fewer than 3 tokens
+    emit no row. Token hashes are memoised per batch."""
+    p = MINHASH_P
     c1, c2, c3 = _SHINGLE_COEF
-    arr = F.col("th")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.size(arr) - 2),
-        lambda i: (F.element_at(arr, i) * c1 % MINHASH_P
-                   + F.element_at(arr, i + 1) * c2 % MINHASH_P
-                   + F.element_at(arr, i + 2) * c3 % MINHASH_P) % MINHASH_P)
-    return (docs.filter(F.size(toks) >= 3)
-            .select("doc_id", th.alias("th"))
-            .select("doc_id", F.explode(F.array_distinct(sh)).alias("hmod")))
+    a, b = np.array([_perm_consts(k) for k in range(MINHASH_PERMS)],
+                    dtype=np.int64).T
+    for batch in batches:
+        memo: dict[str, int] = {}
+
+        def tok_hash(t: str) -> int:
+            h = memo.get(t)
+            if h is None:
+                h = memo[t] = int(hashlib.md5(
+                    t.encode("utf-8")).hexdigest()[:15], 16) % p
+            return h
+
+        keep, mhs, shs = [], [], []
+        for i, text in enumerate(batch.column(1).to_pylist()):
+            if text is None:
+                continue
+            toks = _JAVA_WS.split(text.strip(" "))
+            if len(toks) < 3:
+                continue
+            h = np.fromiter(map(tok_hash, toks), np.int64, len(toks))
+            sh = np.unique((h[:-2] * c1 % p + h[1:-1] * c2 % p
+                            + h[2:] * c3 % p) % p)
+            keep.append(i)
+            mhs.append(((sh[:, None] * a + b) % p).min(axis=0))
+            shs.append(sh)
+        if not keep:
+            continue
+        mh = np.vstack(mhs)
+        offsets = np.zeros(len(shs) + 1, dtype=np.int32)
+        np.cumsum([len(s) for s in shs], out=offsets[1:])
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0).take(pa.array(keep)),
+             *(pa.array(mh[:, k]) for k in range(MINHASH_PERMS)),
+             pa.ListArray.from_arrays(offsets, np.concatenate(shs))],
+            ["doc_id", *(f"mh{k}" for k in range(MINHASH_PERMS)), "sh"])
 
 
-def _minhash_aggs() -> list[F.Column]:
-    out = []
-    for k in range(MINHASH_PERMS):
-        a, b = _perm_consts(k)
-        out.append(F.min((F.col("hmod") * a + b) % MINHASH_P)
-                   .alias(f"mh{k}"))
-    return out
+def _minhash_kernel(docs: DataFrame) -> DataFrame:
+    """doc_id → mh0..mh{PERMS-1} (long) and sh (array<long>) in one Arrow
+    pass over ``(doc_id, text)``; doc_id keeps the input's type and is a
+    key (one row per doc)."""
+    schema = StructType(
+        [docs.schema["doc_id"]]
+        + [StructField(f"mh{k}", LongType()) for k in range(MINHASH_PERMS)]
+        + [StructField("sh", ArrayType(LongType()))])
+    return docs.select("doc_id", "text").mapInArrow(_minhash_batches, schema)
 
 
 def _band_bucket_array() -> F.Column:
@@ -206,20 +240,8 @@ def _band_bucket_array() -> F.Column:
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id → MINHASH_PERMS minhash columns (universal-hash permutations
-    over the hashed-shingle field).
-
-    Deliberately the EXPLODE + groupBy-min form, not a per-doc
-    ``array_min(transform(...))`` projection. The projection form looks
-    cheaper (no shuffle), but chained projections offer no barrier:
-    Catalyst collapses them, inlining the token-hash array into every
-    ``element_at`` of the shingle lambda — re-evaluating the full
-    per-token md5 array once per element, O(tokens²) md5 calls per doc,
-    all in interpreted higher-order-function eval. Measured: minutes-long
-    stages on ~1500-token extracted pages, vs 34 s for the explode at
-    120M shingles / 100k docs. ``explode`` is a Generator, which
-    CollapseProject cannot cross — the same guarantee `_shingles` relies
-    on — so the exchange buys a safe evaluation shape."""
-    return _hashed_shingles(docs).groupBy("doc_id").agg(*_minhash_aggs())
+    over the hashed-shingle field), from the one Arrow MinHash pass."""
+    return _minhash_kernel(docs).drop("sh")
 
 
 def minhash_pairs(docs: DataFrame) -> DataFrame:
@@ -230,52 +252,31 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     Candidate pairs via LSH banding, then exact-Jaccard verification of
     ONLY the candidates (bucket-join → verify; never all-pairs).
 
-    Physical shape: the shingle explosion (~10x the corpus) is NEVER
-    persisted — it streams once into the signature hash-agg (map-side
-    partials). What IS persisted is ~1000x smaller: the SIGNATURES
-    (doc_id + 16 longs; the banding self-join would otherwise recompute
-    the explosion once per join side) and the candidate pair list (reused
-    by the verification join and the shingle-recompute scope). At 10^12
-    docs the production shape materializes signatures as a table;
-    MEMORY_AND_DISK is the local-mode analogue. Verification RECOMPUTES
-    shingles just for docs appearing in a candidate pair (left-semi scoped
-    scan) instead of caching the 10x explosion. Banding is a single
-    projection + posexplode (one pass over signatures instead of
-    MINHASH_BANDS unioned scans)."""
-    sigs = scoped_persist("dedup.minhash_pairs.sigs",
-                          minhash_signatures(docs))
+    Physical shape: one persisted relation, the Arrow pass's output
+    (doc_id, 16 minhashes, and the distinct shingle hashes — 8 bytes per
+    shingle, about the size of the text it came from). Banding, the
+    candidate self-join and verification all read it; the text is read
+    once. Verification joins each candidate pair to both sides' shingle
+    arrays and intersects them in place, so no shingle is ever exploded
+    into rows."""
+    sigs = scoped_persist("dedup.minhash_pairs.sigs", _minhash_kernel(docs))
     banded = sigs.select(
         "doc_id", F.posexplode(_band_bucket_array()).alias("band", "bucket"))
     a = banded.alias("a")
     b = banded.alias("b")
-    cand = scoped_persist("dedup.minhash_pairs.cand", (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("a_id"),
-                F.col("b.doc_id").alias("b_id"))
-        .distinct()))
-    # recompute hashed shingles for candidate docs only, then exact-verify
-    # (Jaccard over the hashed-shingle sets — identical in the SQL oracle)
-    cand_docs = (cand.select(F.col("a_id").alias("doc_id"))
-                 .union(cand.select(F.col("b_id").alias("doc_id")))
-                 .distinct())
-    # candidate-scoped shingles feed three consumers (sizes + both join
-    # sides); without a persist each re-scans the full documents table for
-    # the semi-join. Bounded by the candidate count — at 10^12 docs this
-    # is the (tiny) verify working set, not the 10x corpus explosion.
-    sh = scoped_persist(
-        "dedup.minhash_pairs.shingles",
-        _hashed_shingles(docs.join(cand_docs, "doc_id", "left_semi")))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = sh.select(F.col("doc_id").alias("a_id"), "hmod")
-    sb = sh.select(F.col("doc_id").alias("b_id"), "hmod")
-    inter = (cand.join(sa, "a_id").join(sb, ["b_id", "hmod"])
-             .groupBy("a_id", "b_id").agg(F.count("*").alias("inter")))
-    za = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    return (inter.join(za, "a_id").join(zb, "b_id")
-            .withColumn("uni", F.col("na") + F.col("nb") - F.col("inter"))
+    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.bucket") == F.col("b.bucket"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("a_id"),
+                    F.col("b.doc_id").alias("b_id"))
+            .distinct())
+    sa = sigs.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sa"))
+    sb = sigs.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sb"))
+    inter = F.size(F.array_intersect("sa", "sb")).cast("long")
+    return (cand.join(sa, "a_id").join(sb, "b_id")
+            .withColumn("inter", inter)
+            .withColumn("uni", (F.size("sa") + F.size("sb")).cast("long")
+                        - F.col("inter"))
             .filter(F.col("inter") * 2 >= F.col("uni"))
             .select("a_id", "b_id", "inter", "uni"))
 
@@ -382,10 +383,6 @@ def simhash64(text: str, _digest_cache: dict | None = None) -> int:
     per batch (corpora repeat tokens heavily — the md5-per-token loop was
     the hot cost of dd_simhash). Identity unaffected: the cache only
     memoizes a pure function."""
-    import hashlib
-
-    import numpy as np
-
     if not text:
         return 0
     toks = text.lower().split()

@@ -39,8 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators.dedup import (
-    MINHASH_BANDS, MINHASH_PERMS, _band_bucket_array, _minhash_pair_ctes,
-    minhash_signatures)
+    MINHASH_PERMS, _band_bucket_array, _minhash_pair_ctes, minhash_signatures)
 from ocr_platform_spark.operators.tables import load
 
 # matches*2 >= PERMS  <=>  estimated Jaccard >= 0.5 (same threshold as the
@@ -214,8 +213,8 @@ def incremental_ingest(spark: SparkSession, new_docs: DataFrame,
     except Exception:   # first batch: nothing to dedup against
         write_signature_store(sigs, store_dir, epoch)
         return new_docs
-    # the bucket projection is consumed twice (pk set + band-join); the
-    # signature agg above it is the expensive part — persist it
+    # the pk set, the band-join, the estimator and the store append all
+    # read sigs — persist it so the Arrow MinHash pass runs once
     sigs = sigs.persist()
     dropped = incremental_dups_store(spark, sigs, store_dir, epoch).select(
         F.col("new_id").alias("doc_id")).distinct()

@@ -130,8 +130,7 @@ def _warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = read_warc(spark, str(FIXTURE_DIR / "*.warc.gz"))
     return df.select(
-        F.element_at(F.split("warc_file", "/"), -1).alias("warc_file"),
-        "record_index", "url",
+        "warc_file", "record_index", "url",
         F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_iso"),
         F.sha2("html", 256).alias("html_sha256"),
         F.length("html").cast("int").alias("n_bytes"),

@@ -20,8 +20,10 @@ the north rule fixes (url, warc_ts, html, text, lang):
                            with ta_gopher_quality)
       → exact dedup       (canonical-fingerprint keep-first, preferring
                            non-mirror hosts)
-      → near-dup removal  (MinHash-LSH verified pairs via
-                           operators.dedup.minhash_pairs, url as doc_id)
+      → near-dup removal  (one Arrow pass of MinHash signatures and
+                           shingle sets, LSH banding, exact-Jaccard
+                           verification: operators.dedup.minhash_pairs,
+                           url as doc_id)
       → sequence packing  (shard by url-hash, running token offsets into
                            fixed 256-token training sequences)
 
@@ -30,8 +32,9 @@ local-mode analogue of the materialized `extracted` table the 100 TB run
 writes between the kernel and curation — run_extraction_job) and every
 later stage is either map-side column math on it or a join against a
 derived keep/drop set that is orders of magnitude smaller than the
-corpus. Near-dup verification recomputes shingles only for candidate
-docs (see minhash_pairs). Nothing rescans html after extraction.
+corpus. Near-dup removal reads the text once more, in the one Arrow
+MinHash pass whose signatures and shingle sets feed banding and
+verification (see minhash_pairs). Nothing rescans html after extraction.
 
 Dedup policy: near-mirrors lose to their originals (host rank), exact
 dups keep the first (host-rank, url) — both pure functions of url so no

@@ -31,7 +31,7 @@ import gzip
 import hashlib
 import zlib
 from collections.abc import Iterator
-from datetime import datetime, timezone
+from datetime import datetime
 from pathlib import Path
 
 from ocr_platform_spark.sources.binfile import read_binary_files
@@ -326,7 +326,7 @@ def _warc_records(raw, include_conversion: bool = False):
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 rows.extend(parse_warc(
-                    bytes(content), source=str(path),
+                    bytes(content), source=path.rsplit("/", 1)[-1],
                     include_conversion=include_conversion))
             out = pd.DataFrame(rows, columns=cols)
             # kernel already validated the format; NaT only for None

@@ -30,9 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType, StructField, StructType, TimestampType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ocr_platform_spark.streaming.ingest import drain
 from ocr_platform_spark.streaming.windowed import WATERMARK, events_stream

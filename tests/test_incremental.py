@@ -88,9 +88,9 @@ def test_store_band_join_prunes_partitions(spark, store_dir):
     batch touches — pinned by the PartitionFilters of the store scan —
     and the pruned path must return exactly what the in-memory
     estimator path returns."""
+    from ocr_platform_spark.operators.dedup import MINHASH_BANDS
     from ocr_platform_spark.operators.incremental import (
-        N_BUCKET_PFX, MINHASH_BANDS, incremental_dups_store,
-        pruned_store_buckets)
+        N_BUCKET_PFX, incremental_dups_store, pruned_store_buckets)
 
     incremental_ingest(spark, _docs(spark, list(enumerate(BASE))), store_dir)
     new = minhash_signatures(_docs(spark, [(10, BASE[1])]))
