@@ -10,9 +10,10 @@ contract. The independent html.parser collectors in
 tools/make_driver_fixtures.py and the differential fuzzers in
 tests/test_fuzz_scanners.py check each kernel against the stdlib.
 
-Spark-free: ``map_pages`` and ``augment_pages`` only call
-``mapInPandas`` on the DataFrame they are given, so the collectors stay
-unit-testable without a JVM.
+Spark-free: ``map_pages`` sits on ``functions/spark_udfs.map_rows`` (the
+package's one Arrow row loop) and ``augment_pages`` calls ``mapInPandas``
+on the DataFrame it is given, so the collectors stay unit-testable
+without a JVM.
 """
 
 from __future__ import annotations
@@ -42,21 +43,16 @@ def first_wins(attrs: list) -> dict:
 
 def map_pages(pages, scan: Callable[[str], list], schema,
               col: str = "html"):
-    """One mapInPandas pass over ``(url, col)``: a row ``(url, *t)`` for
-    every tuple ``t`` that ``scan`` returns for the decoded payload. A
-    null payload scans as ''."""
-    names = [f.name for f in schema]
+    """A row ``(url, *t)`` for every tuple ``t`` that ``scan`` returns for
+    the decoded ``col`` payload, in one ``map_rows`` pass over
+    ``(url, col)``. A null payload scans as ''."""
+    from ocr_platform_spark.functions.spark_udfs import map_rows
 
-    def gen(batches):
-        import pandas as pd
+    def rows(u, h):
+        text = "" if h is None else bytes(h).decode("utf-8", "replace")
+        return [(u, *t) for t in scan(text)]
 
-        for pdf in batches:
-            rows = [(u, *t) for u, h in zip(pdf["url"], pdf[col])
-                    for t in scan("" if h is None else
-                                  bytes(h).decode("utf-8", "replace"))]
-            yield pd.DataFrame(rows, columns=names)
-
-    return pages.mapInPandas(gen, schema=schema)
+    return map_rows(pages, ["url", col], rows, schema)
 
 
 def inject_after(html: bytes | None, tag: str,

@@ -4,14 +4,19 @@ Only functions whose semantics genuinely need Python (Unicode property
 classes, NFD normalization, fuzzy scoring) live here — everything else is
 expressed with built-in ``pyspark.sql.functions`` JVM-side (SURVEY.md §2.4
 Spark-mapping column). No row-at-a-time UDFs anywhere.
+
+``map_rows`` is the package's one Arrow row loop: every kernel that maps a
+row of a few columns to zero or more output rows runs through it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StringType
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructType
 
 
 @F.pandas_udf(IntegerType())
@@ -39,6 +44,23 @@ def command_score_udf(query: str):
         from ocr_platform_spark.functions.command_score import command_score
         return text.map(lambda t: command_score(t, query) if t else 0.0)
     return _score
+
+
+def map_rows(df: DataFrame, cols: list[str], fn: Callable[..., Iterable],
+             schema: StructType) -> DataFrame:
+    """One ``mapInPandas`` pass over ``df.select(*cols)``: every tuple (or
+    dict) that ``fn(*row)`` yields for an input row becomes an output row
+    of ``schema``. Per Arrow batch, the rows are built as
+    ``pd.DataFrame(rows, columns=<schema names>)``."""
+    names = [f.name for f in schema]
+
+    def gen(batches):
+        for pdf in batches:
+            rows = [r for row in zip(*(pdf[c] for c in cols))
+                    for r in fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(gen, schema=schema)
 
 
 # --------------------------------------------------------------------------

@@ -46,16 +46,16 @@ corpus).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ocr_platform_spark.functions.spark_udfs import map_rows
 from ocr_platform_spark.operators.tables import load
 
 N_MERGES = 48
 END = "</w>"
+WORD_SCHEMA = StructType([StructField("word", StringType())])
 
 
 def _rx_quote(s: str) -> str:
@@ -72,17 +72,12 @@ def _rx_replacement(s: str) -> str:
 def word_counts(docs: DataFrame) -> DataFrame:
     """Corpus pass: pretokenize (the regex-module classes shared with
     functions/bpe.py) + count. The ONLY corpus-scale stage."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_platform_spark.functions.bpe import pretokenize
+    from ocr_platform_spark.functions.bpe import pretokenize
 
-        for pdf in batches:
-            out = []
-            for t in pdf["text"]:
-                if t:
-                    out.extend(pretokenize(t))
-            yield pd.DataFrame({"word": out})
+    def rows(t):
+        return [(w,) for w in pretokenize(t)] if t else []
 
-    return (docs.select("text").mapInPandas(gen, schema="word string")
+    return (map_rows(docs, ["text"], rows, WORD_SCHEMA)
             .groupBy("word").agg(F.count("*").alias("n")))
 
 

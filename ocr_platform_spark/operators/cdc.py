@@ -28,20 +28,20 @@ floor) — sized so the ~1-3 KiB synthetic pages cut into a handful of
 chunks and shared nav/header boilerplate across same-host pages
 actually lands on shared chunk hashes (pinned).
 
-Scale: one Arrow-batched mapInPandas fan-out, zero shuffle; the
+Scale: one Arrow-batched ``map_rows`` fan-out, zero shuffle; the
 downstream chunk-fingerprint census is one map-side-combined groupBy.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
+
+from ocr_platform_spark.functions.spark_udfs import map_rows
 
 CDC_MIN = 64
 CDC_MAX = 1024
@@ -90,17 +90,9 @@ def cdc_chunks(url: str, data: bytes) -> list[tuple]:
 
 
 def page_cdc(pages: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for u, h in zip(pdf["url"], pdf["html"]):
-                if h is None:
-                    continue
-                rows.extend(cdc_chunks(u, bytes(h)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CDC_SCHEMA])
-
-    return pages.mapInPandas(gen, schema=CDC_SCHEMA)
+    return map_rows(pages, ["url", "html"],
+                    lambda u, h: [] if h is None else cdc_chunks(u, bytes(h)),
+                    CDC_SCHEMA)
 
 
 def dd_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -97,6 +97,14 @@ def _guard_oracle_scale(df: DataFrame, op: str,
             "instead, or raise max_rows for a deliberate oracle run.")
 
 
+def spark_split_sql(col: str) -> str:
+    """DuckDB SQL for Spark's ``split(trim(col), '\\s+')``: Spark's ``trim``
+    strips U+0020 only and Java's ``\\s`` is ``[ \\t\\n\\x0b\\f\\r]``, where
+    DuckDB's one-argument ``trim`` also strips Unicode spaces (U+3000)
+    and RE2's ``\\s`` lacks ``\\x0b``. Both keep a leading empty token."""
+    return rf"regexp_split_to_array(trim({col}, ' '), '[ \t\n\v\f\r]+')"
+
+
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str,
                      max_rows: int = ORACLE_MAX_ROWS) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -121,10 +129,10 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str,
     return pairs
 
 
-DD_JACCARD_SQL = r"""
+DD_JACCARD_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-  WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
+  SELECT doc_id, {spark_split_sql("text")} AS t FROM documents
+  WHERE len({spark_split_sql("text")}) >= 3),
 sh AS (
   SELECT DISTINCT doc_id, unnest(list_transform(generate_series(1, len(t) - 2),
          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
@@ -308,9 +316,10 @@ def _minhash_pair_ctes() -> str:
             f"CAST(mh{b * rows_per_band + r} AS VARCHAR)"
             for r in range(rows_per_band)))
         for b in range(MINHASH_BANDS))
+    toks = spark_split_sql("text")
     return rf"""toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-  WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
+  SELECT doc_id, {toks} AS t FROM documents
+  WHERE len({toks}) >= 3),
 th AS (
   SELECT doc_id,
          list_transform(t, x ->

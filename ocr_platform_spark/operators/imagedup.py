@@ -28,7 +28,7 @@ apps/queue/src/lib/ocr.ts:56-71 is where the reference touches pixels):
   rows) carry decode_error and simply cannot pair — never dropped
   from the hash table, never hashed.
 
-Scale: the hash kernel is one mapInPandas projection over the media
+Scale: the hash kernel is one ``map_rows`` projection over the media
 table. The banded candidate join shuffles (band_idx, band_val) keys —
 the dd_minhash_lsh pattern — and the verify join touches only
 candidate urls. At corpus scale the hash table is 5 ints per image;
@@ -51,13 +51,13 @@ committed corpus, asserted by test).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
+
+from ocr_platform_spark.functions.spark_udfs import map_rows
+from ocr_platform_spark.sources.pages import MEDIA_SCHEMA
 
 PHASH_DOCS = 200
 GRID_W, GRID_H = 9, 8          # 8 comparisons per row x 8 rows = 64 bits
@@ -165,45 +165,30 @@ def phash_media_df(spark: SparkSession, n_rows: int = PHASH_DOCS,
 
     nparts = spark.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                rows.append(gen_media(int(i), seed))
-                tw = twin_doc(int(i), seed)
-                if tw is not None:
-                    rows.append(tw)
-            yield pd.DataFrame(rows, columns=["url", "media"])
+    def rows(i):
+        tw = twin_doc(int(i), seed)
+        return [gen_media(int(i), seed)] + ([] if tw is None else [tw])
 
-    return spark.range(0, n_rows, 1, nparts).mapInPandas(
-        gen, schema="url string, media binary")
+    return map_rows(spark.range(0, n_rows, 1, nparts), ["id"], rows,
+                    MEDIA_SCHEMA)
 
 
 # --- hash kernel + banded LSH join -----------------------------------------
 
+def image_hash(payload: bytes) -> tuple:
+    """(b0, b1, b2, b3, hash_hex) of one payload via the real decoders."""
+    from ocr_platform_spark.operators.multimodal import decode_image
+
+    b = dhash_bands(*decode_image(payload))
+    return (*b, "".join(f"{v:04x}" for v in b))
+
+
 def image_hash_df(media: DataFrame) -> DataFrame:
     """media(url, media:binary) → dHash bands; failures keep their row
     with decode_error set (never-drop)."""
-    from ocr_platform_spark.operators.multimodal import decode_image
+    from ocr_platform_spark.operators.multimodal import map_decoded
 
-    cols = [f.name for f in HASH_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, payload in zip(pdf["url"], pdf["media"]):
-                try:
-                    w, h, ch, px = decode_image(bytes(payload or b""))
-                    b = dhash_bands(w, h, ch, px)
-                    out.append((url, *b,
-                                "".join(f"{v:04x}" for v in b), None))
-                except Exception as e:
-                    out.append((url, None, None, None, None, None,
-                                f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(out, columns=cols)
-
-    return media.select("url", "media").mapInPandas(
-        gen, schema=HASH_SCHEMA)
+    return map_decoded(media, image_hash, HASH_SCHEMA)
 
 
 def phash_pairs(hashes: DataFrame,

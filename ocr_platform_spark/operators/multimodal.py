@@ -2,7 +2,7 @@
 
 Images/audio/video ride through the engine as BinaryType columns with a
 struct of metadata; decode / feature-extraction runs in Arrow-batched
-``mapInPandas`` kernels. ``decode_image`` is REAL for PNG, baseline+progressive
+``map_rows`` kernels. ``decode_image`` is REAL for PNG, baseline+progressive
 JPEG and GIF (pure stdlib+numpy codecs: functions/png.py, functions/
 jpeg.py, functions/gif.py); ``media_audio`` decodes RIFF/WAVE PCM for
 real (functions/wav.py); ``media_video`` walks MJPEG-in-AVI containers
@@ -19,14 +19,15 @@ R2 image sink (apps/queue/src/lib/r2.ts:13-27).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
+
+from ocr_platform_spark.functions.spark_udfs import map_rows
 
 MEDIA_FEATURE_DIM = 8
 
@@ -94,31 +95,42 @@ def fake_features(payload: bytes, dim: int = MEDIA_FEATURE_DIM) -> list[float]:
             for i in range(dim)]
 
 
-def _media_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in MEDIA_META_SCHEMA.fields]
-    for pdf in batches:
-        out = []
-        for url, payload in zip(pdf["url"], pdf["html"]):
-            if payload is None or len(payload) == 0:
-                out.append((url, 0, None, hashlib.sha256(b"").hexdigest(),
-                            None, "empty payload"))
-                continue
-            b = bytes(payload)
-            try:
-                feat = fake_features(b)
-                err = None
-            except Exception as e:   # the never-drop error envelope again
-                feat, err = None, str(e)
-            out.append((url, len(b), sniff_format(b),
-                        hashlib.sha256(b).hexdigest(), feat, err))
-        yield pd.DataFrame(out, columns=cols)
+def _media_row(url, payload) -> list[tuple]:
+    if payload is None or len(payload) == 0:
+        return [(url, 0, None, hashlib.sha256(b"").hexdigest(), None,
+                 "empty payload")]
+    b = bytes(payload)
+    try:
+        feat = fake_features(b)
+        err = None
+    except Exception as e:   # the never-drop error envelope again
+        feat, err = None, str(e)
+    return [(url, len(b), sniff_format(b), hashlib.sha256(b).hexdigest(),
+             feat, err)]
 
 
 def media_features(pages: DataFrame) -> DataFrame:
     """pages(url, html:binary, ...) → metadata + feature vectors.
     One Arrow pass; binary payloads never surface on the driver."""
-    return pages.select("url", "html").mapInPandas(
-        _media_kernel, schema=MEDIA_META_SCHEMA)
+    return map_rows(pages, ["url", "html"], _media_row, MEDIA_META_SCHEMA)
+
+
+def map_decoded(media: DataFrame, stats: Callable[[bytes], tuple],
+                schema: StructType) -> DataFrame:
+    """media(url, media:binary) → one ``schema`` row per input row, the
+    never-drop decode envelope shared by the decode kernels:
+    ``(url, *stats(payload), None)`` on success, or ``(url, None, ...,
+    "<ExceptionType>: <message>")`` when ``stats`` raises. A null payload
+    decodes as b''."""
+    width = len(schema.fields) - 2
+
+    def row(url, payload):
+        try:
+            return [(url, *stats(bytes(payload or b"")), None)]
+        except Exception as e:  # never-drop: decode failures are rows
+            return [(url, *[None] * width, f"{type(e).__name__}: {e}")]
+
+    return map_rows(media, ["url", "media"], row, schema)
 
 
 # --- real decode path (PNG) ------------------------------------------------
@@ -171,26 +183,11 @@ def image_stats(payload: bytes) -> tuple:
     return w, h, ch, [int(s) * 10 ** 6 // n for s in sums], thumb
 
 
-def _decode_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in MEDIA_DECODE_SCHEMA.fields]
-    for pdf in batches:
-        out = []
-        for url, payload in zip(pdf["url"], pdf["media"]):
-            try:
-                w, h, ch, means, thumb = image_stats(bytes(payload or b""))
-                out.append((url, w, h, ch, means, thumb, None))
-            except Exception as e:  # never-drop: decode failures are rows
-                out.append((url, None, None, None, None, None,
-                            f"{type(e).__name__}: {e}"))
-        yield pd.DataFrame(out, columns=cols)
-
-
 def media_decode(media: DataFrame) -> DataFrame:
     """media(url, media:binary) → decoded dimensions + channel stats.
     Arrow-batched; failed decodes carry decode_error instead of dropping
     (the same never-drop envelope as extraction)."""
-    return media.select("url", "media").mapInPandas(
-        _decode_kernel, schema=MEDIA_DECODE_SCHEMA)
+    return map_decoded(media, image_stats, MEDIA_DECODE_SCHEMA)
 
 
 # --- real decode path (audio: RIFF/WAVE PCM) -------------------------------
@@ -224,26 +221,10 @@ def audio_stats(payload: bytes) -> tuple:
             max((abs(s) for s in samples), default=0))
 
 
-def _audio_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in MEDIA_AUDIO_SCHEMA.fields]
-    for pdf in batches:
-        out = []
-        for url, payload in zip(pdf["url"], pdf["media"]):
-            try:
-                rate, ch, nf, ms, mean, peak = audio_stats(
-                    bytes(payload or b""))
-                out.append((url, rate, ch, nf, ms, mean, peak, None))
-            except Exception as e:  # never-drop
-                out.append((url, None, None, None, None, None, None,
-                            f"{type(e).__name__}: {e}"))
-        yield pd.DataFrame(out, columns=cols)
-
-
 def media_audio(media: DataFrame) -> DataFrame:
     """media(url, media:binary) → PCM geometry + amplitude stats; non-WAV
     payloads (the table's images) carry decode_error instead of dropping."""
-    return media.select("url", "media").mapInPandas(
-        _audio_kernel, schema=MEDIA_AUDIO_SCHEMA)
+    return map_decoded(media, audio_stats, MEDIA_AUDIO_SCHEMA)
 
 
 # --- real decode path (video: MJPEG-in-AVI frame sampling) ------------------
@@ -274,22 +255,7 @@ def video_stats(payload: bytes) -> tuple:
             sum(px) * 10 ** 6 // max(len(px), 1))
 
 
-def _video_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in MEDIA_VIDEO_SCHEMA.fields]
-    for pdf in batches:
-        out = []
-        for url, payload in zip(pdf["url"], pdf["media"]):
-            try:
-                nf, w, h, ch, mean = video_stats(bytes(payload or b""))
-                out.append((url, nf, w, h, ch, mean, None))
-            except Exception as e:  # never-drop
-                out.append((url, None, None, None, None, None,
-                            f"{type(e).__name__}: {e}"))
-        yield pd.DataFrame(out, columns=cols)
-
-
 def media_video(media: DataFrame) -> DataFrame:
     """media(url, media:binary) → frame count + sampled-frame stats;
     non-AVI payloads carry decode_error instead of dropping."""
-    return media.select("url", "media").mapInPandas(
-        _video_kernel, schema=MEDIA_VIDEO_SCHEMA)
+    return map_decoded(media, video_stats, MEDIA_VIDEO_SCHEMA)

@@ -5,7 +5,7 @@ parse … reading-order reconstruction").
 layout-bearing PDF (functions/pdftext.build_pdf — scrambled draw order,
 1–2 columns, header/footnote/page-number bands) and parses it back with
 the pure-stdlib layout analyzer (parse_pdf), exploding to one row per
-physical page. Both halves run inside ONE Arrow-batched ``mapInPandas``
+physical page. Both halves run inside ONE Arrow-batched ``map_rows``
 kernel, so no PDF bytes ever cross a shuffle — at 100 TB the stage is
 embarrassingly parallel over the scan, and the output rows (text only)
 are a fraction of the rendered payload size.
@@ -23,14 +23,12 @@ region typing).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from ocr_platform_spark.functions.spark_udfs import map_rows
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
 from ocr_platform_spark.operators.tables import load
 
@@ -94,17 +92,8 @@ def extract_pdf_pages(spark: SparkSession, sf_dir: str,
         from ocr_platform_spark.operators.registry import assert_fixture_scale
 
         assert_fixture_scale(sf_dir, "extract_pdf_pages")
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_PAGES_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                rows.extend(pdf_pages_rows(int(doc_id), text))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(kernel, PDF_PAGES_SCHEMA)
+    return map_rows(load(spark, sf_dir, "documents"), ["doc_id", "text"],
+                    lambda d, t: pdf_pages_rows(int(d), t), PDF_PAGES_SCHEMA)
 
 
 # --------------------------------------------------------- rasterization
@@ -159,18 +148,11 @@ def extract_pdf_render(spark: SparkSession, sf_dir: str,
         from ocr_platform_spark.operators.registry import assert_fixture_scale
 
         assert_fixture_scale(sf_dir, "extract_pdf_render")
-    docs = (load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = (load(spark, sf_dir, "documents")
             .filter(f"doc_id % {RENDER_DOC_MOD} = 1"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_RENDER_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                rows.extend(pdf_render_rows(int(doc_id), text))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(kernel, PDF_RENDER_SCHEMA)
+    return map_rows(docs, ["doc_id", "text"],
+                    lambda d, t: pdf_render_rows(int(d), t),
+                    PDF_RENDER_SCHEMA)
 
 
 QUERIES: dict = {

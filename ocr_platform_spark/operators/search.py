@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.operators.dedup import spark_split_sql
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
 
@@ -85,18 +86,19 @@ def ta_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
+_TOKS = spark_split_sql("text")
 
 TA_BM25_SQL = rf"""
 WITH dl AS (
   SELECT doc_id,
-         len(regexp_split_to_array(trim(text), '\s+')) AS dl
+         len({_TOKS}) AS dl
   FROM documents),
 stats AS (SELECT count(*) AS n_docs, sum(dl) AS corpus_len FROM dl),
 tf AS (
   SELECT doc_id, t, count(*) AS tf, max(dl) AS dl FROM (
     SELECT doc_id,
-           len(regexp_split_to_array(trim(text), '\s+')) AS dl,
-           unnest(regexp_split_to_array(trim(text), '\s+')) AS t
+           len({_TOKS}) AS dl,
+           unnest({_TOKS}) AS t
     FROM documents)
   WHERE t IN ({_TERMS_SQL}) GROUP BY doc_id, t),
 dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
@@ -168,7 +170,7 @@ TA_KEYWORD_SQL = rf"""
 WITH tf AS (
   SELECT doc_id, t, count(*) AS tf FROM (
     SELECT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\s+')) AS t
+           unnest({_TOKS}) AS t
     FROM documents) GROUP BY doc_id, t),
 stats AS (SELECT count(*) AS n_docs FROM documents),
 dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
@@ -236,7 +238,7 @@ def _phrase_sql(phrase: tuple[str, ...] = PHRASE_QUERY) -> str:
     return rf"""
 WITH pos AS (
   SELECT doc_id, i - 1 AS pos, toks[i] AS t FROM (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+    SELECT doc_id, {_TOKS} AS toks
     FROM documents), unnest(range(1, len(toks) + 1)) AS r(i)
   WHERE toks[i] IN ({terms}))
 SELECT m0.doc_id, CAST(count(*) AS BIGINT) AS n_matches

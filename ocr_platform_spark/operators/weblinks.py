@@ -1,5 +1,5 @@
 """Outlink/anchor extraction as a Spark operator: the crawl→link-graph
-step. One Arrow-batched ``mapInPandas`` kernel over the pages table emits
+step. One Arrow-batched ``map_rows`` kernel over the pages table emits
 one row per anchor — href (raw + resolved), anchor text, link kind,
 boilerplate flag — so the host graph (operators/webgraph.py) and the
 anchor-text corpus are both one projection away.
@@ -16,14 +16,12 @@ pattern; scale-free synthetic input, no sf pin needed).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BooleanType, IntegerType, StringType, StructField, StructType,
 )
 
+from ocr_platform_spark.functions.spark_udfs import map_rows
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
 from ocr_platform_spark.session import scoped_persist
 
@@ -42,20 +40,13 @@ LINKS_SCHEMA = StructType([
 
 def links_df(pages: DataFrame) -> DataFrame:
     """pages(url, html) → one row per anchor (never-drop, typed kinds)."""
+    from ocr_platform_spark.extract.links import extract_links
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_platform_spark.extract.links import extract_links
+    def rows(url, html):
+        return [(url, lk.link_no, lk.href_raw, lk.resolved, lk.anchor_text,
+                 lk.kind, lk.boilerplate) for lk in extract_links(url, html)]
 
-        cols = [f.name for f in LINKS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for lk in extract_links(url, html):
-                    rows.append((url, lk.link_no, lk.href_raw, lk.resolved,
-                                 lk.anchor_text, lk.kind, lk.boilerplate))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(kernel, LINKS_SCHEMA)
+    return map_rows(pages, ["url", "html"], rows, LINKS_SCHEMA)
 
 
 def extract_links_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -119,12 +119,20 @@ def crawl_pages(spark: SparkSession, n_docs: int = CORPUS_DOCS,
     return base.unionByName(near).unionByName(exact)
 
 
+def url_host(url: F.Column) -> F.Column:
+    """The url's host ('' when the url is not https)."""
+    return F.regexp_extract(url, "^https://([^/]+)", 1)
+
+
+def url_blocked(url: F.Column) -> F.Column:
+    """The url-gate block rule: a blocked host or a keyword match."""
+    return url_host(url).isin(*BLOCKED_HOSTS) | url.rlike(URL_BLOCK_RE)
+
+
 def url_gate(df: DataFrame) -> DataFrame:
     """Blocklist/keyword pruning on the bare url — applied BEFORE the
     kernel so blocked rows never pay Python extraction."""
-    host = F.regexp_extract(F.col("url"), "^https://([^/]+)", 1)
-    return (df.filter(~host.isin(*BLOCKED_HOSTS))
-            .filter(~F.col("url").rlike(URL_BLOCK_RE)))
+    return df.filter(~url_blocked(F.col("url")))
 
 
 def canonical_fp(text: F.Column) -> F.Column:
@@ -145,9 +153,7 @@ def derive_curation_cols(ext: DataFrame) -> DataFrame:
 
     checks, n_tok, _ = gopher_checks(F.col("text"))
     return (ext
-            .withColumn("host",
-                        F.regexp_extract(F.col("url"),
-                                         "^https://([^/]+)", 1))
+            .withColumn("host", url_host(F.col("url")))
             .withColumn("lang_det", detect_language_udf(F.col("text")))
             .withColumn("quality_pass", gopher_pass(checks))
             .withColumn("n_tok", n_tok.cast("long"))
@@ -264,11 +270,8 @@ def run_corpus_job(spark: SparkSession,
     form re-runs Python datagen on every pass over the union."""
     if crawl is None:
         crawl = crawl_pages(spark, n_docs)
-    host = F.regexp_extract(F.col("url"), "^https://([^/]+)", 1)
-    url_blocked = (crawl.withColumn("host", host)
-                   .filter(F.col("host").isin(*BLOCKED_HOSTS)
-                           | F.col("url").rlike(URL_BLOCK_RE))
-                   .select("url", F.lit("url_gate").alias("stage")))
+    blocked = (crawl.filter(url_blocked(F.col("url")))
+               .select("url", F.lit("url_gate").alias("stage")))
     derived = _derived(spark, crawl)
     failed = (derived.filter(F.col("failed_stage").isNotNull())
               .select("url", F.lit("extract").alias("stage")))
@@ -284,7 +287,7 @@ def run_corpus_job(spark: SparkSession,
     dedup_drop = (langed.filter(F.col("quality_pass")).select("url")
                   .join(kept.select("url"), "url", "left_anti")
                   .select("url", F.lit("dedup").alias("stage")))
-    rejects = (url_blocked.unionByName(failed).unionByName(lang_drop)
+    rejects = (blocked.unionByName(failed).unionByName(lang_drop)
                .unionByName(qual_drop).unionByName(dedup_drop))
     counters = {r["stage"]: r["n"] for r in
                 rejects.groupBy("stage").agg(F.count("*").alias("n"))

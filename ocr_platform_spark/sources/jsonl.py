@@ -23,7 +23,7 @@ tools/make_driver_fixtures.py:jsonl_fixture's oracle pass):
 
 Shape at scale: ``binaryFile`` yields one row per shard file and packs
 files into tasks by size — parallelism comes free from the format's
-sharding, the parse is one Arrow-batched mapInPandas, and there is NO
+sharding, the parse is one Arrow-batched ``map_rows``, and there is NO
 shuffle anywhere in ingest (the warc.py shape).
 """
 
@@ -32,13 +32,12 @@ from __future__ import annotations
 import hashlib
 import json
 import pathlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from ocr_platform_spark.functions.spark_udfs import map_rows
 from ocr_platform_spark.sources.binfile import read_binary_files
 
 FIXTURE_DIR = (pathlib.Path(__file__).resolve().parents[2]
@@ -97,16 +96,10 @@ def parse_jsonl_bytes(name: str, data: bytes) -> list[tuple]:
 def _jsonl_rows(files: DataFrame) -> DataFrame:
     """(path, content) DataFrame → one row per line. One shared transform
     for the batch and streaming readers (the warc._warc_records shape)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                rows.extend(parse_jsonl_bytes(name, bytes(content)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JSONL_SCHEMA])
-
-    return files.mapInPandas(gen, schema=JSONL_SCHEMA)
+    return map_rows(files, ["path", "content"],
+                    lambda p, content: parse_jsonl_bytes(
+                        p.rsplit("/", 1)[-1], bytes(content)),
+                    JSONL_SCHEMA)
 
 
 def read_jsonl(spark: SparkSession, path_glob: str) -> DataFrame:

@@ -4,7 +4,7 @@ Shape per BASELINE.json → input_hint:
     url:string, warc_ts:timestamp, html:binary, text:string, lang:string
 
 Spark-first design: ``spark.range(n)`` gives a perfectly-balanced distributed
-index space; ``mapInPandas`` turns each Arrow batch of indices into page rows
+index space; ``map_rows`` turns each Arrow batch of indices into page rows
 by calling the pure generator (``ocr_platform_spark.datagen.gen_document``,
 a pure function of (seed, index)). No data ever funnels through the driver,
 so the same call scales from 500 rows in tests to 10^12 on a cluster — the
@@ -17,14 +17,12 @@ BinaryType column of the scan.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
+
+from ocr_platform_spark.functions.spark_udfs import map_rows
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -35,25 +33,15 @@ PAGES_SCHEMA = StructType([
 ])
 
 
-def _gen_partition(seed: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # import inside the task so executors resolve the module themselves
-        from ocr_platform_spark.datagen import gen_document
-
-        for pdf in batches:
-            rows = [gen_document(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-    return gen
-
-
 def pages_df(spark: SparkSession, n_docs: int, seed: int = 42,
              partitions: int | None = None) -> DataFrame:
     """The synthetic pages table as a distributed DataFrame (no driver data)."""
+    from ocr_platform_spark.datagen import gen_document
+
     nparts = partitions or spark.sparkContext.defaultParallelism
     idx = spark.range(0, n_docs, 1, nparts)
-    return idx.mapInPandas(_gen_partition(seed), schema=PAGES_SCHEMA)
+    return map_rows(idx, ["id"], lambda i: [gen_document(int(i), seed)],
+                    PAGES_SCHEMA)
 
 
 MEDIA_SCHEMA = StructType([
@@ -62,23 +50,16 @@ MEDIA_SCHEMA = StructType([
 ])
 
 
-def _gen_media_partition(seed: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_platform_spark.datagen import gen_media
-
-        for pdf in batches:
-            rows = [gen_media(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["url", "media"])
-    return gen
-
-
 def media_df(spark: SparkSession, n_rows: int, seed: int = 42,
              partitions: int | None = None) -> DataFrame:
     """Synthetic media table (url, media:binary PNG payloads), distributed
     exactly like pages_df — the generator is the table."""
+    from ocr_platform_spark.datagen import gen_media
+
     nparts = partitions or spark.sparkContext.defaultParallelism
     idx = spark.range(0, n_rows, 1, nparts)
-    return idx.mapInPandas(_gen_media_partition(seed), schema=MEDIA_SCHEMA)
+    return map_rows(idx, ["id"], lambda i: [gen_media(int(i), seed)],
+                    MEDIA_SCHEMA)
 
 
 def write_pages(spark: SparkSession, n_docs: int, path: str,

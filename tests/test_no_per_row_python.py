@@ -1,9 +1,11 @@
 """Static guards over the package source.
 
 BASELINE.json mandates 'no per-row Python' (SURVEY.md §4.2.2) — all Python
-execution must go through Arrow-batched pandas APIs (mapInPandas /
+execution must go through Arrow-batched APIs (mapInPandas / mapInArrow /
 pandas_udf / applyInPandas). The first test greps the package source for
-the forbidden constructs; the second pins the persisted-relation lifecycle.
+the forbidden constructs, the second pins the persisted-relation lifecycle
+and the third keeps every per-row kernel on the one Arrow row loop,
+``functions/spark_udfs.map_rows``.
 """
 
 from __future__ import annotations
@@ -65,3 +67,34 @@ def test_every_persist_is_scoped_or_released():
                           "neither scoped_persist nor unpersisted"
                           for name, line in calls if name == "persist"]
     assert not offenders, "\n".join(offenders)
+
+
+# Each keeps its own loop for a reason its code shows: extract_pages writes
+# a per-batch cost_ms column, _warc_records converts timestamps per batch,
+# _records_sink is a side-effecting sink, augment_pages replaces one column
+# and keeps the others.
+OWN_ARROW_LOOP = {
+    ("functions/spark_udfs.py", "map_rows"),
+    ("plans/extract_job.py", "extract_pages"),
+    ("sources/warc.py", "_warc_records"),
+    ("sources/warc.py", "_records_sink"),
+    ("extract/tagscan.py", "augment_pages"),
+}
+
+
+def test_every_map_in_pandas_is_map_rows_or_named():
+    """A kernel that maps a row to zero or more output rows goes through
+    map_rows; only the functions in OWN_ARROW_LOOP call
+    ``.mapInPandas(`` themselves."""
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        for scope in [tree, *(n for n in ast.walk(tree) if isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef)))]:
+            name = getattr(scope, "name", "<module>")
+            offenders += [f"{rel}:{line} — mapInPandas in {name}"
+                          for call, line in _attr_calls(scope)
+                          if call == "mapInPandas"
+                          and (rel, name) not in OWN_ARROW_LOOP]
+    assert not offenders, "\n".join(sorted(offenders))

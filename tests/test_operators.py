@@ -16,6 +16,40 @@ SF = "/root/testdata/sf0.01"
 # dedup
 # --------------------------------------------------------------------------
 
+SPLIT_PROBES = [
+    "vertical\x0btab is java whitespace",
+    "\u3000ideographic space is not trimmed",
+    "\tleading tab",
+    "trailing tab\t",
+    "double  spaces  inside",
+    "file\x1cseparator stays in the token",
+    "next\x85line stays in the token",
+    "windows line\r\nendings",
+    "",
+    "   ",
+]
+
+
+def test_oracle_split_matches_spark(spark):
+    """The DuckDB oracles' shared tokenizer, spark_split_sql, splits like
+    Spark's ``split(trim(text), '\\s+')`` on the whitespace the two
+    engines' defaults disagree on."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from ocr_platform_spark.operators.dedup import spark_split_sql
+
+    rows = list(enumerate(SPLIT_PROBES))
+    want = dict(spark.createDataFrame(rows, "i int, text string")
+                .select("i", F.split(F.trim("text"), r"\s+")).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE probes (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO probes VALUES (?, ?)", rows)
+    got = dict(con.execute(
+        f"SELECT i, {spark_split_sql('text')} FROM probes").fetchall())
+    assert got == want
+
+
 def test_minhash_lsh_vs_bruteforce(spark):
     """LSH candidates, after exact verification, must recover (almost all
     of) the brute-force Jaccard pairs; every emitted pair must itself pass
@@ -174,6 +208,57 @@ def test_decode_dispatch():
         decode_image(b"GIF89a corrupt gif body here")
     with pytest.raises(NotImplementedError):
         decode_image(b"RIFF....WAVE no audio codec")
+
+
+def _media_mix() -> list[tuple[str, bytes | None]]:
+    """One valid payload of each kind the decode kernels read, garbage
+    bytes and a null payload."""
+    from ocr_platform_spark.functions.avi import encode_avi
+    from ocr_platform_spark.functions.jpeg import encode_jpeg
+    from ocr_platform_spark.functions.png import encode_png
+    from ocr_platform_spark.functions.wav import encode_wav
+
+    frame = encode_jpeg(16, 12, 1, bytes(range(192)))
+    return [("png", encode_png(4, 4, 3, bytes(range(48)))),
+            ("wav", encode_wav(8000, 1, [0, 100, -100, 50, 7, -3])),
+            ("avi", encode_avi([frame, frame, frame])),
+            ("garbage", b"\x00not media\xff"),
+            ("null", None)]
+
+
+@pytest.mark.parametrize("module, kernel, stats, raiser", [
+    ("multimodal", "media_decode", "image_stats", "image_stats"),
+    ("multimodal", "media_audio", "audio_stats", "audio_stats"),
+    ("multimodal", "media_video", "video_stats", "video_stats"),
+    ("imagedup", "image_hash_df", "image_hash", "decode_image"),
+])
+def test_decode_kernels_never_drop(spark, module, kernel, stats, raiser):
+    """Every decode kernel keeps one row per input: ``(url, *stats, None)``
+    on success, all-null columns and ``"<Type>: <message>"`` of the pure
+    function's exception on failure."""
+    import importlib
+
+    from ocr_platform_spark.operators import multimodal
+
+    mod = importlib.import_module(f"ocr_platform_spark.operators.{module}")
+    stats_fn, raise_fn = getattr(mod, stats), getattr(multimodal, raiser)
+    mix = _media_mix()
+    df = spark.createDataFrame(mix, "url string, media binary")
+    out = getattr(mod, kernel)(df).collect()
+    assert sorted(r["url"] for r in out) == sorted(u for u, _ in mix)
+    rows = {r["url"]: tuple(r) for r in out}
+    n_ok = 0
+    for url, payload in mix:
+        data = bytes(payload or b"")
+        try:
+            raise_fn(data)
+        except Exception as e:
+            assert rows[url][1:] == (None,) * (len(rows[url]) - 2) + (
+                f"{type(e).__name__}: {e}",), url
+            continue
+        assert rows[url][1:] == (*stats_fn(data), None), url
+        n_ok += 1
+    assert n_ok == 1                 # exactly one payload kind decodes
 
 
 def test_simhash_vectorized_matches_naive_loop():
