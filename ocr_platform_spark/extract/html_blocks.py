@@ -15,6 +15,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from html.parser import HTMLParser
 
+from ocr_platform_spark.extract.fast_scanner import scan
+
 # Tags that open a new text block. Everything else (span, a, b, i, sup, ...)
 # is inline and accumulates into the enclosing block.
 BLOCK_TAGS = frozenset(
@@ -298,30 +300,24 @@ class _BlockParser(HTMLParser):
         self._flush()
 
 
-def parse_blocks(html: str, engine: str = "fast") -> list[Block]:
+def parse_blocks(html: str) -> list[Block]:
     """Parse an HTML string into document-ordered blocks.
 
-    ``engine="fast"`` (default) drives the ``_BlockParser`` callbacks from
-    the package's one tokenizer (extract/fast_scanner.py; its module
-    docstring states the event contract) — ~2x the throughput of stdlib
-    html.parser dispatch. ``engine="stdlib"`` keeps the html.parser drive
-    as the test reference; tests/test_fast_scanner.py asserts both engines
-    produce identical blocks over the corpus, goldens, and malformed edges.
+    Drives the ``_BlockParser`` callbacks from the package's one tokenizer
+    (extract/fast_scanner.py; its module docstring states the event
+    contract) — ~2x the throughput of stdlib html.parser dispatch.
+    tests/test_fast_scanner.py asserts that the html.parser drive of the
+    same parser gives identical blocks over the corpus, goldens, and
+    malformed edges.
 
-    Never raises on malformed input: both engines are recovery-oriented; any
+    Never raises on malformed input: the scanner is recovery-oriented; any
     residual exception is treated as "no blocks" by the caller (pipeline.py
     maps that to the CONVERT_TO_HTML error envelope, mirroring the staged
     failure routing of ref apps/queue/src/pipeline/index.ts:60-104).
     """
     p = _BlockParser()
-    if engine == "fast":
-        from ocr_platform_spark.extract.fast_scanner import scan
-
-        scan(html, p)
-        p._flush()
-    else:
-        p.feed(html)
-        p.close()
+    scan(html, p)
+    p._flush()
     # re-number after filtering empties (flush only appends non-empty)
     for i, b in enumerate(p.blocks):
         b.block_id = i

@@ -36,6 +36,7 @@ bit-identical between them (the same contract as functions/png.py).
 
 from __future__ import annotations
 
+import math
 import struct
 
 import numpy as np
@@ -111,16 +112,30 @@ class JpegError(ValueError):
     pass
 
 
-# 8x8 DCT-II basis, orthonormal; fixed-order matmul keeps it deterministic
+# 8x8 DCT-II basis, orthonormal, from scalar math.cos rather than numpy's
+# SIMD-dispatched np.cos
 def _dct_matrix() -> np.ndarray:
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    c = np.cos((2 * x + 1) * u * np.pi / 16) * 0.5
-    c[0, :] *= 1 / np.sqrt(2)
+    c = np.array([[math.cos((2 * x + 1) * u * math.pi / 16) * 0.5
+                   for x in range(8)] for u in range(8)])
+    c[0, :] *= 1 / math.sqrt(2)
     return c
 
 
 _DCT = _dct_matrix()
+
+
+def _idct(blocks: np.ndarray) -> np.ndarray:
+    """``_DCT.T @ b @ _DCT`` for every 8x8 block ``b`` in ``blocks[..., 8,
+    8]``, summed in a fixed order by elementwise multiply/add ufuncs. A
+    matmul goes through BLAS, whose summation order, and so its rounding,
+    depends on the CPU; decoded pixels must not."""
+    tmp = _DCT[0, :, None] * blocks[..., 0, None, :]
+    for u in range(1, 8):
+        tmp += _DCT[u, :, None] * blocks[..., u, None, :]
+    out = tmp[..., 0, None] * _DCT[0]
+    for v in range(1, 8):
+        out += tmp[..., v, None] * _DCT[v]
+    return out
 
 
 def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
@@ -1036,17 +1051,12 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     nc = len(comps)
     out_planes: list[np.ndarray] = []
     for (cid, h, v, qid), grid in zip(comps, coef):
-        qtab = qtables[qid]
         rows, cols = len(grid), len(grid[0])
-        plane = np.zeros((rows * 8, cols * 8), dtype=np.float64)
-        for by in range(rows):
-            grow = grid[by]
-            for bx in range(cols):
-                coefs = np.zeros(64, dtype=np.int64)
-                coefs[ZIGZAG] = grow[bx]
-                block = (coefs * qtab).reshape(8, 8).astype(np.float64)
-                plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                    _DCT.T @ block @ _DCT + 128.0
+        coefs = np.zeros((rows, cols, 64), dtype=np.int64)
+        coefs[..., ZIGZAG] = grid
+        blocks = (coefs * qtables[qid]).reshape(rows, cols, 8, 8)
+        plane = (_idct(blocks.astype(np.float64)) + 128.0).transpose(
+            0, 2, 1, 3).reshape(rows * 8, cols * 8)
         cw = (width * h + hmax - 1) // hmax
         ch = (height * v + vmax - 1) // vmax
         plane = plane[:ch, :cw]

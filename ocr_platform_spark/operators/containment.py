@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.dedup import (ORACLE_MAX_ROWS,
                                                 _guard_oracle_scale,
                                                 _shingles)
@@ -62,7 +63,7 @@ CONTAIN_NUM, CONTAIN_DEN = 4, 5      # containment >= 4/5
 def _quote_corpus(docs: DataFrame) -> DataFrame:
     """documents + derived quote pages: first 40% of the source's words
     (DIV arithmetic, mirrored in SQL) + the aggregator suffix."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     n40 = F.call_function("div", F.size(toks) * 2, F.lit(5))
     quotes = (docs.where(F.col("doc_id") % QUOTE_MOD == 2)
               .where(F.size(toks) >= 10)
@@ -114,16 +115,16 @@ WITH base AS (SELECT doc_id, text FROM documents),
 quotes AS (
   SELECT doc_id + {QUOTE_ID_BASE} AS doc_id,
          array_to_string(list_slice(
-             regexp_split_to_array(trim(text), '\s+'), 1,
-             (len(regexp_split_to_array(trim(text), '\s+')) * 2) // 5),
+             {ws.tokens_sql("text")}, 1,
+             (len({ws.tokens_sql("text")}) * 2) // 5),
              ' ') || ' {QUOTE_SUFFIX}' AS text
   FROM base
   WHERE doc_id % {QUOTE_MOD} = 2
-    AND len(regexp_split_to_array(trim(text), '\s+')) >= 10),
+    AND len({ws.tokens_sql("text")}) >= 10),
 corpus AS (SELECT * FROM base UNION ALL SELECT * FROM quotes),
 toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM corpus
-  WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
+  SELECT doc_id, {ws.tokens_sql("text")} AS t FROM corpus
+  WHERE len({ws.tokens_sql("text")}) >= 3),
 sh AS (
   SELECT DISTINCT doc_id, unnest(list_transform(
       generate_series(1, len(t) - 2),

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.dedup import (
     DD_CLUSTERS_SQL, DD_EXACT_SQL, dd_clusters, dd_exact)
 from ocr_platform_spark.operators.tables import load
@@ -140,7 +141,7 @@ FROM documents d
 
 def cx_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     base = docs.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.countDistinct("source").cast("long").alias("n_hosts"),
@@ -162,7 +163,7 @@ WITH base AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs,
          CAST(count(DISTINCT source) AS BIGINT) AS n_hosts,
          CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
+         CAST(sum(len({ws.tokens_sql("text")}))
               AS BIGINT) AS n_tokens,
          CAST(sum(length(text)) AS BIGINT) AS n_chars
   FROM documents),

@@ -21,7 +21,6 @@ Scale design notes (the part that must survive 10^12 docs):
 from __future__ import annotations
 
 import hashlib
-import re
 
 import numpy as np
 import pandas as pd
@@ -30,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
 
@@ -41,16 +41,15 @@ JACCARD_THRESHOLD = 0.5
 # --- exact dedup (hash-groupBy; SQL-expressible) --------------------------
 def dd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    fp = F.md5(F.encode(norm, "UTF-8"))
+    fp = F.md5(F.encode(ws.norm(F.col("text")), "UTF-8"))
     return (docs.select(fp.alias("fp"), "doc_id")
             .groupBy("fp")
             .agg(F.min("doc_id").alias("keep_id"),
                  F.count("*").alias("n_copies")))
 
 
-DD_EXACT_SQL = r"""
-SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp,
+DD_EXACT_SQL = rf"""
+SELECT md5({ws.norm_sql("text")}) AS fp,
        min(doc_id) AS keep_id, count(*) AS n_copies
 FROM documents GROUP BY 1
 """
@@ -66,7 +65,7 @@ def _shingles(docs: DataFrame) -> DataFrame:
     lambda defeats common-subexpression elimination and re-runs the regex
     split once per element_at — measured 8.8s → 0.9s for the sf0.1
     explosion (the round-2 bench regression's root cause)."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     arr = F.col("_toks")
     sh = F.transform(
         F.sequence(F.lit(1), F.size(arr) - 2),
@@ -97,14 +96,6 @@ def _guard_oracle_scale(df: DataFrame, op: str,
             "instead, or raise max_rows for a deliberate oracle run.")
 
 
-def spark_split_sql(col: str) -> str:
-    """DuckDB SQL for Spark's ``split(trim(col), '\\s+')``: Spark's ``trim``
-    strips U+0020 only and Java's ``\\s`` is ``[ \\t\\n\\x0b\\f\\r]``, where
-    DuckDB's one-argument ``trim`` also strips Unicode spaces (U+3000)
-    and RE2's ``\\s`` lacks ``\\x0b``. Both keep a leading empty token."""
-    return rf"regexp_split_to_array(trim({col}, ' '), '[ \t\n\v\f\r]+')"
-
-
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str,
                      max_rows: int = ORACLE_MAX_ROWS) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -131,8 +122,8 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str,
 
 DD_JACCARD_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, {spark_split_sql("text")} AS t FROM documents
-  WHERE len({spark_split_sql("text")}) >= 3),
+  SELECT doc_id, {ws.tokens_sql("text")} AS t FROM documents
+  WHERE len({ws.tokens_sql("text")}) >= 3),
 sh AS (
   SELECT DISTINCT doc_id, unnest(list_transform(generate_series(1, len(t) - 2),
          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
@@ -175,12 +166,6 @@ def _perm_consts(k: int) -> tuple[int, int]:
     return a, b
 
 
-# Spark's tokenization, reproduced exactly: `trim` strips U+0020 only, and
-# `split(.., '\s+')` is Java's \s, i.e. [ \t\n\x0b\f\r] (no Unicode
-# spaces); re.split keeps a leading empty token just as Spark's split does.
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
 def _minhash_batches(batches):
     """``(doc_id, text)`` Arrow batches → ``(doc_id, mh0.., sh)``: the
     distinct 3-gram shingle hashes ``sh`` and their MINHASH_PERMS minhashes,
@@ -204,7 +189,7 @@ def _minhash_batches(batches):
         for i, text in enumerate(batch.column(1).to_pylist()):
             if text is None:
                 continue
-            toks = _JAVA_WS.split(text.strip(" "))
+            toks = ws.tokens_py(text)
             if len(toks) < 3:
                 continue
             h = np.fromiter(map(tok_hash, toks), np.int64, len(toks))
@@ -316,7 +301,7 @@ def _minhash_pair_ctes() -> str:
             f"CAST(mh{b * rows_per_band + r} AS VARCHAR)"
             for r in range(rows_per_band)))
         for b in range(MINHASH_BANDS))
-    toks = spark_split_sql("text")
+    toks = ws.tokens_sql("text")
     return rf"""toks AS (
   SELECT doc_id, {toks} AS t FROM documents
   WHERE len({toks}) >= 3),
@@ -471,13 +456,11 @@ def _simhash_sql() -> str:
         for j in range(64))
     return f"""
 WITH dt AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+  SELECT doc_id, unnest({ws.py_split_sql("lower(text)")}) AS tok
   FROM documents),
 th AS (
-  -- tok <> '' mirrors Python str.split(): splitting ''/whitespace-only
-  -- text yields NO tokens (regexp_split_to_array yields one '' instead)
   SELECT doc_id, CAST(concat('0x', substr(md5(tok), 1, 16)) AS UBIGINT) AS th
-  FROM dt WHERE tok <> ''),
+  FROM dt),
 bits AS (
   SELECT doc_id, count(*) AS n,
          {bit_sums}

@@ -32,6 +32,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.registry import assert_fixture_scale
 from ocr_platform_spark.operators.tables import load
 
@@ -45,14 +46,13 @@ def python_moments(rows) -> dict:
     """Sequential ground-truth moments over (text, n_chars) rows,
     replicating the Spark plan token-for-token: ``F.trim`` strips ASCII
     spaces only (so strip(' '), not strip()), and ``F.split`` defaults to
-    Java split limit -1, whose leading/trailing empty tokens re.split
-    reproduces — a text starting or ending with non-space whitespace
-    (\\t, \\n) now tokenizes identically on both sides (ADVICE round 3)."""
-    import re
-
+    Java split limit -1, whose leading/trailing empty tokens
+    ``whitespace.tokens_py`` reproduces — a text starting or ending with
+    non-space whitespace (\\t, \\n) now tokenizes identically on both
+    sides (ADVICE round 3)."""
     m = dict.fromkeys(MOMENT_KEYS, 0)
     for text, n_chars in rows:
-        toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+        toks = ws.tokens_py(text)
         x1, x2, y = len(toks), len(set(toks)), int(n_chars)
         m["n"] += 1
         m["s1"] += x1
@@ -116,7 +116,7 @@ def solve_rows(m: dict) -> list:
 def _features(docs: DataFrame) -> DataFrame:
     """Per-doc integer features + target, the Spark twin of
     ``python_moments``'s tokenization."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("x1"),

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_platform_spark.operators.dedup import spark_split_sql
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
 
@@ -52,7 +52,7 @@ BM25_K = 10
 def bm25_topk(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY,
               k: int = BM25_K) -> DataFrame:
     """(doc_id, bm25_x) for the k best-scoring docs, exact-integer BM25."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     stats = (docs.select(F.size(toks).cast("long").alias("dl"))
              .agg(F.count("*").alias("n_docs"),
                   F.sum("dl").alias("corpus_len")))
@@ -86,19 +86,18 @@ def ta_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
-_TOKS = spark_split_sql("text")
 
 TA_BM25_SQL = rf"""
 WITH dl AS (
   SELECT doc_id,
-         len({_TOKS}) AS dl
+         len({ws.tokens_sql("text")}) AS dl
   FROM documents),
 stats AS (SELECT count(*) AS n_docs, sum(dl) AS corpus_len FROM dl),
 tf AS (
   SELECT doc_id, t, count(*) AS tf, max(dl) AS dl FROM (
     SELECT doc_id,
-           len({_TOKS}) AS dl,
-           unnest({_TOKS}) AS t
+           len({ws.tokens_sql("text")}) AS dl,
+           unnest({ws.tokens_sql("text")}) AS t
     FROM documents)
   WHERE t IN ({_TERMS_SQL}) GROUP BY doc_id, t),
 dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
@@ -139,7 +138,7 @@ KEYWORD_K = 5
 def keyword_topk(docs: DataFrame, k: int = KEYWORD_K) -> DataFrame:
     """(doc_id, text) → (doc_id, rank, term, tf, score_x1000): the k
     highest tf·idf terms per document, ties broken lexicographically."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     tf = (docs.select("doc_id", F.explode(toks).alias("t"))
           .groupBy("doc_id", "t").agg(F.count("*").alias("tf")))
     stats = docs.agg(F.count("*").alias("n_docs"))
@@ -170,7 +169,7 @@ TA_KEYWORD_SQL = rf"""
 WITH tf AS (
   SELECT doc_id, t, count(*) AS tf FROM (
     SELECT doc_id,
-           unnest({_TOKS}) AS t
+           unnest({ws.tokens_sql("text")}) AS t
     FROM documents) GROUP BY doc_id, t),
 stats AS (SELECT count(*) AS n_docs FROM documents),
 dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
@@ -210,7 +209,7 @@ def phrase_search(docs: DataFrame,
                   phrase: tuple[str, ...] = PHRASE_QUERY) -> DataFrame:
     """(doc_id, text) → (doc_id, n_matches) for documents containing the
     exact token phrase, with the number of occurrences."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     pos = (docs.select("doc_id", F.posexplode(toks).alias("pos", "t"))
            .filter(F.col("t").isin(*phrase)))
     m = None
@@ -238,7 +237,7 @@ def _phrase_sql(phrase: tuple[str, ...] = PHRASE_QUERY) -> str:
     return rf"""
 WITH pos AS (
   SELECT doc_id, i - 1 AS pos, toks[i] AS t FROM (
-    SELECT doc_id, {_TOKS} AS toks
+    SELECT doc_id, {ws.tokens_sql("text")} AS toks
     FROM documents), unnest(range(1, len(toks) + 1)) AS r(i)
   WHERE toks[i] IN ({terms}))
 SELECT m0.doc_id, CAST(count(*) AS BIGINT) AS n_matches

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
 
@@ -69,7 +70,7 @@ def kmv_distinct(docs: DataFrame, k: int = KMV_K,
     """
     toks = docs.select(
         "source",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
+        F.explode(ws.tokens(F.col("text"))).alias("tok"))
     hashed = toks.select("source", _h56("tok").alias("h"))
     shard = (hashed
              .groupBy("source", F.pmod("h", F.lit(salts)).alias("salt"))
@@ -102,7 +103,7 @@ def ta_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 TA_KMV_SQL = rf"""
 WITH tok AS (
   SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+         unnest({ws.tokens_sql("text")}) AS tok
   FROM documents),
 hs AS (
   SELECT DISTINCT source,
@@ -298,7 +299,7 @@ def cms_heavy_hitters(docs: DataFrame, top_k: int = CMS_TOP_K) -> DataFrame:
     """documents(text) → the corpus's top_k tokens with exact count and
     Count-Min estimate: (rk, tok, n_exact, cms_est)."""
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
+        F.explode(ws.tokens(F.col("text"))).alias("tok"))
     sketch = (toks
               .select(F.posexplode(_cms_positions("tok"))
                       .alias("row", "bucket"))
@@ -328,7 +329,7 @@ def ta_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TA_CMS_SQL = rf"""
 WITH tok AS (
-  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+  SELECT unnest({ws.tokens_sql("text")}) AS tok
   FROM documents),
 hashed AS (
   SELECT tok,
@@ -668,7 +669,7 @@ def hll_distinct(docs: DataFrame) -> DataFrame:
     fold into the estimator — no distinct-token stream ever shuffles."""
     toks = docs.select(
         "source",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
+        F.explode(ws.tokens(F.col("text"))).alias("tok"))
     h = _h56("tok")
     w = h.bitwiseAND(F.lit(_HLL_WMASK))
     # bit_length(w) via minimal binary-string conv; w == 0 handled first
@@ -706,7 +707,7 @@ def ta_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 TA_HLL_SQL = rf"""
 WITH tok AS (
   SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+         unnest({ws.tokens_sql("text")}) AS tok
   FROM documents),
 h AS (
   SELECT source,
@@ -751,7 +752,7 @@ def hll_registers(docs: DataFrame) -> DataFrame:
     every level of the rollup derives from."""
     toks = docs.select(
         "source",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
+        F.explode(ws.tokens(F.col("text"))).alias("tok"))
     h = _h56("tok")
     w = h.bitwiseAND(F.lit(_HLL_WMASK))
     rho = (F.when(w == 0, F.lit(_HLL_WBITS + 1))
@@ -807,7 +808,7 @@ def ta_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 TA_HLL_ROLLUP_SQL = rf"""
 WITH tok AS (
   SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+         unnest({ws.tokens_sql("text")}) AS tok
   FROM documents),
 h AS (
   SELECT source,

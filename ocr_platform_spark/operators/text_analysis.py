@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
 from ocr_platform_spark.operators.tables import load
 
@@ -25,7 +26,7 @@ from ocr_platform_spark.operators.tables import load
 # --- token + quality stats (SQL-expressible) ------------------------------
 def ta_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     return docs.select(
@@ -34,19 +35,19 @@ def ta_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tok.alias("n_tokens"),
         n_uniq.alias("n_uniq_tokens"),
         F.floor(10000.0 * n_uniq / n_tok).cast("long").alias("ttr_x10k"),
-        F.floor(F.length(F.regexp_replace("text", r"\s+", ""))
+        F.floor(F.length(ws.squash("text"))
                 * 10000.0 / n_tok).cast("long").alias("avg_tok_len_x10k"))
 
 
-TA_TOKEN_SQL = r"""
+TA_TOKEN_SQL = rf"""
 SELECT doc_id,
        length(text) AS n_chars,
-       len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-       len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) AS n_uniq_tokens,
-       CAST(floor(10000.0 * len(list_distinct(regexp_split_to_array(trim(text), '\s+')))
-                  / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS ttr_x10k,
-       CAST(floor(length(regexp_replace(text, '\s+', '', 'g')) * 10000.0
-                  / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS avg_tok_len_x10k
+       len({ws.tokens_sql("text")}) AS n_tokens,
+       len(list_distinct({ws.tokens_sql("text")})) AS n_uniq_tokens,
+       CAST(floor(10000.0 * len(list_distinct({ws.tokens_sql("text")}))
+                  / len({ws.tokens_sql("text")})) AS BIGINT) AS ttr_x10k,
+       CAST(floor(length({ws.squash_sql("text")}) * 10000.0
+                  / len({ws.tokens_sql("text")})) AS BIGINT) AS avg_tok_len_x10k
 FROM documents
 """
 
@@ -55,7 +56,7 @@ def ta_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter-grade quality signals (length bounds, repetition, stop ratio)
     — the standard web-corpus heuristics (C4/Gopher-style) as pure SQL."""
     docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     stop_hits = (F.size(F.filter(toks, lambda t: t.isin("the", "a", "and", "of", "to"))))
@@ -67,16 +68,16 @@ def ta_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(10000.0 * stop_hits / n_tok).cast("long").alias("stop_ratio_x10k"))
 
 
-TA_QUALITY_SQL = r"""
+TA_QUALITY_SQL = rf"""
 SELECT doc_id,
        length(text) < 100 AS too_short,
-       len(regexp_split_to_array(trim(text), '\s+')) > 0 AS nonempty,
-       CAST(floor(10000.0 * len(list_distinct(regexp_split_to_array(trim(text), '\s+')))
-                  / len(regexp_split_to_array(trim(text), '\s+'))) < 3000 AS BOOLEAN)
+       len({ws.tokens_sql("text")}) > 0 AS nonempty,
+       CAST(floor(10000.0 * len(list_distinct({ws.tokens_sql("text")}))
+                  / len({ws.tokens_sql("text")})) < 3000 AS BOOLEAN)
            AS repetitive,
-       CAST(floor(10000.0 * len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+       CAST(floor(10000.0 * len(list_filter({ws.tokens_sql("text")},
                                             t -> t IN ('the','a','and','of','to')))
-                  / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
+                  / len({ws.tokens_sql("text")})) AS BIGINT)
            AS stop_ratio_x10k
 FROM documents
 """
@@ -100,9 +101,9 @@ def gopher_checks(text: F.Column) -> tuple[dict[str, F.Column],
     Shared by ``ta_gopher_quality`` (documents table) and
     ``plans/corpus_job`` (extracted crawl text) so the filter thresholds
     stay single-sourced."""
-    toks = F.split(F.trim(text), r"\s+")
+    toks = ws.tokens(text)
     n_tok = F.size(toks)
-    n_chars_in_toks = F.length(F.regexp_replace(text, r"\s+", ""))
+    n_chars_in_toks = F.length(ws.squash(text))
     mean_wl_x10k = F.floor(10000.0 * n_chars_in_toks / n_tok)
     n_sym = (F.length(text)
              - F.length(F.regexp_replace(text, r"[#…]", "")))
@@ -176,9 +177,9 @@ def gopher_sql_ctes(src: str, key: str = "doc_id") -> str:
     single-sourced exactly like the Spark side (``gopher_checks``)."""
     return rf"""g_t AS (
   SELECT {key},
-         regexp_split_to_array(trim(text), '\s+') AS toks,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tok,
-         length(regexp_replace(text, '\s+', '', 'g')) AS n_chars,
+         {ws.tokens_sql("text")} AS toks,
+         len({ws.tokens_sql("text")}) AS n_tok,
+         length({ws.squash_sql("text")}) AS n_chars,
          length(text) - length(regexp_replace(text, '[#…]', '', 'g')) AS n_sym,
          regexp_split_to_array(text, '\n') AS lines,
          text
@@ -192,10 +193,10 @@ g_m AS (
          len(list_intersect(list_distinct(toks),
              {_SQL_STOPLIST})) AS stopd,
          floor(10000.0 * len(list_filter(lines,
-               l -> list_contains({_SQL_BULLETS}, substr(trim(l), 1, 1))))
+               l -> list_contains({_SQL_BULLETS}, substr(trim(l, ' '), 1, 1))))
                / len(lines)) AS bulletr,
          floor(10000.0 * len(list_filter(lines,
-               l -> ends_with(trim(l), '…') OR ends_with(trim(l), '...')))
+               l -> ends_with(trim(l, ' '), '…') OR ends_with(trim(l, ' '), '...')))
                / len(lines)) AS ellipsisr
   FROM g_t)"""
 
@@ -226,12 +227,12 @@ FROM g_m
 def ta_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-form md5 fingerprint — the exact-dedup key at scale."""
     docs = load(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    norm = ws.norm(F.col("text"))
     return docs.select("doc_id", F.md5(F.encode(norm, "UTF-8")).alias("fp"))
 
 
-TA_FINGERPRINT_SQL = r"""
-SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
+TA_FINGERPRINT_SQL = rf"""
+SELECT doc_id, md5({ws.norm_sql("text")}) AS fp
 FROM documents
 """
 
@@ -265,7 +266,7 @@ def ta_bpe_tokens(spark: SparkSession, sf_dir: str, *,
 
         assert_fixture_scale(sf_dir, "ta_bpe_tokens")
     docs = load(spark, sf_dir, "documents")
-    n_ws = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_ws = F.size(ws.tokens(F.col("text")))
     return (docs.select("doc_id",
                         bpe_count_udf("text").alias("n_bpe_tokens"),
                         n_ws.alias("n_ws"))
@@ -341,7 +342,7 @@ _SENT_ENDS = "[.!?]+"
 
 
 def readability(docs: DataFrame) -> DataFrame:
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     n_words = F.size(toks).cast("long")
     ends = (F.size(F.split(F.col("text"), _SENT_ENDS)) - 1).cast("long")
     n_sent = F.greatest(ends, F.lit(1).cast("long"))
@@ -364,16 +365,16 @@ def ta_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     return readability(load(spark, sf_dir, "documents"))
 
 
-TA_READABILITY_SQL = r"""
+TA_READABILITY_SQL = rf"""
 WITH f AS (
   SELECT doc_id,
-         CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
+         CAST(len({ws.tokens_sql("text")}) AS BIGINT)
              AS n_words,
          CAST(greatest(
              len(regexp_split_to_array(text, '[.!?]+')) - 1, 1)
              AS BIGINT) AS n_sentences,
          CAST(list_sum(list_transform(
-             regexp_split_to_array(trim(text), '\s+'),
+             {ws.tokens_sql("text")},
              w -> greatest(len(regexp_split_to_array(
                       lower(w), '[aeiouy]+')) - 1, 1)))
              AS BIGINT) AS n_syllables
@@ -400,7 +401,7 @@ WINNOW_W = 16   # window length (grams)
 
 def ta_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    norm = ws.norm(F.col("text"))
     d = docs.select("doc_id", norm.alias("norm")).filter(
         F.length("norm") >= WINNOW_K + WINNOW_W - 1)
     grams = F.expr(
@@ -418,9 +419,9 @@ def ta_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 TA_WINNOW_SQL = rf"""
 WITH d AS (
   SELECT doc_id,
-         lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS norm
+         {ws.norm_sql("text")} AS norm
   FROM documents
-  WHERE length(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
+  WHERE length({ws.norm_sql("text")})
         >= {WINNOW_K + WINNOW_W - 1}),
 h AS (
   SELECT doc_id,
@@ -649,7 +650,7 @@ def ta_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation collapses each doc's grams map-side, so the
     shuffle carries one row per DISTINCT gram per doc."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     base = (docs.filter(F.size(toks) >= 2)
             .select("doc_id", toks.alias("toks"), F.size(toks).alias("n")))
 
@@ -671,12 +672,12 @@ def ta_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return uni.join(bi, "doc_id")
 
 
-TA_REPETITION_SQL = """
+TA_REPETITION_SQL = f"""
 WITH base AS (
     SELECT doc_id,
-           regexp_split_to_array(trim(text), '\\s+') AS toks
+           {ws.tokens_sql("text")} AS toks
     FROM documents
-    WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 2
+    WHERE len({ws.tokens_sql("text")}) >= 2
 ), uni AS (
     SELECT doc_id,
            CAST(floor(10000.0 * MAX(c) / ANY_VALUE(n)) AS BIGINT)
@@ -734,7 +735,7 @@ _LM_TRAIN_MOD, _LM_TRAIN_RES = 10, 0    # held-in reference slice
 def _bigram_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, text) → one row per adjacent token pair, built
     with slice+arrays_zip so the pairing never leaves the JVM row."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws.tokens(F.col("text"))
     n = F.size(toks)
     pairs = F.arrays_zip(F.slice(toks, 1, n - 1).alias("w1"),
                          F.slice(toks, 2, n - 1).alias("w2"))
@@ -845,9 +846,9 @@ def cx_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared oracle fragments — ONE copy of the tokenize/zip CTEs and of
 # the model estimator (the SQL mirror of _bigram_model), composed by
 # both TA_LM_SQL and CX_DSIR_SQL.
-_LM_BG_CTES = r"""toks AS (
+_LM_BG_CTES = rf"""toks AS (
   SELECT doc_id, lang,
-         regexp_split_to_array(trim(text), '\s+') AS t
+         {ws.tokens_sql("text")} AS t
   FROM documents),
 bg AS (
   -- two same-length unnests in one SELECT zip positionally in DuckDB:
@@ -857,8 +858,7 @@ bg AS (
          unnest(t[2:len(t)]) AS w2
   FROM toks),
 train AS (SELECT * FROM bg
-          WHERE doc_id % {mod} = {res})""".format(
-    mod=_LM_TRAIN_MOD, res=_LM_TRAIN_RES)
+          WHERE doc_id % {_LM_TRAIN_MOD} = {_LM_TRAIN_RES})"""
 
 
 def _model_ctes(name: str, src: str) -> str:

@@ -33,11 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.tables import load
-
-
-def _toks():
-    return F.split(F.trim(F.col("text")), r"\s+")
 
 
 # --- host/domain statistics (RefinedWeb/CCNet-style corpus census) --------
@@ -48,7 +45,7 @@ def ta_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     per = docs.select(
         "source", "lang",
-        F.size(_toks()).alias("n_tok"),
+        F.size(ws.tokens(F.col("text"))).alias("n_tok"),
         F.col("n_chars").cast("long").alias("n_chars"),
         F.md5("text").alias("th"))
     return (per.groupBy("source").agg(
@@ -61,15 +58,15 @@ def ta_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("mean_tokens_x10k")))
 
 
-TA_HOST_STATS_SQL = r"""
+TA_HOST_STATS_SQL = rf"""
 SELECT source,
        count(*) AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
+       CAST(sum(len({ws.tokens_sql("text")})) AS BIGINT)
            AS total_tokens,
        count(DISTINCT lang) AS n_langs,
        count(*) - count(DISTINCT md5(text)) AS n_exact_dup_docs,
-       CAST(floor(10000.0 * sum(len(regexp_split_to_array(trim(text), '\s+')))
+       CAST(floor(10000.0 * sum(len({ws.tokens_sql("text")}))
                   / count(*)) AS BIGINT) AS mean_tokens_x10k
 FROM documents
 GROUP BY source
@@ -120,7 +117,7 @@ def _shingles(n: int):
     """Word n-gram array, empty when the doc has fewer than n tokens.
     (Spark's sequence(1, 0) DESCENDS to [1, 0] — the when() guard is
     load-bearing, not style.)"""
-    toks = _toks()
+    toks = ws.tokens(F.col("text"))
     return F.when(
         F.size(toks) >= n,
         F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)),
@@ -153,9 +150,9 @@ def cx_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("contaminated")))
 
 
-CX_DECONTAMINATE_SQL = r"""
+CX_DECONTAMINATE_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
+  SELECT doc_id, {ws.tokens_sql("text")} AS ws
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -189,7 +186,7 @@ def dd_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per span — so hot boilerplate spans collapse map-side instead of
     sorting inside one window partition."""
     docs = load(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = ws.tokens(F.col("text"))
     n_chunks = F.ceil(F.size(toks) / F.lit(float(_SPAN_W))).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(1), n_chunks),
@@ -217,9 +214,9 @@ def dd_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("clean_text", F.lit("")).alias("clean_text")))
 
 
-DD_SPAN_DEDUP_SQL = r"""
+DD_SPAN_DEDUP_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
+  SELECT doc_id, {ws.tokens_sql("text")} AS ws
   FROM documents),
 ch AS (
   SELECT doc_id, i - 1 AS pos,
@@ -256,10 +253,10 @@ def ta_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit mass and word lengths far from prose norms, with a capped
     length bonus. Pure projection; all integer fixed-point."""
     docs = load(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = ws.tokens(F.col("text"))
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
-    n_chars_in_toks = F.length(F.regexp_replace("text", r"\s+", ""))
+    n_chars_in_toks = F.length(ws.squash("text"))
     n_digits = (F.length("text")
                 - F.length(F.regexp_replace("text", r"[0-9]", "")))
     ttr = F.floor(10000.0 * n_uniq / n_tok)
@@ -281,25 +278,25 @@ def ta_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         (score >= 12000).alias("quality_pass"))
 
 
-TA_QUALITY_MODEL_SQL = r"""
+TA_QUALITY_MODEL_SQL = rf"""
 WITH f AS (
   SELECT doc_id,
          CAST(floor(10000.0 * len(list_distinct(
-                  regexp_split_to_array(trim(text), '\s+')))
-              / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
+                  {ws.tokens_sql("text")}))
+              / len({ws.tokens_sql("text")})) AS BIGINT)
              AS ttr_x10k,
          CAST(floor(10000.0 * len(list_filter(
-                  regexp_split_to_array(trim(text), '\s+'),
+                  {ws.tokens_sql("text")},
                   t -> t IN ('the','a','and','of','to')))
-              / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
+              / len({ws.tokens_sql("text")})) AS BIGINT)
              AS stop_x10k,
-         CAST(floor(10000.0 * length(regexp_replace(text, '\s+', '', 'g'))
-              / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
+         CAST(floor(10000.0 * length({ws.squash_sql("text")})
+              / len({ws.tokens_sql("text")})) AS BIGINT)
              AS mean_wl_x10k,
          CAST(floor(10000.0 * (length(text)
                   - length(regexp_replace(text, '[0-9]', '', 'g')))
               / greatest(length(text), 1)) AS BIGINT) AS digit_x10k,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
+         len({ws.tokens_sql("text")}) AS n_tok
   FROM documents)
 SELECT doc_id, ttr_x10k, stop_x10k, mean_wl_x10k, digit_x10k,
        CAST(3 * ttr_x10k + 6 * stop_x10k - 2 * digit_x10k
@@ -429,7 +426,7 @@ def ta_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the long tail shuffles; at this corpus size the whole vocab fits
     one broadcast, which is what AQE picks."""
     docs = load(spark, sf_dir, "documents")
-    toks = (docs.select("doc_id", F.explode(_toks()).alias("tok")))
+    toks = (docs.select("doc_id", F.explode(ws.tokens(F.col("text"))).alias("tok")))
     vocab = toks.groupBy("tok").agg(F.count("*").alias("tf"))
     return (toks.join(vocab, "tok")
             .groupBy("doc_id")
@@ -438,10 +435,10 @@ def ta_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .cast("long").alias("freq_score_x10k")))
 
 
-TA_FREQ_SCORE_SQL = r"""
+TA_FREQ_SCORE_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+         unnest({ws.tokens_sql("text")}) AS tok
   FROM documents),
 vocab AS (SELECT tok, count(*) AS tf FROM toks GROUP BY tok)
 SELECT t.doc_id,
@@ -466,7 +463,7 @@ def cx_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     its result broadcasts back onto the corpus — the corpus itself never
     shuffles."""
     docs = load(spark, sf_dir, "documents")
-    per_doc = docs.select("doc_id", "source", F.size(_toks()).alias("n_tok"))
+    per_doc = docs.select("doc_id", "source", F.size(ws.tokens(F.col("text"))).alias("n_tok"))
     per_src = per_doc.groupBy("source").agg(
         F.sum("n_tok").cast("long").alias("src_tokens"))
     totals = per_src.agg(
@@ -487,10 +484,10 @@ def cx_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "source", "n_tok", "rate_x10k", "coin_x10k"))
 
 
-CX_MIX_SQL = r"""
+CX_MIX_SQL = rf"""
 WITH per_doc AS (
   SELECT doc_id, source,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
+         len({ws.tokens_sql("text")}) AS n_tok
   FROM documents),
 per_src AS (
   SELECT source, CAST(sum(n_tok) AS BIGINT) AS src_tokens
@@ -530,7 +527,7 @@ def cx_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bucket = F.pmod(F.col("doc_id"), F.lit(_PACK_BUCKETS))
     per = docs.select("doc_id", bucket.alias("bucket"),
-                      F.size(_toks()).alias("n_tok"))
+                      F.size(ws.tokens(F.col("text"))).alias("n_tok"))
     w = (Window.partitionBy("bucket").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     start = F.coalesce(F.sum("n_tok").over(w), F.lit(0))
@@ -542,10 +539,10 @@ def cx_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("long").alias("offset_in_seq")))
 
 
-CX_PACK_SQL = r"""
+CX_PACK_SQL = rf"""
 WITH per AS (
   SELECT doc_id, doc_id % 32 AS bucket,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
+         len({ws.tokens_sql("text")}) AS n_tok
   FROM documents)
 SELECT doc_id, bucket, n_tok,
        CAST(coalesce(sum(n_tok) OVER (PARTITION BY bucket ORDER BY doc_id
@@ -641,7 +638,7 @@ def chunk_passages(docs: DataFrame) -> DataFrame:
     chunk_idx, n_chunk_tokens, chunk_md5). Every doc emits >= 1 chunk
     (never-drop); the last chunk is the only one shorter than
     _CHUNK_TOK."""
-    toks = _toks()
+    toks = ws.tokens(F.col("text"))
     last_idx = F.expr(          # ceil((n_tok - CHUNK) / STRIDE), >= 0
         f"(greatest(n_tok - {_CHUNK_TOK}, 0) + {_CHUNK_STRIDE - 1})"
         f" DIV {_CHUNK_STRIDE}")
@@ -666,7 +663,7 @@ def cx_chunk_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CX_CHUNK_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
+  SELECT doc_id, {ws.tokens_sql("text")} AS tk
   FROM documents),
 per AS (
   SELECT doc_id, tk, len(tk) AS n_tok,

@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.dedup import minhash_pairs
 from ocr_platform_spark.operators.text_analysis import (
     GOPHER_SQL_PASS, gopher_checks, gopher_pass, gopher_sql_ctes)
@@ -137,9 +138,9 @@ def url_gate(df: DataFrame) -> DataFrame:
 
 def canonical_fp(text: F.Column) -> F.Column:
     """The exact-dedup fingerprint — ONE definition shared by the batch
-    plan, the streaming top-up, and (textually) the DuckDB oracle."""
-    return F.md5(F.encode(
-        F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")), "UTF-8"))
+    plan and the streaming top-up; the DuckDB oracle hashes its twin,
+    ``whitespace.norm_sql``."""
+    return F.md5(F.encode(ws.norm(text), "UTF-8"))
 
 
 def derive_curation_cols(ext: DataFrame) -> DataFrame:
@@ -320,7 +321,7 @@ gated AS (
 {gopher_sql_ctes('gated', 'url')},
 quality AS (
   SELECT g.url, g.lang, g.text, g.lang_det, g.host, m.n_tok,
-         md5(lower(regexp_replace(trim(g.text), '\s+', ' ', 'g'))) AS fp,
+         md5({ws.norm_sql("g.text")}) AS fp,
          CASE WHEN g.host IN ('{EXACT_HOST}', '{NEAR_HOST}')
               THEN 1 ELSE 0 END AS host_rank
   FROM gated g JOIN g_m m ON m.url = g.url

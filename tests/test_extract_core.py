@@ -232,10 +232,11 @@ class TestWidgetChrome:
 
     def test_widget_text_is_chrome_and_never_swallows(self):
         from ocr_platform_spark.extract.html_blocks import parse_blocks
+        from tests.test_fast_scanner import stdlib_blocks
 
         for html, keep, drop in self.CASES:
-            fast = [b.text for b in parse_blocks(html, engine="fast")]
-            std = [b.text for b in parse_blocks(html, engine="stdlib")]
+            fast = [b.text for b in parse_blocks(html)]
+            std = [b.text for b in stdlib_blocks(html)]
             assert fast == std, html
             joined = " ".join(fast)
             assert keep in joined, html

@@ -1,10 +1,10 @@
 """Differential test: fast regex scanner ≡ stdlib html.parser drive.
 
-Both engines feed the same _BlockParser sink; this asserts the resulting
-block lists are field-for-field identical over (a) the full synthetic
-corpus, (b) every golden fixture input, (c) a battery of malformed-HTML
-edge cases. Byte-identical extraction therefore cannot depend on which
-engine ran.
+``parse_blocks`` and ``stdlib_blocks`` (the html.parser drive, kept here
+as the test reference) feed the same _BlockParser sink; this asserts the
+resulting block lists are field-for-field identical over (a) the full
+synthetic corpus, (b) every golden fixture input, (c) a battery of
+malformed-HTML edge cases.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import dataclasses
 import pytest
 
 from ocr_platform_spark.datagen import gen_document
-from ocr_platform_spark.extract.html_blocks import parse_blocks
+from ocr_platform_spark.extract.html_blocks import _BlockParser, parse_blocks
 
 EDGE_CASES = [
     "",
@@ -75,10 +75,23 @@ EDGE_CASES = [
 ]
 
 
+def stdlib_blocks(html):
+    """``parse_blocks`` with stdlib html.parser driving the same sink."""
+    p = _BlockParser()
+    p.feed(html)
+    p.close()
+    for i, b in enumerate(p.blocks):
+        b.block_id = i
+    return p.blocks
+
+
+ENGINES = {"fast": parse_blocks, "stdlib": stdlib_blocks}
+
+
 def _norm_of(html, engine):
     """Blocks as dicts, or the exception type — engines must fail alike."""
     try:
-        return [dataclasses.asdict(b) for b in parse_blocks(html, engine=engine)]
+        return [dataclasses.asdict(b) for b in ENGINES[engine](html)]
     except Exception as e:
         return type(e).__name__
 
@@ -97,8 +110,8 @@ def test_corpus_identical():
     for i in range(400):
         d = gen_document(i, 42)
         html = d["html"].decode("utf-8", errors="replace")
-        fast = _norm(parse_blocks(html, engine="fast"))
-        std = _norm(parse_blocks(html, engine="stdlib"))
+        fast = _norm(parse_blocks(html))
+        std = _norm(stdlib_blocks(html))
         assert fast == std, f"doc {i} ({d['url']}) diverged"
 
 
@@ -106,8 +119,8 @@ def test_corpus_identical_alt_seed():
     for i in range(100):
         d = gen_document(i, 20260817)
         html = d["html"].decode("utf-8", errors="replace")
-        assert _norm(parse_blocks(html, engine="fast")) == \
-            _norm(parse_blocks(html, engine="stdlib")), f"doc {i}"
+        assert _norm(parse_blocks(html)) == \
+            _norm(stdlib_blocks(html)), f"doc {i}"
 
 
 def test_golden_inputs_identical():
@@ -122,8 +135,8 @@ def test_golden_inputs_identical():
             html = rec.get("html") or rec.get("input_html")
             if not html:
                 continue
-            assert _norm(parse_blocks(html, engine="fast")) == \
-                _norm(parse_blocks(html, engine="stdlib"))
+            assert _norm(parse_blocks(html)) == \
+                _norm(stdlib_blocks(html))
 
 
 # --- hypothesis fuzz: arbitrary tag-soup must parse identically -----------
@@ -166,7 +179,7 @@ def test_pathological_inputs_stay_linear():
         "unterminated_comment": "<!--" + "<p>y</p>" * 20000,
     }
     for name, html in cases.items():
-        for eng in ("fast", "stdlib"):
+        for eng, parse in ENGINES.items():
             t0 = time.time()
-            parse_blocks(html, engine=eng)
+            parse(html)
             assert time.time() - t0 < 10, f"{name}/{eng} too slow"

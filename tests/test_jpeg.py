@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from ocr_platform_spark.functions.jpeg import (
-    MAX_PIXELS, JpegError, decode_jpeg, encode_jpeg)
+    _DCT, MAX_PIXELS, JpegError, _idct, decode_jpeg, encode_jpeg)
 
 
 class TestRoundTrip:
@@ -56,6 +56,13 @@ class TestRoundTrip:
         b = encode_jpeg(31, 24, 3, img.tobytes())
         assert a == b
         assert decode_jpeg(a) == decode_jpeg(b)
+
+    def test_idct_matches_matmul_reference(self):
+        """The decoder's fixed-order IDCT equals the basis product it
+        replaces to within float64 rounding."""
+        blocks = np.random.default_rng(5).normal(0, 200, size=(500, 8, 8))
+        want = np.stack([_DCT.T @ b @ _DCT for b in blocks])
+        np.testing.assert_allclose(_idct(blocks), want, rtol=0, atol=1e-9)
 
 
 class TestHostilePayloads:

@@ -3,9 +3,10 @@
 BASELINE.json mandates 'no per-row Python' (SURVEY.md §4.2.2) — all Python
 execution must go through Arrow-batched APIs (mapInPandas / mapInArrow /
 pandas_udf / applyInPandas). The first test greps the package source for
-the forbidden constructs, the second pins the persisted-relation lifecycle
-and the third keeps every per-row kernel on the one Arrow row loop,
-``functions/spark_udfs.map_rows``.
+the forbidden constructs, the second pins the persisted-relation lifecycle,
+the third keeps every per-row kernel on the one Arrow row loop,
+``functions/spark_udfs.map_rows``, and the fourth keeps the whitespace rule
+in ``functions/whitespace.py``.
 """
 
 from __future__ import annotations
@@ -97,4 +98,29 @@ def test_every_map_in_pandas_is_map_rows_or_named():
                           for call, line in _attr_calls(scope)
                           if call == "mapInPandas"
                           and (rel, name) not in OWN_ARROW_LOOP]
+    assert not offenders, "\n".join(sorted(offenders))
+
+
+# Spark's split(trim(text), '\s+') spelled out: a Spark \s pattern, a quoted
+# SQL \s, a Python replica or Java's \s class written as a literal
+WHITESPACE_COPY = re.compile(
+    r"""F\.(?:split|regexp_replace)\([^\n]*?r?["']\\s"""
+    r"|'\\{1,2}s"
+    r"""|re\.split\(r"\\s"""
+    r"|\\t\\n\\(?:x0b|v)")
+
+
+def test_whitespace_rule_only_in_whitespace_module():
+    """Every tokenizer, canonical form and characters-in-tokens count
+    builds on functions/whitespace.py, the one place the rule and its
+    DuckDB and Python twins are written."""
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "functions/whitespace.py":
+            continue
+        text = path.read_text()
+        offenders += [f"{rel}:{text[:m.start()].count(chr(10)) + 1} — "
+                      f"{m.group(0)!r}"
+                      for m in WHITESPACE_COPY.finditer(text)]
     assert not offenders, "\n".join(sorted(offenders))

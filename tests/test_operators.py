@@ -27,27 +27,49 @@ SPLIT_PROBES = [
     "windows line\r\nendings",
     "",
     "   ",
+    " a \x0b\x0b b ",
+    "no\xa0break space",
+    "line\u2028separator",
 ]
 
 
-def test_oracle_split_matches_spark(spark):
-    """The DuckDB oracles' shared tokenizer, spark_split_sql, splits like
-    Spark's ``split(trim(text), '\\s+')`` on the whitespace the two
-    engines' defaults disagree on."""
+def _duckdb_probes():
     import duckdb
-    from pyspark.sql import functions as F
 
-    from ocr_platform_spark.operators.dedup import spark_split_sql
+    con = duckdb.connect()
+    con.execute("CREATE TABLE probes (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO probes VALUES (?, ?)",
+                    list(enumerate(SPLIT_PROBES)))
+    return con
+
+
+@pytest.mark.parametrize("op", ["tokens", "norm", "squash"])
+def test_whitespace_twins_match_spark(spark, op):
+    """Each whitespace operation's DuckDB and Python twins give Spark's
+    value on the whitespace the engines' defaults disagree on."""
+    from ocr_platform_spark.functions import whitespace as ws
 
     rows = list(enumerate(SPLIT_PROBES))
     want = dict(spark.createDataFrame(rows, "i int, text string")
-                .select("i", F.split(F.trim("text"), r"\s+")).collect())
-    con = duckdb.connect()
-    con.execute("CREATE TABLE probes (i INTEGER, text VARCHAR)")
-    con.executemany("INSERT INTO probes VALUES (?, ?)", rows)
-    got = dict(con.execute(
-        f"SELECT i, {spark_split_sql('text')} FROM probes").fetchall())
-    assert got == want
+                .select("i", getattr(ws, op)("text")).collect())
+    sql = getattr(ws, f"{op}_sql")("text")
+    got_sql = dict(_duckdb_probes().execute(
+        f"SELECT i, {sql} FROM probes").fetchall())
+    py = getattr(ws, f"{op}_py")
+    assert got_sql == want
+    assert {i: py(t) for i, t in rows} == want
+
+
+def test_py_split_sql_matches_str_split():
+    """The simhash oracle's tokenizer splits like Python's str.split(),
+    over a class that is exactly str.isspace()."""
+    from ocr_platform_spark.functions import whitespace as ws
+
+    assert set(ws.PY_SPACE) == {chr(i) for i in range(0x110000)
+                                if chr(i).isspace()}
+    got = dict(_duckdb_probes().execute(
+        f"SELECT i, {ws.py_split_sql('text')} FROM probes").fetchall())
+    assert got == {i: t.split() for i, t in enumerate(SPLIT_PROBES)}
 
 
 def test_minhash_lsh_vs_bruteforce(spark):
