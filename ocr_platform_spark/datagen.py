@@ -15,12 +15,19 @@ headings and (1)/1./1) footnote markers, optional footnote block, optional
 page number in Western or Eastern-Arabic digits, plus boilerplate chrome
 (nav/sidebar/footer/script) for the classifier to strip, and ~2% malformed
 documents to exercise the error envelope.
+
+This module is the one place the package's synthetic inputs are defined:
+the pages and media tables, the adversarial pages, and the corpora of the
+structured-extraction kernels (FIXTURES.md §5 maps each to its queries).
+``sources/pages.generated_df`` turns any of them into a DataFrame.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import random
+import re
 
 # Zipf-skewed domain pool: first domains get most urls AND bigger pages —
 # exercises the salted-skew repartition path (SURVEY.md §4.2.1).
@@ -414,3 +421,348 @@ def adversarial_pages() -> list[dict]:
              "text": "",
              "lang": "ar" if "rtl" in url or "multi" in url else "en"}
             for i, (url, html) in enumerate(pages)]
+
+
+# --------------------------------------------------------------------------
+# Inputs of the structured-extraction kernels, each a pure function of the
+# row index. The metadata, table and microdata kernels read the pages
+# above with an md5-menu block injected (``gen_augmented``); the feed,
+# code-page and image-twin corpora are their own documents.
+# --------------------------------------------------------------------------
+
+def inject_after(html: bytes | None, tag: str,
+                 block: str) -> bytes | None:
+    """``html`` with ``block`` inserted right after the first ``tag``.
+    Payloads without that tag (empty/garbage rows) pass through
+    untouched, so the error envelope stays live downstream."""
+    if html is None:
+        return None
+    text = bytes(html).decode("utf-8", "replace")
+    if tag not in text:
+        return html
+    return text.replace(tag, tag + block, 1).encode("utf-8")
+
+
+def gen_augmented(doc_index: int, augment, seed: int = 42) -> dict:
+    """Page ``doc_index`` with its html replaced by
+    ``augment(url, html)`` (``augment_html``, ``augment_html_tables`` or
+    ``augment_html_micro``)."""
+    d = gen_document(doc_index, seed)
+    d["html"] = augment(d["url"], d["html"])
+    return d
+
+
+_PAGE_SUFFIX = re.compile(r"/page/\d+$")
+
+
+def meta_block(url: str) -> str:
+    """The deterministic per-url head block. md5 hex digits drive the
+    variant menu; the embedded value is hex so it never collides with
+    either quote style."""
+    h = hashlib.md5(url.encode("utf-8")).hexdigest()
+    d = [int(c, 16) for c in h[:10]]
+    val = "Book " + h[10:16]
+    parts: list[str] = []
+    if d[0] < 14:                               # og:title 14/16
+        name = "META" if d[6] < 4 else "meta"
+        q = "'" if d[2] < 8 else '"'
+        attrs = (f"property={q}og:title{q} content={q}{val}{q}"
+                 if d[1] < 8 else
+                 f"content={q}{val}{q} property={q}og:title{q}")
+        parts.append(f"<{name} {attrs}>")
+    if d[3] < 15:                               # og:type 15/16
+        typ = "book" if d[3] < 8 else "article"
+        parts.append(f'<meta property="og:type" content="{typ}"/>')
+    if d[4] < 12:                               # canonical 12/16
+        canon = _PAGE_SUFFIX.sub("", url)
+        attrs = (f'rel="canonical" href="{canon}"' if d[5] < 8
+                 else f'href="{canon}" rel="canonical"')
+        parts.append(f"<link {attrs}/>" if d[7] < 8
+                     else f"<link {attrs}>")
+    if d[8] < 6:                                # JSON-LD 6/16
+        jt = "Book" if d[9] < 8 else "Article"
+        parts.append('<script type="application/ld+json">'
+                     f'{{"@type": "{jt}", "name": "{val}"}}</script>')
+    return "".join(parts)
+
+
+
+def augment_html(url: str, html: bytes | None) -> bytes | None:
+    """The page with its metadata block right after ``<head>``."""
+    return inject_after(html, "<head>", meta_block(url))
+
+
+def table_block(url: str) -> str:
+    """The per-url injected table markup. md5 hex digits drive the
+    variant menu; cell payloads embed hash hex so they never collide
+    with the page's own words."""
+    h = hashlib.md5(url.encode("utf-8")).hexdigest()
+    d = [int(c, 16) for c in h[:14]]
+    if d[0] >= 14:
+        return ""                                   # 2/16: no table
+    n_rows = 1 + d[1] % 3
+    n_cols = 1 + d[2] % 3
+    header = d[3] < 10
+    thead = header and d[3] < 5
+    omit = d[4] < 8                                 # omit </td> and </tr>
+    upper = d[5] < 4
+    junk = d[6] < 8
+
+    def t(name: str) -> str:
+        return name.upper() if upper else name
+
+    def cell(r: int, c: int, tag: str) -> str:
+        attrs = ' align="left" class=\'c\'' if junk and c == 0 else ""
+        body = f"c{r}x{c} {h[c % 8:c % 8 + 4]}"
+        if d[7] < 8 and r == 0 and c == 0:
+            body = f'<b>{body}</b> <a href="/x">lnk</a>'
+        if d[8] < 8 and c == n_cols - 1:
+            body += " &amp; tail"
+        if d[12] < 4 and r == n_rows - 1 and c == 0 and not header:
+            body = ""                               # empty cell
+        if d[10] < 3 and r == 0 and c == n_cols - 1:
+            body += (f"<table><tr><td>inner {h[8:11]}</td></tr>"
+                     "</table> after")
+        if d[11] < 3 and r == 0 and c == 0:
+            body += ('<script>var t = "<table><tr><td>fake</td></tr>'
+                     '</table>";</script>')
+        if d[13] < 6 and r == 0 and c == 0:
+            body += "<!-- ghost <td>never</td> -->"
+        close = "" if omit else f"</{t(tag)}>"
+        return f"<{t(tag)}{attrs}>{body}{close}"
+
+    def row(r: int, tag: str) -> str:
+        cells = "".join(cell(r, c, tag) for c in range(n_cols))
+        close = "" if omit else f"</{t('tr')}>"
+        return f"<{t('tr')}>{cells}{close}"
+
+    rows = []
+    if header:
+        hr = row(0, "th")
+        rows.append(f"<thead>{hr}</thead><tbody>" if thead else hr)
+    for r in range(1 if header else 0, n_rows):
+        rows.append(row(r, "td"))
+    if thead:
+        rows.append("</tbody>")
+    out = f"<{t('table')}>{''.join(rows)}</{t('table')}>"
+    if d[9] < 4:                                    # second table
+        out += (f"<table><tr><td>t2 {h[5:9]}</td>"
+                f"<td>t2b {h[9:12]}</td></tr></table>")
+    return out
+
+
+
+def augment_html_tables(url: str, html: bytes | None) -> bytes | None:
+    return inject_after(html, "<body>", table_block(url))
+
+
+def micro_block(url: str) -> str:
+    """Per-url injected microdata markup; md5 digits drive the menu."""
+    h = hashlib.md5(url.encode("utf-8")).hexdigest()
+    d = [int(c, 16) for c in h[:12]]
+    if d[0] >= 14:
+        return ""                                   # 2/16: no microdata
+    parts: list[str] = []
+    if d[1] < 3:                                    # orphan prop first
+        parts.append(f'<span itemprop="site">orph {h[0:3]}</span>')
+    typ = "Product" if d[2] < 8 else "Article"
+    parts.append(f'<div itemscope itemtype="https://schema.org/{typ}">')
+    name = f"Item {h[3:8]}"
+    if d[3] < 8:                                    # text prop
+        inner = (f"<b>{name}</b>" if d[4] < 6 else name)
+        parts.append(f'<span itemprop="name">{inner}</span>')
+    else:                                           # meta content prop
+        parts.append(f'<meta itemprop="name" content="{name}">')
+    if d[5] < 10:
+        parts.append(f'<a itemprop="url" href="/i/{h[6:10]}">go</a>')
+    if d[6] < 8:
+        parts.append(f'<img itemprop="image" src="/img/{h[2:6]}.png">')
+    if d[7] < 6:
+        parts.append(f'<time itemprop="date" datetime="2024-0{d[7] % 9 + 1}-01">then</time>')
+    elif d[7] < 10:
+        parts.append(f'<time itemprop="date">2024-0{d[7] % 9 + 1}-02</time>')
+    if d[8] < 5:                                    # unclosed text prop:
+        parts.append('<span itemprop="price">9'     # implied close by the
+                     )                              # next prop/scope
+    if d[9] < 4:                                    # CDATA trap in a prop
+        parts.append('<span itemprop="desc">real'
+                     '<script>var x = "<span itemprop=\'fake\'>no</span>";'
+                     "</script> tail</span>")
+    if d[10] < 4:                                   # comment trap
+        parts.append('<span itemprop="note">a<!-- <span itemprop="ghost">'
+                     "g</span> -->b</span>")
+    parts.append("</div>")
+    if d[11] < 4:                                   # second item
+        parts.append('<p itemscope><meta itemprop="name" '
+                     f'content="Second {h[9:12]}"></p>')
+    return "".join(parts)
+
+
+
+def augment_html_micro(url: str, html: bytes | None) -> bytes | None:
+    return inject_after(html, "<body>", micro_block(url))
+
+
+def feed_doc(i: int) -> tuple[str, bytes]:
+    """(url, xml bytes) for synthetic feed i — md5-menu dialect mix."""
+    url = f"https://feeds.example/f/{i}"
+    h = hashlib.md5(url.encode()).hexdigest()
+    d = [int(c, 16) for c in h[:10]]
+    atom = d[0] < 8
+    n_entries = 1 + d[1] % 3
+    parts = ['<?xml version="1.0"?>']
+    if atom:
+        parts.append('<feed xmlns="http://www.w3.org/2005/Atom">')
+        parts.append(f"<title>Feed {h[:4]}</title>")
+    else:
+        parts.append("<rss><channel>")
+        parts.append(f"<title>Chan {h[:4]}</title>")
+    for e in range(n_entries):
+        tag = "entry" if atom else "item"
+        parts.append(f"<{tag}>")
+        t = f"Post {h[e:e + 4]}"
+        if d[2] < 6 and e == 0:
+            t = f"A &amp; B {h[4:7]}"            # entity in title
+        parts.append(f"<title>{t}</title>")
+        if atom:
+            if d[3] < 12:
+                parts.append(f'<link href="https://s.example/p/{i}-{e}"/>')
+        else:
+            parts.append(f"<link>https://s.example/p/{i}-{e}</link>")
+        if d[4] < 10:
+            dt = f"2024-0{(d[4] % 9) + 1}-1{e} 00:00"
+            parts.append(f"<updated>{dt}</updated>" if atom
+                         else f"<pubDate>{dt}</pubDate>")
+        if d[5] < 3 and e == 0:
+            parts.append("<title>shadowed second title</title>")
+        if d[6] < 3 and e == n_entries - 1:
+            parts.append("<link>unclosed-tail ")  # open at next/EOF
+        parts.append(f"</{tag}>")
+    if d[7] < 3:
+        parts.append("<!-- <item><title>ghost</title></item> -->")
+    parts.append("</feed>" if atom else "</channel></rss>")
+    return url, "".join(parts).encode("utf-8")
+
+
+# the shared snippet: identical bytes across every doc that draws it, so
+# the rollup's distinct-count is LIVE (n_distinct < n_blocks somewhere)
+_SHARED_SNIPPET = ("def add(a, b):\n"
+                   "    return a + b")
+
+_LANGS = ("python", "js", "rust", "sql", "c")
+
+
+def _snippet(h: str, e: int) -> str:
+    """Deterministic multi-line snippet for (doc-hash, block) — real
+    indentation, an entity-spelled comparison, stable per (h, e)."""
+    name = h[e:e + 4]
+    return (f"for i in range(n_{name}):\n"
+            f"    if i &lt; limit:\n"
+            f"        total += w[{e}] * i\n"
+            f"    else:\n"
+            f"        break")
+
+
+
+def code_doc(i: int) -> tuple[str, bytes]:
+    """(url, html bytes) for synthetic code page i — md5-menu over
+    language placement, highlighter spans, br line breaks, leading
+    newline, traps (comment / script-in-pre / nested pre / inline
+    code / unclosed tail / empty block)."""
+    url = f"https://code.example/d/{i}"
+    h = hashlib.md5(url.encode()).hexdigest()
+    d = [int(c, 16) for c in h[:14]]
+    parts = ["<html><body><h1>Snippets</h1>",
+             "<p>Use <code>x + 1</code> inline.</p>"]   # trap: no pre
+    n_blocks = d[0] % 4                                  # 0..3
+    for e in range(n_blocks):
+        lang = _LANGS[d[2 + e] % len(_LANGS)]
+        place = d[5 + e] % 4
+        if place == 0:
+            parts.append(f'<pre class="language-{lang}">')
+            open_code = False
+        elif place == 1:
+            # multi-class, language token NOT first; hint on inner code
+            parts.append("<pre>")
+            parts.append(f'<code class="highlight lang-{lang}">')
+            open_code = True
+        elif place == 2:
+            parts.append("<pre>")                        # no hint
+            open_code = False
+        else:
+            parts.append(f"<PRE CLASS='lang-{lang.upper()}'>")
+            open_code = False
+        if d[8] < 8:
+            parts.append("\n")                 # dropped by the spec
+        if e == 0 and d[1] < 5:
+            body = _SHARED_SNIPPET
+        elif e == 1 and d[9] < 6:
+            body = "line one<br>line two<br/>line three"
+        else:
+            body = _snippet(h, e)
+        if d[10] < 8 and "def " in body:
+            body = body.replace("def ", '<span class="k">def</span> ', 1)
+        if d[10] >= 8 and "for " in body:
+            body = body.replace("for ", '<span class="k">for</span> ', 1)
+        parts.append(body)
+        if e == 0 and d[11] < 3:
+            parts.append("<!-- highlighter credit -->")
+        if e == 0 and d[12] < 3:
+            parts.append("\n<script>if (a &lt; b) { go(); }</script>")
+        if e == 1 and d[13] < 3:
+            parts.append("<pre>nested-is-markup ")
+        if open_code:
+            parts.append("</code>")
+        parts.append("</pre>")
+    if d[3] < 2:
+        parts.append("<pre></pre>")                      # empty block
+    if d[4] < 3:
+        parts.append('<pre class="language-go">func main() {')  # EOF trap
+    parts.append("</body></html>")
+    return url, "".join(parts).encode("utf-8")
+
+
+def _grid_cells(h16: str, n: int, distinct_band_rows: bool) -> list[tuple]:
+    """n deterministic (gy, gx) sample cells from a hex seed; when
+    distinct_band_rows, the cells land in rows 0/2/4 (bands 0,1,2)."""
+    from ocr_platform_spark.operators.imagedup import GRID_H, GRID_W
+
+    cells = []
+    for j in range(n):
+        gy = (2 * j) if distinct_band_rows else int(h16[2 * j], 16) % GRID_H
+        gx = int(h16[2 * j + 1], 16) % GRID_W
+        cells.append((gy, gx))
+    return cells
+
+
+def twin_doc(doc_index: int, seed: int = 42) -> dict | None:
+    """The re-hosted copy of image row ``doc_index`` (or None when the
+    row is audio/video/corrupt, fails to decode, or is unselected). Pure
+    function of the index, computed through the real decoders."""
+    from ocr_platform_spark.functions.png import encode_png
+    from ocr_platform_spark.operators.imagedup import GRID_H, GRID_W
+    from ocr_platform_spark.operators.multimodal import decode_image
+
+    mode = doc_index % 5
+    if mode not in (0, 2, 4):
+        return None
+    if doc_index % 13 == 5 or doc_index % 17 == 3:
+        return None                              # corrupt originals
+    if doc_index % 7 == 4 or (doc_index % 11 == 6):
+        return None                              # audio/video rows
+    row = gen_media(doc_index, seed)
+    try:
+        w, h, ch, px = decode_image(row["media"])
+    except Exception:
+        return None             # undecodable: skipped, like the fixture
+    px = bytearray(px)
+    if mode != 0:
+        n_cells = 1 if mode == 2 else 3
+        hseed = hashlib.md5(row["url"].encode()).hexdigest()
+        for gy, gx in _grid_cells(hseed, n_cells, mode == 4):
+            sy, sx = gy * h // GRID_H, gx * w // GRID_W
+            base = (sy * w + sx) * ch
+            for c in range(ch):
+                px[base + c] = min(255, px[base + c] + 64)
+    return {"url": f"https://cdn.example.net/m/{doc_index}.png",
+            "media": encode_png(w, h, ch, bytes(px))}

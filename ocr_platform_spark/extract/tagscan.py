@@ -11,9 +11,9 @@ tools/make_driver_fixtures.py and the differential fuzzers in
 tests/test_fuzz_scanners.py check each kernel against the stdlib.
 
 Spark-free: ``map_pages`` sits on ``functions/spark_udfs.map_rows`` (the
-package's one Arrow row loop) and ``augment_pages`` calls ``mapInPandas``
-on the DataFrame it is given, so the collectors stay unit-testable
-without a JVM.
+package's one Arrow row loop), so the collectors stay unit-testable
+without a JVM. The synthetic pages the kernels' queries read are
+generated in ``datagen``.
 """
 
 from __future__ import annotations
@@ -53,34 +53,3 @@ def map_pages(pages, scan: Callable[[str], list], schema,
         return [(u, *t) for t in scan(text)]
 
     return map_rows(pages, ["url", col], rows, schema)
-
-
-def inject_after(html: bytes | None, tag: str,
-                 block: str) -> bytes | None:
-    """``html`` with ``block`` inserted right after the first ``tag``.
-    Payloads without that tag (empty/garbage rows) pass through
-    untouched, so the error envelope stays live downstream."""
-    if html is None:
-        return None
-    text = bytes(html).decode("utf-8", "replace")
-    if tag not in text:
-        return html
-    return text.replace(tag, tag + block, 1).encode("utf-8")
-
-
-def augment_pages(pages, augment: Callable[[str, bytes | None],
-                                           bytes | None]):
-    """``pages`` with every ``html`` payload replaced by
-    ``augment(url, html)``: the one pass behind the synthetic test pages
-    of the metadata, table and microdata kernels (pagemeta.augment_html,
-    tablex.augment_html_tables, microdata.augment_html_micro)."""
-    cols = pages.columns
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["html"] = [augment(u, h)
-                           for u, h in zip(pdf["url"], pdf["html"])]
-            yield pdf
-
-    return pages.mapInPandas(gen, schema=pages.schema).select(cols)

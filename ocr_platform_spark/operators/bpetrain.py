@@ -25,7 +25,7 @@ non-overlapping leftmost application ("a a a" → "aa a", the exact
 ``_merge_word`` rule) falls out of matcher semantics. Symbols are
 ``\\Q…\\E``-quoted (with the embedded-\\E split) since symbol runs can
 carry regex metacharacters. Iteration state is cut with
-``localCheckpoint(eager=True)`` each round: the first draft used
+``session.lineage_cut`` each round: the first draft used
 persist/unpersist, which keeps the full logical lineage (iteration
 k's analyzed plan nests k regexp_replaces plus the corpus subtree) —
 measured to OOM an 8 GB driver heap before rank 48 ON A 31-ROW
@@ -52,6 +52,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ocr_platform_spark.functions.spark_udfs import map_rows
 from ocr_platform_spark.operators.tables import load
+from ocr_platform_spark.session import lineage_cut
 
 N_MERGES = 48
 END = "</w>"
@@ -83,13 +84,11 @@ def word_counts(docs: DataFrame) -> DataFrame:
 
 def train_bpe_distributed(docs: DataFrame,
                           n_merges: int = N_MERGES) -> list[tuple[str, str]]:
-    spark = docs.sparkSession
     spaced = F.concat(F.lit(" "),
                       F.array_join(F.split(F.col("word"), ""), " "),
                       F.lit(" " + END + " "))
-    vocab = (word_counts(docs)
-             .select(spaced.alias("spaced"), "n")
-             .localCheckpoint(eager=True))
+    vocab = lineage_cut(
+        word_counts(docs).select(spaced.alias("spaced"), "n"))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         syms = F.split(F.trim(F.col("spaced")), " ")
@@ -115,9 +114,8 @@ def train_bpe_distributed(docs: DataFrame,
         merges.append((l, r))
         pat = r"\s" + _rx_quote(l) + " " + _rx_quote(r) + r"(?=\s)"
         rep = " " + _rx_replacement(l + r)
-        vocab = vocab.withColumn(
-            "spaced", F.regexp_replace("spaced", pat, rep)) \
-            .localCheckpoint(eager=True)
+        vocab = lineage_cut(vocab.withColumn(
+            "spaced", F.regexp_replace("spaced", pat, rep)))
     return merges
 
 

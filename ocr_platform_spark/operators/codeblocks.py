@@ -53,14 +53,12 @@ as its md5, a projection-level swap.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (BinaryType, LongType, StringType,
+                               StructField, StructType)
 
 from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
@@ -87,85 +85,6 @@ def lang_from_class(class_attr: str | None) -> str | None:
         if m:
             return m.group(1).lower()
     return None
-
-
-# --- deterministic code-page corpus ----------------------------------------
-
-# the shared snippet: identical bytes across every doc that draws it, so
-# the rollup's distinct-count is LIVE (n_distinct < n_blocks somewhere)
-_SHARED_SNIPPET = ("def add(a, b):\n"
-                   "    return a + b")
-
-_LANGS = ("python", "js", "rust", "sql", "c")
-
-
-def _snippet(h: str, e: int) -> str:
-    """Deterministic multi-line snippet for (doc-hash, block) — real
-    indentation, an entity-spelled comparison, stable per (h, e)."""
-    name = h[e:e + 4]
-    return (f"for i in range(n_{name}):\n"
-            f"    if i &lt; limit:\n"
-            f"        total += w[{e}] * i\n"
-            f"    else:\n"
-            f"        break")
-
-
-def code_doc(i: int) -> tuple[str, bytes]:
-    """(url, html bytes) for synthetic code page i — md5-menu over
-    language placement, highlighter spans, br line breaks, leading
-    newline, traps (comment / script-in-pre / nested pre / inline
-    code / unclosed tail / empty block)."""
-    url = f"https://code.example/d/{i}"
-    h = hashlib.md5(url.encode()).hexdigest()
-    d = [int(c, 16) for c in h[:14]]
-    parts = ["<html><body><h1>Snippets</h1>",
-             "<p>Use <code>x + 1</code> inline.</p>"]   # trap: no pre
-    n_blocks = d[0] % 4                                  # 0..3
-    for e in range(n_blocks):
-        lang = _LANGS[d[2 + e] % len(_LANGS)]
-        place = d[5 + e] % 4
-        if place == 0:
-            parts.append(f'<pre class="language-{lang}">')
-            open_code = False
-        elif place == 1:
-            # multi-class, language token NOT first; hint on inner code
-            parts.append("<pre>")
-            parts.append(f'<code class="highlight lang-{lang}">')
-            open_code = True
-        elif place == 2:
-            parts.append("<pre>")                        # no hint
-            open_code = False
-        else:
-            parts.append(f"<PRE CLASS='lang-{lang.upper()}'>")
-            open_code = False
-        if d[8] < 8:
-            parts.append("\n")                 # dropped by the spec
-        if e == 0 and d[1] < 5:
-            body = _SHARED_SNIPPET
-        elif e == 1 and d[9] < 6:
-            body = "line one<br>line two<br/>line three"
-        else:
-            body = _snippet(h, e)
-        if d[10] < 8 and "def " in body:
-            body = body.replace("def ", '<span class="k">def</span> ', 1)
-        if d[10] >= 8 and "for " in body:
-            body = body.replace("for ", '<span class="k">for</span> ', 1)
-        parts.append(body)
-        if e == 0 and d[11] < 3:
-            parts.append("<!-- highlighter credit -->")
-        if e == 0 and d[12] < 3:
-            parts.append("\n<script>if (a &lt; b) { go(); }</script>")
-        if e == 1 and d[13] < 3:
-            parts.append("<pre>nested-is-markup ")
-        if open_code:
-            parts.append("</code>")
-        parts.append("</pre>")
-    if d[3] < 2:
-        parts.append("<pre></pre>")                      # empty block
-    if d[4] < 3:
-        parts.append('<pre class="language-go">func main() {')  # EOF trap
-    parts.append("</body></html>")
-    return url, "".join(parts).encode("utf-8")
 
 
 # --- collection state machine ----------------------------------------------
@@ -222,9 +141,11 @@ def page_code_blocks(pages: DataFrame) -> DataFrame:
 
 
 def code_pages_df(spark: SparkSession, n: int = CODE_DOCS) -> DataFrame:
-    rows = [code_doc(i) for i in range(n)]
-    pdf = pd.DataFrame(rows, columns=["url", "html"])
-    return spark.createDataFrame(pdf, schema="url string, html binary")
+    from ocr_platform_spark.datagen import code_doc
+    from ocr_platform_spark.sources.pages import generated_df
+
+    return generated_df(spark, n, lambda i: [code_doc(i)], StructType([
+        StructField("url", StringType()), StructField("html", BinaryType())]))
 
 
 def extract_code(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,7 +31,7 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ocr_platform_spark.functions import whitespace as ws
 from ocr_platform_spark.operators.tables import load
-from ocr_platform_spark.session import scoped_persist
+from ocr_platform_spark.session import lineage_cut, scoped_persist
 
 MINHASH_PERMS = 16
 MINHASH_BANDS = 4          # 4 rows per band
@@ -622,18 +622,6 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     exceeds max_iter — long chain-shaped clusters would otherwise silently
     get wrong keep decisions.
     """
-    spark = ids.sparkSession
-    # lineage must be cut every round (iterative plans grow exponentially).
-    # With a reliable checkpoint dir configured, use fault-tolerant
-    # checkpoint() — localCheckpoint blocks live in executor memory, so an
-    # executor loss mid-iteration kills the job with no recompute path on a
-    # real cluster. Local mode (no dir set) keeps the fast path.
-    has_ckpt_dir = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if has_ckpt_dir \
-            else df.localCheckpoint(eager=True)
-
     edges = (pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
              .union(pairs.select(F.col("b_id").alias("src"),
                                  F.col("a_id").alias("dst"))))
@@ -657,8 +645,9 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
                                F.coalesce(F.col("nbr_label"),
                                           F.col("cluster_id")))
                        .alias("cluster_id")))
-        # eager cut → one job serves both the probe and the next round
-        stepped = _cut(stepped)
+        # lineage is cut every round (iterative plans grow exponentially);
+        # the eager cut → one job serves both the probe and the next round
+        stepped = lineage_cut(stepped)
         changed = stepped.filter("cluster_id != prev").limit(1).count()
         labels = stepped.drop("prev")
         if changed == 0:

@@ -32,12 +32,9 @@ Scale: one mapInPandas fan-out projection, zero shuffle.
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (BinaryType, LongType, StringType,
+                               StructField, StructType)
 
 from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
@@ -55,49 +52,6 @@ FEED_SCHEMA = StructType([
 _ENTRY_TAGS = ("item", "entry")
 _FIELD_TAGS = {"title": "title", "link": "link",
                "pubdate": "updated", "updated": "updated"}
-
-
-# --- deterministic feed corpus ---------------------------------------------
-
-def feed_doc(i: int) -> tuple[str, bytes]:
-    """(url, xml bytes) for synthetic feed i — md5-menu dialect mix."""
-    url = f"https://feeds.example/f/{i}"
-    h = hashlib.md5(url.encode()).hexdigest()
-    d = [int(c, 16) for c in h[:10]]
-    atom = d[0] < 8
-    n_entries = 1 + d[1] % 3
-    parts = ['<?xml version="1.0"?>']
-    if atom:
-        parts.append('<feed xmlns="http://www.w3.org/2005/Atom">')
-        parts.append(f"<title>Feed {h[:4]}</title>")
-    else:
-        parts.append("<rss><channel>")
-        parts.append(f"<title>Chan {h[:4]}</title>")
-    for e in range(n_entries):
-        tag = "entry" if atom else "item"
-        parts.append(f"<{tag}>")
-        t = f"Post {h[e:e + 4]}"
-        if d[2] < 6 and e == 0:
-            t = f"A &amp; B {h[4:7]}"            # entity in title
-        parts.append(f"<title>{t}</title>")
-        if atom:
-            if d[3] < 12:
-                parts.append(f'<link href="https://s.example/p/{i}-{e}"/>')
-        else:
-            parts.append(f"<link>https://s.example/p/{i}-{e}</link>")
-        if d[4] < 10:
-            dt = f"2024-0{(d[4] % 9) + 1}-1{e} 00:00"
-            parts.append(f"<updated>{dt}</updated>" if atom
-                         else f"<pubDate>{dt}</pubDate>")
-        if d[5] < 3 and e == 0:
-            parts.append("<title>shadowed second title</title>")
-        if d[6] < 3 and e == n_entries - 1:
-            parts.append("<link>unclosed-tail ")  # open at next/EOF
-        parts.append(f"</{tag}>")
-    if d[7] < 3:
-        parts.append("<!-- <item><title>ghost</title></item> -->")
-    parts.append("</feed>" if atom else "</channel></rss>")
-    return url, "".join(parts).encode("utf-8")
 
 
 # --- collection state machine ----------------------------------------------
@@ -169,10 +123,11 @@ def page_feeds(feeds: DataFrame) -> DataFrame:
 
 
 def feeds_df(spark: SparkSession, n: int = FEED_DOCS) -> DataFrame:
-    rows = [feed_doc(i) for i in range(n)]
-    pdf = pd.DataFrame(rows, columns=["url", "xml"])
-    return spark.createDataFrame(
-        pdf, schema="url string, xml binary")
+    from ocr_platform_spark.datagen import feed_doc
+    from ocr_platform_spark.sources.pages import generated_df
+
+    return generated_df(spark, n, lambda i: [feed_doc(i)], StructType([
+        StructField("url", StringType()), StructField("xml", BinaryType())]))
 
 
 def extract_feed(spark: SparkSession, sf_dir: str) -> DataFrame:

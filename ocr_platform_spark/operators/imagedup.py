@@ -38,8 +38,9 @@ brute-forces every pair — so the gate also pins the pigeonhole
 guarantee itself (banded join == brute force at the committed
 threshold).
 
-The corpus plants both liveness classes: doc_index % 5 == 0 decode-ok
-images gain a TRANSCODE twin (decoded pixels re-encoded losslessly as
+The corpus (datagen.twin_doc) plants both liveness classes:
+doc_index % 5 == 0 decode-ok images gain a TRANSCODE twin (decoded
+pixels re-encoded losslessly as
 PNG under a cdn.example.net url — Hamming 0, different sha256) and
 doc_index % 5 == 2 a PERTURBED twin (one sampled grid cell brightened
 before the re-encode — Hamming 1-2, still within threshold); a
@@ -56,8 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.functions.spark_udfs import map_rows
-from ocr_platform_spark.sources.pages import MEDIA_SCHEMA
+from ocr_platform_spark.sources.pages import MEDIA_SCHEMA, generated_df
 
 PHASH_DOCS = 200
 GRID_W, GRID_H = 9, 8          # 8 comparisons per row x 8 rows = 64 bits
@@ -109,68 +109,17 @@ def hamming(a: list[int], b: list[int]) -> int:
     return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
 
-# --- corpus twins -----------------------------------------------------------
-
-def _grid_cells(h16: str, n: int, distinct_band_rows: bool) -> list[tuple]:
-    """n deterministic (gy, gx) sample cells from a hex seed; when
-    distinct_band_rows, the cells land in rows 0/2/4 (bands 0,1,2)."""
-    cells = []
-    for j in range(n):
-        gy = (2 * j) if distinct_band_rows else int(h16[2 * j], 16) % GRID_H
-        gx = int(h16[2 * j + 1], 16) % GRID_W
-        cells.append((gy, gx))
-    return cells
-
-
-def twin_doc(doc_index: int, seed: int = 42) -> dict | None:
-    """The re-hosted copy of image row ``doc_index`` (or None when the
-    row is audio/video/corrupt, fails to decode, or is unselected). Pure
-    function of the index, computed through the real decoders."""
-    import hashlib
-
-    from ocr_platform_spark.datagen import gen_media
-    from ocr_platform_spark.functions.png import encode_png
-    from ocr_platform_spark.operators.multimodal import decode_image
-
-    mode = doc_index % 5
-    if mode not in (0, 2, 4):
-        return None
-    if doc_index % 13 == 5 or doc_index % 17 == 3:
-        return None                              # corrupt originals
-    if doc_index % 7 == 4 or (doc_index % 11 == 6):
-        return None                              # audio/video rows
-    row = gen_media(doc_index, seed)
-    try:
-        w, h, ch, px = decode_image(row["media"])
-    except Exception:
-        return None             # undecodable: skipped, like the fixture
-    px = bytearray(px)
-    if mode != 0:
-        n_cells = 1 if mode == 2 else 3
-        hseed = hashlib.md5(row["url"].encode()).hexdigest()
-        for gy, gx in _grid_cells(hseed, n_cells, mode == 4):
-            sy, sx = gy * h // GRID_H, gx * w // GRID_W
-            base = (sy * w + sx) * ch
-            for c in range(ch):
-                px[base + c] = min(255, px[base + c] + 64)
-    return {"url": f"https://cdn.example.net/m/{doc_index}.png",
-            "media": encode_png(w, h, ch, bytes(px))}
-
-
 def phash_media_df(spark: SparkSession, n_rows: int = PHASH_DOCS,
                    seed: int = 42) -> DataFrame:
-    """Originals + re-hosted twins, generated distributively (the
-    generator is the table, like sources.pages.media_df)."""
-    from ocr_platform_spark.datagen import gen_media
-
-    nparts = spark.sparkContext.defaultParallelism
+    """Originals + re-hosted twins (datagen.twin_doc), generated
+    distributively like sources.pages.media_df."""
+    from ocr_platform_spark.datagen import gen_media, twin_doc
 
     def rows(i):
-        tw = twin_doc(int(i), seed)
-        return [gen_media(int(i), seed)] + ([] if tw is None else [tw])
+        tw = twin_doc(i, seed)
+        return [gen_media(i, seed)] + ([] if tw is None else [tw])
 
-    return map_rows(spark.range(0, n_rows, 1, nparts), ["id"], rows,
-                    MEDIA_SCHEMA)
+    return generated_df(spark, n_rows, rows, MEDIA_SCHEMA)
 
 
 # --- hash kernel + banded LSH join -----------------------------------------

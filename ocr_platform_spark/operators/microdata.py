@@ -34,16 +34,12 @@ Scale: one mapInPandas fan-out projection, zero shuffle.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import (augment_pages, collect,
-                                                first_wins, inject_after,
-                                                map_pages)
+from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
 MICRO_DOCS = 300
 
@@ -57,54 +53,6 @@ MICRO_SCHEMA = StructType([
 
 _ATTR_VALUED = {"meta": "content", "a": "href", "link": "href",
                 "img": "src"}
-
-
-# --- deterministic microdata menu ------------------------------------------
-
-def micro_block(url: str) -> str:
-    """Per-url injected microdata markup; md5 digits drive the menu."""
-    h = hashlib.md5(url.encode("utf-8")).hexdigest()
-    d = [int(c, 16) for c in h[:12]]
-    if d[0] >= 14:
-        return ""                                   # 2/16: no microdata
-    parts: list[str] = []
-    if d[1] < 3:                                    # orphan prop first
-        parts.append(f'<span itemprop="site">orph {h[0:3]}</span>')
-    typ = "Product" if d[2] < 8 else "Article"
-    parts.append(f'<div itemscope itemtype="https://schema.org/{typ}">')
-    name = f"Item {h[3:8]}"
-    if d[3] < 8:                                    # text prop
-        inner = (f"<b>{name}</b>" if d[4] < 6 else name)
-        parts.append(f'<span itemprop="name">{inner}</span>')
-    else:                                           # meta content prop
-        parts.append(f'<meta itemprop="name" content="{name}">')
-    if d[5] < 10:
-        parts.append(f'<a itemprop="url" href="/i/{h[6:10]}">go</a>')
-    if d[6] < 8:
-        parts.append(f'<img itemprop="image" src="/img/{h[2:6]}.png">')
-    if d[7] < 6:
-        parts.append(f'<time itemprop="date" datetime="2024-0{d[7] % 9 + 1}-01">then</time>')
-    elif d[7] < 10:
-        parts.append(f'<time itemprop="date">2024-0{d[7] % 9 + 1}-02</time>')
-    if d[8] < 5:                                    # unclosed text prop:
-        parts.append('<span itemprop="price">9'     # implied close by the
-                     )                              # next prop/scope
-    if d[9] < 4:                                    # CDATA trap in a prop
-        parts.append('<span itemprop="desc">real'
-                     '<script>var x = "<span itemprop=\'fake\'>no</span>";'
-                     "</script> tail</span>")
-    if d[10] < 4:                                   # comment trap
-        parts.append('<span itemprop="note">a<!-- <span itemprop="ghost">'
-                     "g</span> -->b</span>")
-    parts.append("</div>")
-    if d[11] < 4:                                   # second item
-        parts.append('<p itemscope><meta itemprop="name" '
-                     f'content="Second {h[9:12]}"></p>')
-    return "".join(parts)
-
-
-def augment_html_micro(url: str, html: bytes | None) -> bytes | None:
-    return inject_after(html, "<body>", micro_block(url))
 
 
 # --- collection state machine (production side) ----------------------------
@@ -182,10 +130,12 @@ def extract_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
     tools/make_driver_fixtures.py:extract_microdata_fixture re-parses
     the same augmented pages with stdlib html.parser driving an
     independently written collector."""
-    from ocr_platform_spark.sources.pages import pages_df
+    from ocr_platform_spark.datagen import augment_html_micro, gen_augmented
+    from ocr_platform_spark.sources.pages import PAGES_SCHEMA, generated_df
 
-    return page_microdata(augment_pages(pages_df(spark, MICRO_DOCS),
-                                        augment_html_micro))
+    return page_microdata(generated_df(
+        spark, MICRO_DOCS,
+        lambda i: [gen_augmented(i, augment_html_micro)], PAGES_SCHEMA))
 
 
 

@@ -10,14 +10,13 @@ usul/book-versions.ts:30-57 validates provider metadata unions); the
 head-block extraction is the web-scale equivalent computed from raw
 crawl HTML instead of a provider API.
 
-The synthetic pages carry no natural head metadata (datagen.py:100
-emits a bare ``<title>``), so — the ta_pii_scrub augmentation pattern
-(text_analysis.py:449) — ``augment_html`` injects a deterministic
-md5-menu meta block after ``<head>``: PRESENCE, attribute ORDER,
-quoting style, tag-name CASE and self-closing form all vary per url,
-so a parser handling only one canonical shape fails the oracle. Pages
-with empty payloads get no injection and must survive as all-null rows
-(never-drop).
+The synthetic pages carry no natural head metadata (datagen.gen_document
+emits a bare ``<title>``), so the query's input is generated with a
+deterministic md5-menu meta block after ``<head>`` (``datagen.meta_block``
+through ``augment_html``): PRESENCE, attribute ORDER, quoting style,
+tag-name CASE and self-closing form all vary per url, so a parser
+handling only one canonical shape fails the oracle. Pages with empty
+payloads get no block and must survive as all-null rows (never-drop).
 
 The kernel is a first-wins head-metadata collector over the
 html.parser events of extract/fast_scanner.scan (its module docstring
@@ -37,7 +36,6 @@ batches at any corpus size.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,50 +43,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
-from ocr_platform_spark.extract.tagscan import (augment_pages, collect,
-                                                first_wins, inject_after,
-                                                map_pages)
+from ocr_platform_spark.extract.tagscan import collect, first_wins, map_pages
 
 META_DOCS = 300
 
-_PAGE_SUFFIX = re.compile(r"/page/\d+$")
 _JSONLD_TYPE = re.compile(r'"@type"\s*:\s*"([^"]+)"')
-
-
-def meta_block(url: str) -> str:
-    """The deterministic per-url head block. md5 hex digits drive the
-    variant menu; the embedded value is hex so it never collides with
-    either quote style."""
-    h = hashlib.md5(url.encode("utf-8")).hexdigest()
-    d = [int(c, 16) for c in h[:10]]
-    val = "Book " + h[10:16]
-    parts: list[str] = []
-    if d[0] < 14:                               # og:title 14/16
-        name = "META" if d[6] < 4 else "meta"
-        q = "'" if d[2] < 8 else '"'
-        attrs = (f"property={q}og:title{q} content={q}{val}{q}"
-                 if d[1] < 8 else
-                 f"content={q}{val}{q} property={q}og:title{q}")
-        parts.append(f"<{name} {attrs}>")
-    if d[3] < 15:                               # og:type 15/16
-        typ = "book" if d[3] < 8 else "article"
-        parts.append(f'<meta property="og:type" content="{typ}"/>')
-    if d[4] < 12:                               # canonical 12/16
-        canon = _PAGE_SUFFIX.sub("", url)
-        attrs = (f'rel="canonical" href="{canon}"' if d[5] < 8
-                 else f'href="{canon}" rel="canonical"')
-        parts.append(f"<link {attrs}/>" if d[7] < 8
-                     else f"<link {attrs}>")
-    if d[8] < 6:                                # JSON-LD 6/16
-        jt = "Book" if d[9] < 8 else "Article"
-        parts.append('<script type="application/ld+json">'
-                     f'{{"@type": "{jt}", "name": "{val}"}}</script>')
-    return "".join(parts)
-
-
-def augment_html(url: str, html: bytes | None) -> bytes | None:
-    """The page with its metadata block right after ``<head>``."""
-    return inject_after(html, "<head>", meta_block(url))
 
 
 META_SCHEMA = StructType([
@@ -200,10 +159,12 @@ def extract_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixture-oracled (scale-free synthetic pages, so valid at any
     sf_dir): tools/make_driver_fixtures.py:extract_metadata_fixture
     re-parses the same augmented pages with stdlib html.parser."""
-    from ocr_platform_spark.sources.pages import pages_df
+    from ocr_platform_spark.datagen import augment_html, gen_augmented
+    from ocr_platform_spark.sources.pages import PAGES_SCHEMA, generated_df
 
-    return page_metadata(augment_pages(pages_df(spark, META_DOCS),
-                                       augment_html))
+    return page_metadata(generated_df(
+        spark, META_DOCS, lambda i: [gen_augmented(i, augment_html)],
+        PAGES_SCHEMA))
 
 
 def cx_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,16 +8,17 @@ metadata tables in its web UI (rendered client-side from API records);
 this is the inverse operation at crawl scale — recovering the records
 from the rendered markup.
 
-The synthetic pages carry no tables, so — the pagemeta/ta_pii_scrub
-augmentation pattern — ``augment_html_tables`` injects a deterministic
-md5-menu table right after ``<body>``: row/column counts, header rows
-(plain or ``<thead>``-wrapped), OMITTED ``</td>``/``</tr>`` close tags
-(legal HTML the spec resolves by implied closes), tag-name case,
+The synthetic pages carry no tables, so the query's input is generated
+with a deterministic md5-menu table right after ``<body>``
+(``datagen.table_block`` through ``augment_html_tables``): row/column
+counts, header rows (plain or ``<thead>``-wrapped), OMITTED
+``</td>``/``</tr>`` close tags (legal HTML the spec resolves by implied
+closes), tag-name case,
 attribute junk, inline markup and entities inside cells, empty cells,
 a second table, a NESTED table (flattens into the enclosing cell), and
 a script-inside-cell whose body contains fake ``<table>`` markup that
 a CDATA-blind parser would hallucinate into output. Pages with no
-``<body>`` (empty/garbage payloads) get no injection and emit no rows.
+``<body>`` (empty/garbage payloads) get no table and emit no rows.
 
 Cell semantics (one spec, implemented twice — here as a collector over
 the events of extract/fast_scanner.scan, whose module docstring states
@@ -48,14 +49,11 @@ extraction stage's Arrow batches at any corpus size.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
 
-from ocr_platform_spark.extract.tagscan import (augment_pages, collect,
-                                                inject_after, map_pages)
+from ocr_platform_spark.extract.tagscan import collect, map_pages
 
 TABLE_DOCS = 300
 
@@ -67,71 +65,6 @@ TABLEX_SCHEMA = StructType([
     StructField("is_header", BooleanType(), False),
     StructField("cell_text", StringType(), False),
 ])
-
-
-# --- deterministic table menu ---------------------------------------------
-
-def table_block(url: str) -> str:
-    """The per-url injected table markup. md5 hex digits drive the
-    variant menu; cell payloads embed hash hex so they never collide
-    with the page's own words."""
-    h = hashlib.md5(url.encode("utf-8")).hexdigest()
-    d = [int(c, 16) for c in h[:14]]
-    if d[0] >= 14:
-        return ""                                   # 2/16: no table
-    n_rows = 1 + d[1] % 3
-    n_cols = 1 + d[2] % 3
-    header = d[3] < 10
-    thead = header and d[3] < 5
-    omit = d[4] < 8                                 # omit </td> and </tr>
-    upper = d[5] < 4
-    junk = d[6] < 8
-
-    def t(name: str) -> str:
-        return name.upper() if upper else name
-
-    def cell(r: int, c: int, tag: str) -> str:
-        attrs = ' align="left" class=\'c\'' if junk and c == 0 else ""
-        body = f"c{r}x{c} {h[c % 8:c % 8 + 4]}"
-        if d[7] < 8 and r == 0 and c == 0:
-            body = f'<b>{body}</b> <a href="/x">lnk</a>'
-        if d[8] < 8 and c == n_cols - 1:
-            body += " &amp; tail"
-        if d[12] < 4 and r == n_rows - 1 and c == 0 and not header:
-            body = ""                               # empty cell
-        if d[10] < 3 and r == 0 and c == n_cols - 1:
-            body += (f"<table><tr><td>inner {h[8:11]}</td></tr>"
-                     "</table> after")
-        if d[11] < 3 and r == 0 and c == 0:
-            body += ('<script>var t = "<table><tr><td>fake</td></tr>'
-                     '</table>";</script>')
-        if d[13] < 6 and r == 0 and c == 0:
-            body += "<!-- ghost <td>never</td> -->"
-        close = "" if omit else f"</{t(tag)}>"
-        return f"<{t(tag)}{attrs}>{body}{close}"
-
-    def row(r: int, tag: str) -> str:
-        cells = "".join(cell(r, c, tag) for c in range(n_cols))
-        close = "" if omit else f"</{t('tr')}>"
-        return f"<{t('tr')}>{cells}{close}"
-
-    rows = []
-    if header:
-        hr = row(0, "th")
-        rows.append(f"<thead>{hr}</thead><tbody>" if thead else hr)
-    for r in range(1 if header else 0, n_rows):
-        rows.append(row(r, "td"))
-    if thead:
-        rows.append("</tbody>")
-    out = f"<{t('table')}>{''.join(rows)}</{t('table')}>"
-    if d[9] < 4:                                    # second table
-        out += (f"<table><tr><td>t2 {h[5:9]}</td>"
-                f"<td>t2b {h[9:12]}</td></tr></table>")
-    return out
-
-
-def augment_html_tables(url: str, html: bytes | None) -> bytes | None:
-    return inject_after(html, "<body>", table_block(url))
 
 
 # --- the collection state machine (production side) -----------------------
@@ -233,10 +166,12 @@ def extract_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir): tools/make_driver_fixtures.py:extract_tables_fixture
     re-parses the same augmented pages with stdlib html.parser driving
     an independently written collector."""
-    from ocr_platform_spark.sources.pages import pages_df
+    from ocr_platform_spark.datagen import augment_html_tables, gen_augmented
+    from ocr_platform_spark.sources.pages import PAGES_SCHEMA, generated_df
 
-    return page_tables(augment_pages(pages_df(spark, TABLE_DOCS),
-                                     augment_html_tables))
+    return page_tables(generated_df(
+        spark, TABLE_DOCS,
+        lambda i: [gen_augmented(i, augment_html_tables)], PAGES_SCHEMA))
 
 
 from ocr_platform_spark.operators.registry import \

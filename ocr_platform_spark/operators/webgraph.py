@@ -13,7 +13,7 @@ Shape at scale (the CC host graph is ~10^8 hosts / 10^10 edges): the
 edge list joins rank on src and aggregates on dst — one shuffle join +
 one map-side-combined aggregate per iteration, both keyed on host ids;
 the static (edges ⋈ outdeg) relation is persisted once and reused by all
-iterations; rank lineage is cut every iteration (dd_clusters' pattern:
+iterations; rank lineage is cut every iteration (session.lineage_cut:
 reliable checkpoint when a checkpoint dir exists, else localCheckpoint)
 so the plan stays flat instead of growing exponentially.
 """
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocr_platform_spark.operators.tables import load
+from ocr_platform_spark.session import lineage_cut
 
 N_HOSTS = 50
 PR_ITERS = 10
@@ -44,19 +45,6 @@ def _edges(orders: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _cutter(spark: SparkSession):
-    """Per-iteration lineage cut: reliable checkpoint when a checkpoint
-    dir exists, else localCheckpoint — one shared closure for every
-    iterative kernel in this module."""
-    has_ckpt_dir = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if has_ckpt_dir \
-            else df.localCheckpoint(eager=True)
-
-    return _cut
-
-
 def _damped_ranks(edges: DataFrame, base, init, iters: int,
                   out: str) -> DataFrame:
     """The damped link-mass recurrence shared by PageRank and TrustRank:
@@ -64,13 +52,11 @@ def _damped_ranks(edges: DataFrame, base, init, iters: int,
     all int64. ``base``/``init`` are Columns over host column ``h`` —
     PageRank passes uniform constants, TrustRank a seed-conditional
     base (and init == base, so unlinked hosts hold exactly 0)."""
-    spark = edges.sparkSession
     hosts = (edges.select(F.col("src").alias("h"))
              .union(edges.select(F.col("dst").alias("h")))
              .distinct())
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     esrc = edges.join(outdeg, "src").persist()
-    _cut = _cutter(spark)
 
     rank = hosts.withColumn(out, init.cast("long"))
     for _ in range(iters):
@@ -78,7 +64,7 @@ def _damped_ranks(edges: DataFrame, base, init, iters: int,
                  .select(F.col("dst"),
                          F.expr(f"{out} DIV deg").alias("c"))
                  .groupBy("dst").agg(F.sum("c").alias("in_sum")))
-        rank = _cut(
+        rank = lineage_cut(
             hosts.join(insum, hosts["h"] == insum["dst"], "left")
             .select(
                 "h",
@@ -120,18 +106,16 @@ def harmonic_ranks(edges: DataFrame, iters: int = HC_ITERS) -> DataFrame:
     approximations; the swap is localized (frontier pair set → HLL
     registers per node), the iteration/shuffle shape stays this one.
     """
-    spark = edges.sparkSession
     hosts = (edges.select(F.col("src").alias("h"))
              .union(edges.select(F.col("dst").alias("h")))
              .distinct())
-    _cut = _cutter(spark)
 
-    frontier = _cut(edges.select(
+    frontier = lineage_cut(edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v"),
         F.lit(1).cast("int").alias("d")))
     known = frontier
     for i in range(2, iters + 1):
-        nxt = _cut(
+        nxt = lineage_cut(
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.v") == F.col("e.src"))
             .select(F.col("f.u").alias("u"), F.col("e.dst").alias("v"))
@@ -267,16 +251,13 @@ def hits_ranks(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     combined aggregate on the other) passes — the same shuffle profile as
     one PageRank round, twice — plus a 1-row max aggregate that broadcasts
     back via crossJoin (never collected to Python). Score lineage is cut
-    every iteration (dd_clusters' checkpoint pattern) so the plan depth
+    every iteration (session.lineage_cut) so the plan depth
     stays constant.
     """
-    spark = edges.sparkSession
     hosts = (edges.select(F.col("src").alias("h"))
              .union(edges.select(F.col("dst").alias("h")))
              .distinct())
     e = edges.persist()
-
-    _cut = _cutter(spark)
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         """(h, raw) → (h, score) with score = raw * 1e6 DIV max(raw);
@@ -292,13 +273,13 @@ def hits_ranks(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     for _ in range(iters):
         a_raw = (e.join(hub, e["src"] == hub["h"])
                  .groupBy("dst").agg(F.sum("hub").alias("auth")))
-        auth = _cut(_normalize(
+        auth = lineage_cut(_normalize(
             hosts.join(a_raw, hosts["h"] == a_raw["dst"], "left")
             .select("h", F.coalesce("auth", F.lit(0)).alias("auth")),
             "auth"))
         h_raw = (e.join(auth, e["dst"] == auth["h"])
                  .groupBy("src").agg(F.sum("auth").alias("hub")))
-        hub = _cut(_normalize(
+        hub = lineage_cut(_normalize(
             hosts.join(h_raw, hosts["h"] == h_raw["src"], "left")
             .select("h", F.coalesce("hub", F.lit(0)).alias("hub")),
             "hub"))
@@ -421,12 +402,9 @@ def _two_star_rounds(edges: DataFrame,
     + anti-join emptiness on materialized checkpoints — a probe per
     round, not per edge).
     """
-    spark = edges.sparkSession
-    _cut = _cutter(spark)
-
-    nodes = _cut(edges.select(F.col("src").alias("node"))
-                 .union(edges.select(F.col("dst").alias("node")))
-                 .distinct())
+    nodes = lineage_cut(edges.select(F.col("src").alias("node"))
+                      .union(edges.select(F.col("dst").alias("node")))
+                      .distinct())
 
     def _large_star(e: DataFrame) -> DataFrame:
         # every node u: m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
@@ -452,12 +430,12 @@ def _two_star_rounds(edges: DataFrame,
                 .filter(F.col("a") != F.col("b"))
                 .distinct())
 
-    e = _cut(edges.select(F.col("src").alias("a"),
-                          F.col("dst").alias("b")))
+    e = lineage_cut(edges.select(F.col("src").alias("a"),
+                               F.col("dst").alias("b")))
     rounds = 0
     converged = False
     for _ in range(max_iter):
-        new = _cut(_small_star(_large_star(e)))
+        new = lineage_cut(_small_star(_large_star(e)))
         rounds += 1
         if (new.count() == e.count()
                 and new.join(e, ["a", "b"], "left_anti").isEmpty()):
@@ -598,7 +576,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
            .select("h", "deg",
                    F.coalesce("n_tri", F.lit(0)).cast("long")
                    .alias("n_tri")))
-    out = out.localCheckpoint(eager=True)
+    out = lineage_cut(out)
     oriented.unpersist()
     return out
 
@@ -691,21 +669,20 @@ def resolve_redirects(rmap: DataFrame, rounds: int = R_ROUNDS) -> DataFrame:
     of the map's universe: (u, cur, hops, resolved). After ``rounds``
     doubling steps cur is the terminal (resolved, hops = exact chain
     length) for every chain ≤ 2^rounds; unresolved rows reach a cycle."""
-    spark = rmap.sparkSession
-    _cut = _cutter(spark)
-
     term = (rmap.select(F.col("v").alias("u"))
             .subtract(rmap.select("u")).distinct())
-    p = _cut(rmap.select("u", F.col("v").alias("cur"),
-                         F.lit(1).cast("long").alias("hops"))
-             .union(term.select("u", F.col("u").alias("cur"),
-                                F.lit(0).cast("long").alias("hops"))))
+    p = lineage_cut(
+        rmap.select("u", F.col("v").alias("cur"),
+                    F.lit(1).cast("long").alias("hops"))
+        .union(term.select("u", F.col("u").alias("cur"),
+                           F.lit(0).cast("long").alias("hops"))))
     for _ in range(rounds):
         q = p.select(F.col("u").alias("qu"), F.col("cur").alias("qcur"),
                      F.col("hops").alias("qhops"))
-        p = _cut(p.join(q, p["cur"] == q["qu"])
-                 .select("u", F.col("qcur").alias("cur"),
-                         (F.col("hops") + F.col("qhops")).alias("hops")))
+        p = lineage_cut(
+            p.join(q, p["cur"] == q["qu"])
+            .select("u", F.col("qcur").alias("cur"),
+                    (F.col("hops") + F.col("qhops")).alias("hops")))
     is_term = term.select(F.col("u").alias("cur"),
                           F.lit(True).alias("is_term"))
     return (p.join(is_term, "cur", "left")
@@ -826,9 +803,6 @@ def kcore_ranks(edges: DataFrame, rounds: int = KC_ROUNDS) -> DataFrame:
     """edges(src, dst) → (node, deg, coreness) of the undirected simple
     graph after ``rounds`` synchronous h-index sweeps (exact coreness
     once the fixpoint is inside the budget; extra rounds absorb)."""
-    spark = edges.sparkSession
-    _cut = _cutter(spark)
-
     # simple graph: a self-loop would count itself as a neighbour twice
     # (once per direction of bid) and inflate both degree and h-index
     und = _und_edges(edges).where(F.col("a") != F.col("b"))
@@ -836,8 +810,8 @@ def kcore_ranks(edges: DataFrame, rounds: int = KC_ROUNDS) -> DataFrame:
            .unionAll(und.select(F.col("b").alias("node"),
                                 F.col("a").alias("nb")))
            .persist())
-    deg = _cut(bid.groupBy("node")
-               .agg(F.count("*").cast("long").alias("c")))
+    deg = lineage_cut(bid.groupBy("node")
+                    .agg(F.count("*").cast("long").alias("c")))
     c = deg
     w = Window.partitionBy("node").orderBy(F.col("cv").desc())
     for _ in range(rounds):
@@ -849,12 +823,12 @@ def kcore_ranks(edges: DataFrame, rounds: int = KC_ROUNDS) -> DataFrame:
                 .agg(F.count("*").cast("long").alias("cnt")))
         cum = hist.select(
             "node", "cv", F.sum("cnt").over(w).alias("ge"))
-        c = _cut(cum.groupBy("node")
-                 .agg(F.max(F.least(F.col("cv"), F.col("ge")))
-                      .cast("long").alias("c")))
+        c = lineage_cut(cum.groupBy("node")
+                      .agg(F.max(F.least(F.col("cv"), F.col("ge")))
+                           .cast("long").alias("c")))
     out = (deg.withColumnRenamed("c", "deg")
            .join(c.withColumnRenamed("c", "coreness"), "node"))
-    out = out.localCheckpoint(eager=True)
+    out = lineage_cut(out)
     bid.unpersist()
     return out
 
@@ -1036,27 +1010,26 @@ SD_ROUNDS = 8    # hop budget; the synthetic graph's seed eccentricity
 def seed_distances(edges: DataFrame, rounds: int = SD_ROUNDS) -> DataFrame:
     """edges(src, dst) → (h, seed_dist) min-hop distance from any seed
     (h % 10 == 3) following edge direction; unreachable hosts -1."""
-    spark = edges.sparkSession
     edges = edges.persist()     # static relation probed every round —
                                 # without this each round re-runs the
                                 # source scan + distinct shuffle
     hosts = (edges.select(F.col("src").alias("h"))
              .union(edges.select(F.col("dst").alias("h")))
              .distinct())
-    _cut = _cutter(spark)
 
-    dist = _cut(hosts.where(_seed_col(F.col("h")))
-                .withColumn("d", F.lit(0).cast("long")))
+    dist = lineage_cut(hosts.where(_seed_col(F.col("h")))
+                     .withColumn("d", F.lit(0).cast("long")))
     for _ in range(rounds):
         stepped = (edges.join(dist, edges["src"] == dist["h"])
                    .select(F.col("dst").alias("h"),
                            (F.col("d") + 1).alias("d")))
-        dist = _cut(dist.unionAll(stepped)
-                    .groupBy("h").agg(F.min("d").cast("long").alias("d")))
+        dist = lineage_cut(
+            dist.unionAll(stepped)
+            .groupBy("h").agg(F.min("d").cast("long").alias("d")))
     out = (hosts.join(dist, "h", "left")
            .select("h", F.coalesce("d", F.lit(-1))
                    .cast("long").alias("seed_dist")))
-    out = out.localCheckpoint(eager=True)
+    out = lineage_cut(out)
     edges.unpersist()
     return out
 

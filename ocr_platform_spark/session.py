@@ -11,7 +11,8 @@ every knob is what we would ship to a 1000-executor cluster:
   via spark.sql.shuffle.partitions on submit).
 
 It also owns the cache policy for relations an operator persists and
-leaves for lazy consumers (``scoped_persist``).
+leaves for lazy consumers (``scoped_persist``) and the lineage-cut policy
+of the iterative operators (``lineage_cut``).
 """
 
 from __future__ import annotations
@@ -53,6 +54,17 @@ def scoped_persist(key: str, df: DataFrame) -> DataFrame:
             pass  # session already stopped — nothing to release
     _SCOPED[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
     return _SCOPED[key]
+
+
+def lineage_cut(df: DataFrame) -> DataFrame:
+    """``df`` materialized with its lineage cut, so an iterative plan
+    stays flat instead of growing every round. With a checkpoint dir set
+    on the session this is a reliable ``checkpoint``: it survives an
+    executor loss mid-iteration. Without one (local mode) it is
+    ``localCheckpoint``, whose blocks live in executor memory."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def default_parallelism() -> int:

@@ -10,12 +10,19 @@ a pure function of (seed, index)). No data ever funnels through the driver,
 so the same call scales from 500 rows in tests to 10^12 on a cluster — the
 generator IS the 100 TB table, materialized lazily per partition.
 
+``generated_df`` is that one pass for any generator: the pages and media
+tables here and every other synthetic corpus (the structured kernels'
+augmented pages, feeds and code pages, the image twins), all defined in
+``datagen``.
+
 Replaces the reference's fetch-and-cache source path
 (apps/queue/src/lib/ocr.ts:15-33): document bytes simply arrive as a
 BinaryType column of the scan.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -33,15 +40,27 @@ PAGES_SCHEMA = StructType([
 ])
 
 
+def generated_df(spark: SparkSession, n: int,
+                 rows_of_index: Callable[[int], Iterable],
+                 schema: StructType,
+                 partitions: int | None = None) -> DataFrame:
+    """Every row of ``rows_of_index(i)`` for i in [0, n), as a DataFrame
+    of ``schema``: ``spark.range`` splits the index space into
+    ``partitions`` (default: the default parallelism) and one
+    ``map_rows`` pass generates each split where it runs. Every
+    synthetic corpus of the package is built this way."""
+    nparts = partitions or spark.sparkContext.defaultParallelism
+    return map_rows(spark.range(0, n, 1, nparts), ["id"],
+                    lambda i: rows_of_index(int(i)), schema)
+
+
 def pages_df(spark: SparkSession, n_docs: int, seed: int = 42,
              partitions: int | None = None) -> DataFrame:
     """The synthetic pages table as a distributed DataFrame (no driver data)."""
     from ocr_platform_spark.datagen import gen_document
 
-    nparts = partitions or spark.sparkContext.defaultParallelism
-    idx = spark.range(0, n_docs, 1, nparts)
-    return map_rows(idx, ["id"], lambda i: [gen_document(int(i), seed)],
-                    PAGES_SCHEMA)
+    return generated_df(spark, n_docs, lambda i: [gen_document(i, seed)],
+                        PAGES_SCHEMA, partitions)
 
 
 MEDIA_SCHEMA = StructType([
@@ -56,10 +75,8 @@ def media_df(spark: SparkSession, n_rows: int, seed: int = 42,
     exactly like pages_df — the generator is the table."""
     from ocr_platform_spark.datagen import gen_media
 
-    nparts = partitions or spark.sparkContext.defaultParallelism
-    idx = spark.range(0, n_rows, 1, nparts)
-    return map_rows(idx, ["id"], lambda i: [gen_media(int(i), seed)],
-                    MEDIA_SCHEMA)
+    return generated_df(spark, n_rows, lambda i: [gen_media(i, seed)],
+                        MEDIA_SCHEMA, partitions)
 
 
 def write_pages(spark: SparkSession, n_docs: int, path: str,

@@ -34,7 +34,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ocr_platform_spark.extract.tagscan import augment_pages
 from ocr_platform_spark.plans.extract_job import extract_pages
 from ocr_platform_spark.sources.pages import PAGES_SCHEMA
 
@@ -109,28 +108,27 @@ def run_ingest_stream(spark: SparkSession, input_dir: str, output_dir: str,
 
 
 # --- structured-extraction kernels over the same file-source stream --------
-# The metadata and table scanners (operators/pagemeta.py, tablex.py) are
-# stateless mapInPandas projections, so they stream exactly like the
-# text-extraction kernel: file source lists new files, the IDENTICAL
-# kernel maps each micro-batch, the checkpoint gives exactly-once per
-# file. Streamed output is byte-identical to a batch run over the same
-# files (tests/test_streaming.py), which is what lets an incremental
-# daily top-up share one downstream schema with the backfill.
+# The metadata and table kernels (operators/pagemeta.page_metadata,
+# tablex.page_tables) are stateless map_rows projections, so they stream
+# exactly like the text-extraction kernel: file source lists new files,
+# the IDENTICAL kernel maps each micro-batch of the pages as they are,
+# the checkpoint gives exactly-once per file. Streamed output is
+# byte-identical to a batch run over the same files
+# (tests/test_streaming.py), which is what lets an incremental daily
+# top-up share one downstream schema with the backfill.
 
 def metadata_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    from ocr_platform_spark.operators.pagemeta import (augment_html,
-                                                       page_metadata)
+    from ocr_platform_spark.operators.pagemeta import page_metadata
 
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    return page_metadata(augment_pages(pages, augment_html))
+    return page_metadata(
+        spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir))
 
 
 def tables_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    from ocr_platform_spark.operators.tablex import (augment_html_tables,
-                                                     page_tables)
+    from ocr_platform_spark.operators.tablex import page_tables
 
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    return page_tables(augment_pages(pages, augment_html_tables))
+    return page_tables(
+        spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir))
 
 
 def run_metadata_stream(spark: SparkSession, input_dir: str,

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from ocr_platform_spark.operators.codeblocks import (CODE_DOCS, code_doc,
+from ocr_platform_spark.datagen import code_doc
+from ocr_platform_spark.operators.codeblocks import (CODE_DOCS,
                                                      lang_from_class,
                                                      scan_code)
 

@@ -2,8 +2,8 @@
 
 from __future__ import annotations
 
-from ocr_platform_spark.operators.feeds import (FEED_DOCS, feed_doc,
-                                                scan_feed)
+from ocr_platform_spark.datagen import feed_doc
+from ocr_platform_spark.operators.feeds import FEED_DOCS, scan_feed
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -5,11 +5,11 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ocr_platform_spark.datagen import twin_doc
 from ocr_platform_spark.operators.imagedup import (GRID_H, GRID_W,
                                                    MAX_HAMMING, N_BANDS,
                                                    PHASH_DOCS, dhash_bands,
-                                                   hamming, luma_grid,
-                                                   twin_doc)
+                                                   hamming, luma_grid)
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -2,9 +2,8 @@
 
 from __future__ import annotations
 
-from ocr_platform_spark.operators.microdata import (MICRO_DOCS,
-                                                    micro_block,
-                                                    scan_microdata)
+from ocr_platform_spark.datagen import micro_block
+from ocr_platform_spark.operators.microdata import MICRO_DOCS, scan_microdata
 
 SF_DIR = "/root/testdata/sf0.01"
 

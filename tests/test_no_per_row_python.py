@@ -4,8 +4,9 @@ BASELINE.json mandates 'no per-row Python' (SURVEY.md §4.2.2) — all Python
 execution must go through Arrow-batched APIs (mapInPandas / mapInArrow /
 pandas_udf / applyInPandas). The first test greps the package source for
 the forbidden constructs, the second pins the persisted-relation lifecycle,
-the third keeps every per-row kernel on the one Arrow row loop,
-``functions/spark_udfs.map_rows``, and the fourth keeps the whitespace rule
+the third keeps every lineage cut on ``session.lineage_cut``, the fourth
+keeps every per-row kernel on the one Arrow row loop,
+``functions/spark_udfs.map_rows``, and the fifth keeps the whitespace rule
 in ``functions/whitespace.py``.
 """
 
@@ -70,16 +71,39 @@ def test_every_persist_is_scoped_or_released():
     assert not offenders, "\n".join(offenders)
 
 
+def _package_calls(methods: set[str]):
+    """(path, enclosing function or '<module>', method, line) of every
+    ``x.method(...)`` call in the package with ``method`` in ``methods``."""
+    for path in PKG.rglob("*.py"):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        for scope in [tree, *(n for n in ast.walk(tree) if isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef)))]:
+            name = getattr(scope, "name", "<module>")
+            for call, line in _attr_calls(scope):
+                if call in methods:
+                    yield rel, name, call, line
+
+
+def test_every_lineage_cut_is_lineage_cut():
+    """``.checkpoint(`` and ``.localCheckpoint(`` are called only in
+    session.lineage_cut, the one place that picks a reliable checkpoint
+    when the session has a checkpoint dir."""
+    offenders = [f"{rel}:{line} — {call} in {name}"
+                 for rel, name, call, line in _package_calls(
+                     {"checkpoint", "localCheckpoint"})
+                 if (rel, name) != ("session.py", "lineage_cut")]
+    assert not offenders, "\n".join(sorted(offenders))
+
+
 # Each keeps its own loop for a reason its code shows: extract_pages writes
 # a per-batch cost_ms column, _warc_records converts timestamps per batch,
-# _records_sink is a side-effecting sink, augment_pages replaces one column
-# and keeps the others.
+# _records_sink is a side-effecting sink.
 OWN_ARROW_LOOP = {
     ("functions/spark_udfs.py", "map_rows"),
     ("plans/extract_job.py", "extract_pages"),
     ("sources/warc.py", "_warc_records"),
     ("sources/warc.py", "_records_sink"),
-    ("extract/tagscan.py", "augment_pages"),
 }
 
 
@@ -87,17 +111,9 @@ def test_every_map_in_pandas_is_map_rows_or_named():
     """A kernel that maps a row to zero or more output rows goes through
     map_rows; only the functions in OWN_ARROW_LOOP call
     ``.mapInPandas(`` themselves."""
-    offenders = []
-    for path in PKG.rglob("*.py"):
-        rel = path.relative_to(PKG).as_posix()
-        tree = ast.parse(path.read_text())
-        for scope in [tree, *(n for n in ast.walk(tree) if isinstance(
-                n, (ast.FunctionDef, ast.AsyncFunctionDef)))]:
-            name = getattr(scope, "name", "<module>")
-            offenders += [f"{rel}:{line} — mapInPandas in {name}"
-                          for call, line in _attr_calls(scope)
-                          if call == "mapInPandas"
-                          and (rel, name) not in OWN_ARROW_LOOP]
+    offenders = [f"{rel}:{line} — mapInPandas in {name}"
+                 for rel, name, _, line in _package_calls({"mapInPandas"})
+                 if (rel, name) not in OWN_ARROW_LOOP]
     assert not offenders, "\n".join(sorted(offenders))
 
 

@@ -8,8 +8,8 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_platform_spark.operators.pagemeta import (
-    META_DOCS, _scan_head_meta, augment_html, meta_block)
+from ocr_platform_spark.datagen import augment_html, meta_block
+from ocr_platform_spark.operators.pagemeta import META_DOCS, _scan_head_meta
 
 
 @pytest.fixture(scope="module")

@@ -122,10 +122,8 @@ def test_metadata_stream_matches_batch_and_resumes(spark, tmp_path):
     row-identical to the batch kernel over the same pages."""
     import pandas as pd
 
-    from ocr_platform_spark.datagen import gen_document
-    from ocr_platform_spark.extract.tagscan import augment_pages
-    from ocr_platform_spark.operators.pagemeta import (augment_html,
-                                                       page_metadata)
+    from ocr_platform_spark.datagen import augment_html, gen_augmented
+    from ocr_platform_spark.operators.pagemeta import page_metadata
     from ocr_platform_spark.sources.pages import PAGES_SCHEMA
     from ocr_platform_spark.streaming.ingest import run_metadata_stream
 
@@ -134,7 +132,8 @@ def test_metadata_stream_matches_batch_and_resumes(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def drop(n0, n1):
-        pdf = pd.DataFrame([gen_document(i, 42) for i in range(n0, n1)])
+        pdf = pd.DataFrame([gen_augmented(i, augment_html)
+                            for i in range(n0, n1)])
         spark.createDataFrame(pdf, schema=PAGES_SCHEMA) \
             .write.mode("append").parquet(inp)
 
@@ -146,10 +145,10 @@ def test_metadata_stream_matches_batch_and_resumes(spark, tmp_path):
     got = {r["url"]: r for r in spark.read.parquet(out).collect()}
     assert len(got) == 70, "re-run must not duplicate old files"
 
-    batch = {r["url"]: r for r in page_metadata(augment_pages(
-        spark.read.schema(PAGES_SCHEMA).parquet(inp),
-        augment_html)).collect()}
+    batch = {r["url"]: r for r in page_metadata(
+        spark.read.schema(PAGES_SCHEMA).parquet(inp)).collect()}
     assert set(got) == set(batch)
+    assert any(r["og_title"] for r in got.values())
     for url, r in got.items():
         b = batch[url]
         for f in ("title", "og_title", "og_type", "canonical_url",
@@ -161,17 +160,16 @@ def test_tables_stream_matches_batch(spark, tmp_path):
     """The table scanner over readStream: cell-identical to batch."""
     import pandas as pd
 
-    from ocr_platform_spark.datagen import gen_document
-    from ocr_platform_spark.extract.tagscan import augment_pages
-    from ocr_platform_spark.operators.tablex import (augment_html_tables,
-                                                     page_tables)
+    from ocr_platform_spark.datagen import augment_html_tables, gen_augmented
+    from ocr_platform_spark.operators.tablex import page_tables
     from ocr_platform_spark.sources.pages import PAGES_SCHEMA
     from ocr_platform_spark.streaming.ingest import run_tables_stream
 
     inp = str(tmp_path / "pages")
     out = str(tmp_path / "cells")
     ckpt = str(tmp_path / "ckpt")
-    pdf = pd.DataFrame([gen_document(i, 42) for i in range(60)])
+    pdf = pd.DataFrame([gen_augmented(i, augment_html_tables)
+                        for i in range(60)])
     spark.createDataFrame(pdf, schema=PAGES_SCHEMA) \
         .write.mode("append").parquet(inp)
 
@@ -181,7 +179,59 @@ def test_tables_stream_matches_batch(spark, tmp_path):
            for r in spark.read.parquet(out).collect()}
     batch = {(r["url"], r["table_idx"], r["row_idx"], r["col_idx"]):
              (r["is_header"], r["cell_text"])
-             for r in page_tables(augment_pages(
-                 spark.read.schema(PAGES_SCHEMA).parquet(inp),
-                 augment_html_tables)).collect()}
+             for r in page_tables(
+                 spark.read.schema(PAGES_SCHEMA).parquet(inp)).collect()}
     assert got == batch and got
+
+
+def test_structured_streams_read_pages_as_they_are(spark, tmp_path):
+    """A crawled page's own og:title, og:type and canonical, and its one
+    table, are what the metadata and table streams report: the streams
+    add nothing to the pages they read."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from ocr_platform_spark.sources.pages import PAGES_SCHEMA
+    from ocr_platform_spark.streaming.ingest import (run_metadata_stream,
+                                                     run_tables_stream)
+
+    def page(i):
+        html = (f"<html><head><title>Story {i}</title>"
+                f'<meta property="og:title" content="Own {i}">'
+                '<meta property="og:type" content="website">'
+                f'<link rel="canonical" href="https://news.example/s/{i}">'
+                "</head><body><p>lead</p><table>"
+                "<tr><th>k</th><th>v</th></tr>"
+                f"<tr><td>n</td><td>{i}</td></tr>"
+                "</table></body></html>")
+        return {"url": f"https://news.example/story/{i}",
+                "warc_ts": dt.datetime(2024, 1, 1), "html": html.encode(),
+                "text": "", "lang": "en"}
+
+    inp = str(tmp_path / "pages")
+    spark.createDataFrame(pd.DataFrame([page(i) for i in range(16)]),
+                          schema=PAGES_SCHEMA).write.parquet(inp)
+
+    run_metadata_stream(spark, inp, str(tmp_path / "meta"),
+                        str(tmp_path / "ck_meta")).awaitTermination(120)
+    meta = {r["url"]: (r["title"], r["og_title"], r["og_type"],
+                       r["canonical_url"], r["jsonld_type"], r["n_meta"])
+            for r in spark.read.parquet(str(tmp_path / "meta")).collect()}
+    assert meta == {
+        f"https://news.example/story/{i}":
+            (f"Story {i}", f"Own {i}", "website",
+             f"https://news.example/s/{i}", None, 2)
+        for i in range(16)}
+
+    run_tables_stream(spark, inp, str(tmp_path / "cells"),
+                      str(tmp_path / "ck_cells")).awaitTermination(120)
+    cells = sorted((r["url"], r["table_idx"], r["row_idx"], r["col_idx"],
+                    r["is_header"], r["cell_text"])
+                   for r in spark.read.parquet(
+                       str(tmp_path / "cells")).collect())
+    assert cells == sorted(
+        (f"https://news.example/story/{i}", 0, r, c, r == 0, text)
+        for i in range(16)
+        for r, c, text in ((0, 0, "k"), (0, 1, "v"), (1, 0, "n"),
+                           (1, 1, str(i))))

@@ -6,8 +6,8 @@ inputs and prove the md5 menu actually exercises every variant."""
 
 from __future__ import annotations
 
-from ocr_platform_spark.operators.tablex import (TABLE_DOCS, scan_tables,
-                                                 table_block)
+from ocr_platform_spark.datagen import table_block
+from ocr_platform_spark.operators.tablex import TABLE_DOCS, scan_tables
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -618,3 +618,25 @@ def test_trustrank_seed_dist_plans_pure_equi_join(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoop" not in plan
+
+
+def test_lineage_cut_with_checkpoint_dir_keeps_output(spark, tmp_path):
+    """With a checkpoint dir set, session.lineage_cut takes the reliable
+    checkpoint branch: wg_kcore (a cut every round plus the final cut)
+    writes checkpoint files there and returns the rows it returns with
+    localCheckpoint. The shared session gets its unset dir back."""
+    from ocr_platform_spark.operators.webgraph import wg_kcore
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    local = sorted(wg_kcore(spark, SF_DIR).collect())
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        reliable = sorted(wg_kcore(spark, SF_DIR).collect())
+    finally:
+        # SparkContext has no public way to unset the dir
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
+    assert reliable == local and local
+    assert list((tmp_path / "ckpt").glob("*/rdd-*"))

@@ -500,8 +500,8 @@ def extract_metadata_fixture() -> None:
     pages re-parsed with stdlib html.parser (a different tokenizer) and
     independently written first-wins collection, so fixture agreement
     checks the production scanner's tag/attr/CDATA semantics."""
-    from ocr_platform_spark.operators.pagemeta import (
-        _JSONLD_TYPE, META_DOCS, augment_html)
+    from ocr_platform_spark.datagen import augment_html
+    from ocr_platform_spark.operators.pagemeta import _JSONLD_TYPE, META_DOCS
 
     Collector = MetaRefCollector
 
@@ -542,8 +542,8 @@ def extract_tables_fixture() -> None:
     pages re-parsed with stdlib html.parser (a different tokenizer)
     driving an independently written collection state machine, so
     fixture agreement checks the implied-close/nesting/CDATA spec."""
-    from ocr_platform_spark.operators.tablex import (TABLE_DOCS,
-                                                     augment_html_tables)
+    from ocr_platform_spark.datagen import augment_html_tables
+    from ocr_platform_spark.operators.tablex import TABLE_DOCS
 
     Collector = TableRefCollector
 
@@ -739,8 +739,8 @@ def jsonl_oracle_rows(name: str, data: bytes) -> list[tuple]:
 def extract_microdata_fixture() -> None:
     """Independent replica of operators/microdata.py over the same
     augmented pages (MicroRefCollector below, html.parser events)."""
-    from ocr_platform_spark.operators.microdata import (MICRO_DOCS,
-                                                        augment_html_micro)
+    from ocr_platform_spark.datagen import augment_html_micro
+    from ocr_platform_spark.operators.microdata import MICRO_DOCS
 
     rows = []
     for i in range(MICRO_DOCS):
@@ -805,7 +805,8 @@ def cdc_fixture() -> None:
 def feeds_fixture() -> None:
     """Independent replica of operators/feeds.py over the same synthetic
     feed corpus (FeedRefCollector below, html.parser events)."""
-    from ocr_platform_spark.operators.feeds import FEED_DOCS, feed_doc
+    from ocr_platform_spark.datagen import feed_doc
+    from ocr_platform_spark.operators.feeds import FEED_DOCS
 
     rows = []
     for i in range(FEED_DOCS):
@@ -1191,8 +1192,8 @@ class CodeRefCollector(HTMLParser):
 def codeblocks_fixture() -> None:
     """Independent replica of operators/codeblocks.py over the same
     synthetic code-page corpus (CodeRefCollector above)."""
-    from ocr_platform_spark.operators.codeblocks import (CODE_DOCS,
-                                                         code_doc)
+    from ocr_platform_spark.datagen import code_doc
+    from ocr_platform_spark.operators.codeblocks import CODE_DOCS
 
     rows = []
     for i in range(CODE_DOCS):
@@ -1220,11 +1221,10 @@ def imagedup_fixture() -> None:
     and the banded join's pigeonhole completeness."""
     import numpy as np
 
-    from ocr_platform_spark.datagen import gen_media
+    from ocr_platform_spark.datagen import gen_media, twin_doc
     from ocr_platform_spark.operators.imagedup import (GRID_H, GRID_W,
                                                        MAX_HAMMING,
-                                                       PHASH_DOCS,
-                                                       twin_doc)
+                                                       PHASH_DOCS)
     from ocr_platform_spark.operators.multimodal import decode_image
 
     def ref_hash(payload: bytes) -> int:
