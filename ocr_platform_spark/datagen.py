@@ -443,11 +443,11 @@ def inject_after(html: bytes | None, tag: str,
     return text.replace(tag, tag + block, 1).encode("utf-8")
 
 
-def gen_augmented(doc_index: int, augment, seed: int = 42) -> dict:
+def gen_augmented(doc_index: int, augment) -> dict:
     """Page ``doc_index`` with its html replaced by
     ``augment(url, html)`` (``augment_html``, ``augment_html_tables`` or
     ``augment_html_micro``)."""
-    d = gen_document(doc_index, seed)
+    d = gen_document(doc_index)
     d["html"] = augment(d["url"], d["html"])
     return d
 
@@ -722,15 +722,15 @@ def code_doc(i: int) -> tuple[str, bytes]:
     return url, "".join(parts).encode("utf-8")
 
 
-def _grid_cells(h16: str, n: int, distinct_band_rows: bool) -> list[tuple]:
-    """n deterministic (gy, gx) sample cells from a hex seed; when
-    distinct_band_rows, the cells land in rows 0/2/4 (bands 0,1,2)."""
-    from ocr_platform_spark.operators.imagedup import GRID_H, GRID_W
-
+def _grid_cells(h16: str, n: int, distinct_band_rows: bool,
+                grid_h: int, grid_w: int) -> list[tuple]:
+    """n deterministic (gy, gx) sample cells from a hex seed on a
+    grid_h x grid_w grid; when distinct_band_rows, the cells land in
+    rows 0/2/4 (bands 0,1,2)."""
     cells = []
     for j in range(n):
-        gy = (2 * j) if distinct_band_rows else int(h16[2 * j], 16) % GRID_H
-        gx = int(h16[2 * j + 1], 16) % GRID_W
+        gy = (2 * j) if distinct_band_rows else int(h16[2 * j], 16) % grid_h
+        gx = int(h16[2 * j + 1], 16) % grid_w
         cells.append((gy, gx))
     return cells
 
@@ -759,7 +759,8 @@ def twin_doc(doc_index: int, seed: int = 42) -> dict | None:
     if mode != 0:
         n_cells = 1 if mode == 2 else 3
         hseed = hashlib.md5(row["url"].encode()).hexdigest()
-        for gy, gx in _grid_cells(hseed, n_cells, mode == 4):
+        for gy, gx in _grid_cells(hseed, n_cells, mode == 4,
+                                  GRID_H, GRID_W):
             sy, sx = gy * h // GRID_H, gx * w // GRID_W
             base = (sy * w + sx) * ch
             for c in range(ch):

@@ -4,6 +4,12 @@ pinned by an independent pure-Python replica, plus structural properties
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -620,23 +626,38 @@ def test_trustrank_seed_dist_plans_pure_equi_join(spark):
         assert "BroadcastNestedLoop" not in plan
 
 
+_KCORE_WITH_CHECKPOINT_DIR = """
+import json, sys
+from ocr_platform_spark.operators.webgraph import wg_kcore
+from ocr_platform_spark.session import build_spark
+spark = build_spark("webgraph-ckpt", cores=2)
+spark.sparkContext.setCheckpointDir(sys.argv[1])
+rows = sorted(tuple(r) for r in wg_kcore(spark, sys.argv[2]).collect())
+print(json.dumps(rows))
+spark.stop()
+"""
+
+
 def test_lineage_cut_with_checkpoint_dir_keeps_output(spark, tmp_path):
     """With a checkpoint dir set, session.lineage_cut takes the reliable
     checkpoint branch: wg_kcore (a cut every round plus the final cut)
     writes checkpoint files there and returns the rows it returns with
-    localCheckpoint. The shared session gets its unset dir back."""
+    localCheckpoint. The reliable half runs in its own process, so the
+    shared session never gets a checkpoint dir."""
     from ocr_platform_spark.operators.webgraph import wg_kcore
 
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    local = sorted(wg_kcore(spark, SF_DIR).collect())
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        reliable = sorted(wg_kcore(spark, SF_DIR).collect())
-    finally:
-        # SparkContext has no public way to unset the dir
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(None))
-    assert sc.getCheckpointDir() is None
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = sorted(tuple(r) for r in wg_kcore(spark, SF_DIR).collect())
+    repo = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (str(repo), os.environ.get("PYTHONPATH"))
+                   if p))
+    out = subprocess.run(
+        [sys.executable, "-c", _KCORE_WITH_CHECKPOINT_DIR,
+         str(tmp_path / "ckpt"), SF_DIR],
+        capture_output=True, text=True, timeout=600, cwd=str(repo), env=env)
+    assert out.returncode == 0, out.stderr[-2000:]
+    reliable = [tuple(r) for r in json.loads(out.stdout.splitlines()[-1])]
     assert reliable == local and local
     assert list((tmp_path / "ckpt").glob("*/rdd-*"))

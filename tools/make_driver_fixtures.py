@@ -500,15 +500,15 @@ def extract_metadata_fixture() -> None:
     pages re-parsed with stdlib html.parser (a different tokenizer) and
     independently written first-wins collection, so fixture agreement
     checks the production scanner's tag/attr/CDATA semantics."""
-    from ocr_platform_spark.datagen import augment_html
+    from ocr_platform_spark.datagen import augment_html, gen_augmented
     from ocr_platform_spark.operators.pagemeta import _JSONLD_TYPE, META_DOCS
 
     Collector = MetaRefCollector
 
     rows = []
     for i in range(META_DOCS):
-        d = gen_document(i, seed=SEED)
-        html = augment_html(d["url"], d["html"])
+        d = gen_augmented(i, augment_html)
+        html = d["html"]
         c = Collector()
         if html is not None:
             c.feed(bytes(html).decode("utf-8", "replace"))
@@ -542,15 +542,15 @@ def extract_tables_fixture() -> None:
     pages re-parsed with stdlib html.parser (a different tokenizer)
     driving an independently written collection state machine, so
     fixture agreement checks the implied-close/nesting/CDATA spec."""
-    from ocr_platform_spark.datagen import augment_html_tables
+    from ocr_platform_spark.datagen import augment_html_tables, gen_augmented
     from ocr_platform_spark.operators.tablex import TABLE_DOCS
 
     Collector = TableRefCollector
 
     rows = []
     for i in range(TABLE_DOCS):
-        d = gen_document(i, seed=SEED)
-        html = augment_html_tables(d["url"], d["html"])
+        d = gen_augmented(i, augment_html_tables)
+        html = d["html"]
         if html is None:
             continue
         c = Collector()
@@ -739,13 +739,13 @@ def jsonl_oracle_rows(name: str, data: bytes) -> list[tuple]:
 def extract_microdata_fixture() -> None:
     """Independent replica of operators/microdata.py over the same
     augmented pages (MicroRefCollector below, html.parser events)."""
-    from ocr_platform_spark.datagen import augment_html_micro
+    from ocr_platform_spark.datagen import augment_html_micro, gen_augmented
     from ocr_platform_spark.operators.microdata import MICRO_DOCS
 
     rows = []
     for i in range(MICRO_DOCS):
-        d = gen_document(i, seed=SEED)
-        html = augment_html_micro(d["url"], d["html"])
+        d = gen_augmented(i, augment_html_micro)
+        html = d["html"]
         if html is None:
             continue
         c = MicroRefCollector()
