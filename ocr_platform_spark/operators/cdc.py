@@ -13,8 +13,8 @@ hash), so an insertion early in a file shifts boundaries only locally
 Spec (implemented here AND independently in
 tools/make_driver_fixtures.py:cdc_fixture's oracle pass):
 
-- gear[b] for byte b = the first 15 hex chars of md5(bytes([b])) —
-  the repo's engine-portable hash family, 60-bit values.
+- gear[b] for byte b = ``md5_int_py(bytes([b]), 15)``, the repo's
+  engine-portable hash (functions/md5int), 60-bit values.
 - rolling state h over the current chunk: h = ((h << 1) + gear[b])
   & (2^62 - 1), starting at 0 per chunk (non-negative int64 always).
 - a boundary closes the chunk AFTER byte i when chunk_len >= MIN and
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from ocr_platform_spark.functions.md5int import md5_int_py
 from ocr_platform_spark.functions.spark_udfs import map_rows
 
 CDC_MIN = 64
@@ -48,8 +49,7 @@ CDC_MAX = 1024
 CDC_MASK = (1 << 7) - 1
 _H_MASK = (1 << 62) - 1
 
-GEAR = tuple(int(hashlib.md5(bytes([b])).hexdigest()[:15], 16)
-             for b in range(256))
+GEAR = tuple(md5_int_py(bytes([b]), 15) for b in range(256))
 
 CDC_DOCS = 300
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ocr_platform_spark.functions import whitespace as ws
+from ocr_platform_spark.functions.md5int import md5_int_py, md5_int_sql
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import lineage_cut, scoped_persist
 
@@ -140,10 +141,9 @@ WHERE inter * 2 >= sa.n_sh + sb.n_sh - inter
 
 
 # --- MinHash + LSH (the scale path; DuckDB-oracled) -----------------------
-# The base hash is md5-derived on BOTH engines: a 60-bit integer from the
-# md5 hex prefix — Python ``int(md5(tok).hexdigest()[:15], 16)`` in the
-# Arrow kernel ≡ DuckDB `CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)`
-# — which is what lets the whole LSH path be value-hash verified by the
+# The base hash is functions/md5int's 60-bit hash of each token, the same
+# in the Arrow kernel (md5_int_py) and the DuckDB oracle (md5_int_sql) —
+# which is what lets the whole LSH path be value-hash verified by the
 # driver, not just recall-tested in pytest.
 #
 # MinHash works entirely in a 31-bit integer field: md5 hashes each TOKEN
@@ -181,8 +181,7 @@ def _minhash_batches(batches):
         def tok_hash(t: str) -> int:
             h = memo.get(t)
             if h is None:
-                h = memo[t] = int(hashlib.md5(
-                    t.encode("utf-8")).hexdigest()[:15], 16) % p
+                h = memo[t] = md5_int_py(t, 15) % p
             return h
 
         keep, mhs, shs = [], [], []
@@ -308,7 +307,7 @@ def _minhash_pair_ctes() -> str:
 th AS (
   SELECT doc_id,
          list_transform(t, x ->
-           CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT) % {p}) AS th
+           {md5_int_sql("x", 15)} % {p}) AS th
   FROM toks),
 sh AS (
   SELECT DISTINCT doc_id,

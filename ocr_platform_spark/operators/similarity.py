@@ -20,6 +20,7 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions.md5int import md5_int_py
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
@@ -98,18 +99,15 @@ EMB_DIM = 64
 
 
 def md5_plane(table: int, plane: int, dim: int = EMB_DIM) -> list[float]:
-    """Pseudo-random hyperplane components h_i = md5int60(f"{t}:{p}:{i}")
-    / 2^59 - 1 ∈ [-1, 1). The planes depend only on (table, plane, i) —
-    NOT on the row — so they are computed ONCE driver-side and inlined as
-    literals: no per-row hashing at all (the round-1 xxhash64 variant
-    re-derived every component per row), and any engine can reproduce them
-    (which is what makes the LSH paths value-hash oracle-able)."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"{table}:{plane}:{i}".encode()).hexdigest()[:15], 16)
-        / 2 ** 59 - 1.0
-        for i in range(dim)]
+    """Pseudo-random hyperplane components
+    h_i = md5_int_py(f"{t}:{p}:{i}", 15) / 2^59 - 1 ∈ [-1, 1). The planes
+    depend only on (table, plane, i) — NOT on the row — so they are
+    computed ONCE driver-side and inlined as literals: no per-row hashing
+    at all (the round-1 xxhash64 variant re-derived every component per
+    row), and any engine can reproduce them (which is what makes the LSH
+    paths value-hash oracle-able)."""
+    return [md5_int_py(f"{table}:{plane}:{i}", 15) / 2 ** 59 - 1.0
+            for i in range(dim)]
 
 
 def _dot_lit(v_col: str, comps: list[float]) -> F.Column:

@@ -12,9 +12,8 @@ smallest values of a shared deterministic hash, and its estimator
 ``(K-1) * H / h_K`` (H = hash-space size, h_K = the Kth smallest) is exact
 integer arithmetic any engine reproduces bit-for-bit.
 
-Hash: the first 14 hex chars of md5(token) read as a 56-bit integer —
-md5 is identical everywhere, and 56 bits leaves headroom so
-``(K-1) * 2^56`` stays inside int64.
+Hash: ``functions/md5int``'s 14-digit (56-bit) hash of the token; 56
+bits leave headroom so ``(K-1) * 2^56`` stays inside int64.
 
 Shape at scale (the whole point):
 
@@ -42,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.functions import whitespace as ws
+from ocr_platform_spark.functions.md5int import md5_int, md5_int_sql
 from ocr_platform_spark.operators.tables import load
 from ocr_platform_spark.session import scoped_persist
 
@@ -54,9 +54,8 @@ _EST_NUM = (KMV_K - 1) * (1 << _HASH_BITS)   # (K-1) * 2^56, fits int64
 
 
 def _h56(col: str):
-    """Shared 56-bit hash: int(md5(x)[:14], 16) — bit-identical in Spark
-    (conv) and DuckDB (CAST('0x…' AS BIGINT)); verified in tests."""
-    return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("long")
+    """The shared 56-bit hash, ``md5_int`` over 14 digits."""
+    return md5_int(col, 14)
 
 
 def kmv_distinct(docs: DataFrame, k: int = KMV_K,
@@ -107,7 +106,7 @@ WITH tok AS (
   FROM documents),
 hs AS (
   SELECT DISTINCT source,
-         CAST(('0x' || substr(md5(tok), 1, 14)) AS BIGINT) AS h
+         {md5_int_sql("tok", 14)} AS h
   FROM tok),
 ranked AS (
   SELECT source, h,
@@ -159,9 +158,8 @@ def _km_positions(col: str, m: int, n: int):
     56-bit slices, pos_i = (h1 + i*(h2 % (m-1) + 1)) % m. Shared by the
     Bloom filter (bit positions) and the Count-Min sketch (buckets) —
     one formula, one place to fix."""
-    d = F.md5(col)
-    h1 = F.conv(F.substring(d, 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(d, 15, 14), 16, 10).cast("long")
+    h1 = md5_int(col, 14)
+    h2 = md5_int(col, 14, 14)
     step = F.pmod(h2, F.lit(m - 1)) + 1
     return F.array(*[F.pmod(h1 + i * step, F.lit(m)) for i in range(n)])
 
@@ -231,8 +229,8 @@ def dd_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bloom_pos_sql(alias: str) -> str:
     """SQL twin of _bloom_positions, one column per probe index."""
     return ", ".join(
-        f"(CAST(('0x' || substr(md5({alias}), 1, 14)) AS BIGINT)"
-        f" + {i} * (CAST(('0x' || substr(md5({alias}), 15, 14)) AS BIGINT)"
+        f"({md5_int_sql(alias, 14)}"
+        f" + {i} * ({md5_int_sql(alias, 14, 14)}"
         f" % {BLOOM_M - 1} + 1)) % {BLOOM_M} AS p{i}"
         for i in range(BLOOM_J))
 
@@ -333,8 +331,8 @@ WITH tok AS (
   FROM documents),
 hashed AS (
   SELECT tok,
-         CAST(('0x' || substr(md5(tok), 1, 14)) AS BIGINT) AS h1,
-         CAST(('0x' || substr(md5(tok), 15, 14)) AS BIGINT) AS h2
+         {md5_int_sql("tok", 14)} AS h1,
+         {md5_int_sql("tok", 14, 14)} AS h2
   FROM tok),
 pos AS (
   SELECT tok, r, (h1 + r * (h2 % {CMS_W - 1} + 1)) % {CMS_W} AS bucket
@@ -711,7 +709,7 @@ WITH tok AS (
   FROM documents),
 h AS (
   SELECT source,
-         CAST(('0x' || substr(md5(tok), 1, 14)) AS BIGINT) AS h
+         {md5_int_sql("tok", 14)} AS h
   FROM tok),
 reg AS (
   SELECT source, h >> {_HLL_WBITS} AS j,
@@ -812,7 +810,7 @@ WITH tok AS (
   FROM documents),
 h AS (
   SELECT source,
-         CAST(('0x' || substr(md5(tok), 1, 14)) AS BIGINT) AS h
+         {md5_int_sql("tok", 14)} AS h
   FROM tok),
 reg AS (
   SELECT source, h >> {_HLL_WBITS} AS j,

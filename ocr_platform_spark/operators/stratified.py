@@ -13,8 +13,8 @@ exact-integer answer is Hamilton's largest-remainder method:
     largest rem_l, ties to the lexicographically smaller lang.
 
 Seats are then filled deterministically: within each stratum, docs
-rank by the md5 hash-coin (the repo's engine-portable coin family,
-seeded 'seval') with doc_id tiebreak, and the first seats_l win.
+rank by the hash-coin ``md5int`` of 'seval:<doc_id>' (the repo's
+engine-portable hash) with doc_id tiebreak, and the first seats_l win.
 
 Two driver queries, both LIVE-SQL-oracled:
 - ``cx_eval_seats``: the apportionment table (one row per lang:
@@ -42,15 +42,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_platform_spark.functions.md5int import md5_int, md5_int_sql
 from ocr_platform_spark.operators.tables import load
 
 N_EVAL = 100
 
 
 def _coin(col) -> F.Column:
-    return F.conv(F.substring(F.md5(F.encode(
-        F.concat_ws(":", F.lit("seval"), col.cast("string")),
-        "UTF-8")), 1, 15), 16, 10).cast("long")
+    return md5_int(F.encode(
+        F.concat_ws(":", F.lit("seval"), col.cast("string")), "UTF-8"), 15)
 
 
 def eval_seats(docs: DataFrame, n_eval: int = N_EVAL) -> DataFrame:
@@ -131,8 +131,7 @@ seats AS (
 ranked AS (
   SELECT doc_id, lang,
          row_number() OVER (PARTITION BY lang ORDER BY
-             CAST(concat('0x', substr(md5('seval:' ||
-                 CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
+             {md5_int_sql("'seval:' || CAST(doc_id AS VARCHAR)", 15)} ASC,
              doc_id ASC) AS rank_in_stratum
   FROM documents)
 SELECT r.doc_id, r.lang, CAST(r.rank_in_stratum AS BIGINT)

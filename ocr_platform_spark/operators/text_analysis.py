@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from ocr_platform_spark.functions import whitespace as ws
+from ocr_platform_spark.functions.md5int import md5_int, md5_int_sql
 from ocr_platform_spark.operators.registry import fixture_sql as _fixture_sql
 from ocr_platform_spark.operators.tables import load
 
@@ -392,9 +393,9 @@ FROM f
 # Fingerprinting" (SIGMOD 2003): hash every k-char gram of the canonical
 # text, keep the minimum hash of each w-window — guarantees any match of
 # length >= w+k-1 shares a fingerprint, with ~2/(w+1) selection density.
-# All JVM-side (transform/slice/array_min over a sequence); the md5-derived
-# gram hash is the engine-portable family used by MinHash, so DuckDB
-# replicates fingerprints exactly.
+# All JVM-side (transform/slice/array_min over a sequence); the gram hash
+# is functions/md5int's engine-portable hash, so DuckDB replicates
+# fingerprints exactly.
 WINNOW_K = 8    # gram length (chars of canonical text)
 WINNOW_W = 16   # window length (grams)
 
@@ -404,10 +405,9 @@ def ta_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = ws.norm(F.col("text"))
     d = docs.select("doc_id", norm.alias("norm")).filter(
         F.length("norm") >= WINNOW_K + WINNOW_W - 1)
-    grams = F.expr(
-        f"transform(sequence(1, length(norm) - {WINNOW_K} + 1, 1), i -> "
-        f"CAST(conv(substring(md5(substring(norm, i, {WINNOW_K})), 1, 15), "
-        f"16, 10) AS BIGINT))")
+    grams = F.transform(
+        F.sequence(F.lit(1), F.length("norm") - WINNOW_K + 1, F.lit(1)),
+        lambda i: md5_int(F.substring("norm", i, WINNOW_K), 15))
     fps = F.expr(
         f"array_distinct(transform("
         f"sequence(1, size(gram_hashes) - {WINNOW_W} + 1, 1), "
@@ -426,9 +426,7 @@ WITH d AS (
 h AS (
   SELECT doc_id,
          list_transform(generate_series(1, length(norm) - {WINNOW_K} + 1),
-           i -> CAST(concat('0x',
-                substr(md5(substr(norm, i, {WINNOW_K})), 1, 15)) AS BIGINT))
-           AS gh
+           i -> {md5_int_sql(f"substr(norm, i, {WINNOW_K})", 15)}) AS gh
   FROM d),
 w AS (
   SELECT doc_id,
@@ -453,9 +451,9 @@ _SPLIT_TEST_X10K = 1000    # next 5% test
 
 def ta_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    coin = F.conv(F.substring(F.md5(F.encode(
+    coin = md5_int(F.encode(
         F.concat_ws(":", F.lit("mix"), F.col("doc_id").cast("string")),
-        "UTF-8")), 1, 15), 16, 10).cast("long") % 10000
+        "UTF-8"), 15) % 10000
     rate = F.when(F.col("lang") == "en", SAMPLE_RATES_X10K["en"]) \
         .when(F.col("lang") == "zh", SAMPLE_RATES_X10K["zh"]) \
         .otherwise(1000)
@@ -472,8 +470,8 @@ def ta_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 TA_SAMPLE_SQL = f"""
 WITH coined AS (
   SELECT doc_id, lang,
-         CAST(concat('0x', substr(md5('mix:' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % 10000 AS coin_x10k,
+         {md5_int_sql("'mix:' || CAST(doc_id AS VARCHAR)", 15)} % 10000
+             AS coin_x10k,
          CASE WHEN lang = 'en' THEN {SAMPLE_RATES_X10K['en']}
               WHEN lang = 'zh' THEN {SAMPLE_RATES_X10K['zh']}
               ELSE 1000 END AS rate_x10k

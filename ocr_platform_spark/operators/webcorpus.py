@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_platform_spark.functions import whitespace as ws
+from ocr_platform_spark.functions.md5int import md5_int, md5_int_sql
 from ocr_platform_spark.operators.tables import load
 
 
@@ -475,15 +476,17 @@ def cx_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.floor(10000.0 * (F.col("total") / F.col("n_src"))
                          / F.col("src_tokens")).cast("long"))
                  .alias("rate_x10k")))
-    coin = F.conv(F.substring(F.md5(F.encode(
+    coin = md5_int(F.encode(
         F.concat_ws(":", F.lit("cxmix"), F.col("doc_id").cast("string")),
-        "UTF-8")), 1, 15), 16, 10).cast("long") % 10000
+        "UTF-8"), 15) % 10000
     return (per_doc.join(F.broadcast(rates), "source")
             .withColumn("coin_x10k", coin)
             .filter(F.col("coin_x10k") < F.col("rate_x10k"))
             .select("doc_id", "source", "n_tok", "rate_x10k", "coin_x10k"))
 
 
+_CX_MIX_COIN = md5_int_sql("'cxmix:' || CAST(d.doc_id AS VARCHAR)",
+                           15) + " % 10000"
 CX_MIX_SQL = rf"""
 WITH per_doc AS (
   SELECT doc_id, source,
@@ -500,11 +503,9 @@ rates AS (
              / src_tokens) AS BIGINT)) AS rate_x10k
   FROM per_src)
 SELECT d.doc_id, d.source, d.n_tok, r.rate_x10k,
-       CAST(concat('0x', substr(md5('cxmix:' || CAST(d.doc_id AS VARCHAR)),
-                                1, 15)) AS BIGINT) % 10000 AS coin_x10k
+       {_CX_MIX_COIN} AS coin_x10k
 FROM per_doc d JOIN rates r USING (source)
-WHERE CAST(concat('0x', substr(md5('cxmix:' || CAST(d.doc_id AS VARCHAR)),
-                               1, 15)) AS BIGINT) % 10000 < r.rate_x10k
+WHERE {_CX_MIX_COIN} < r.rate_x10k
 """
 
 

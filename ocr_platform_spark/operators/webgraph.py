@@ -861,13 +861,15 @@ bid AS (SELECT a AS node, b AS nb FROM e
         UNION ALL SELECT b, a FROM e),
 c0 AS (SELECT node, CAST(count(*) AS BIGINT) AS c FROM bid GROUP BY node)"""]
     for r in range(rounds):
-        # sum() OVER would widen to HUGEINT — cast back (driver hasher)
+        # sum() OVER would widen to HUGEINT — cast back (driver hasher).
+        # MATERIALIZED: DuckDB would inline every earlier round into this
+        # one, each round multiplying the cost about 5x
         parts.append(f""",
 h{r} AS (
   SELECT bid.node, cr.c AS cv, CAST(count(*) AS BIGINT) AS cnt
   FROM bid JOIN c{r} cr ON cr.node = bid.nb
   GROUP BY bid.node, cr.c),
-c{r + 1} AS (
+c{r + 1} AS MATERIALIZED (
   SELECT node, CAST(max(least(cv, ge)) AS BIGINT) AS c FROM (
     SELECT node, cv,
            CAST(sum(cnt) OVER (PARTITION BY node ORDER BY cv DESC)

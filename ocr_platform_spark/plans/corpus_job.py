@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocr_platform_spark.functions import whitespace as ws
+from ocr_platform_spark.functions.md5int import md5_int, md5_int_sql
 from ocr_platform_spark.operators.dedup import minhash_pairs
 from ocr_platform_spark.operators.text_analysis import (
     GOPHER_SQL_PASS, gopher_checks, gopher_pass, gopher_sql_ctes)
@@ -92,12 +93,9 @@ PACK_SHARDS = 8
 
 
 def _md5_mod(col: F.Column, m: int) -> F.Column:
-    """md5-derived bucket in [0, m) — identical in DuckDB
-    (CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT) % m), unlike
-    xxhash64 which only Spark has. 15 hex chars < 2^60, no overflow."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10)
-        .cast("long"), F.lit(m))
+    """Bucket in [0, m) from the 15-digit ``md5int`` hash, which the DuckDB
+    oracle replays (xxhash64 is Spark-only)."""
+    return F.pmod(md5_int(F.encode(col, "UTF-8"), 15), F.lit(m))
 
 
 def _rehost(url: F.Column, host: str) -> F.Column:
@@ -200,15 +198,21 @@ def drop_near_dups(exact: DataFrame) -> DataFrame:
     return exact.join(losers, "url", "left_anti")
 
 
+def curation_input(extracted: DataFrame) -> DataFrame:
+    """The kernel output columns curation reads (shared batch/stream)."""
+    return extracted.select("url", "lang",
+                            F.col("extracted_text").alias("text"),
+                            "failed_stage")
+
+
 def _derived(spark: SparkSession, crawl: DataFrame) -> DataFrame:
     """URL gate → kernel → per-row derivations, persisted once.
 
     The persist stands in for the materialized `extracted` table a
     100 TB run writes (run_extraction_job) before curation reads it
     back."""
-    ext = (extract_pages(url_gate(crawl), n_buckets=16, salt=2)
-           .select("url", "lang",
-                   F.col("extracted_text").alias("text"), "failed_stage"))
+    ext = curation_input(extract_pages(url_gate(crawl), n_buckets=16,
+                                       salt=2))
     return scoped_persist("corpus_job.derived", derive_curation_cols(ext))
 
 
@@ -341,8 +345,7 @@ losers AS (
   JOIN exact rb ON rb.url = v.b_id),
 kept AS (
   SELECT e.url, e.host, e.lang, e.lang_det, e.n_tok, e.fp,
-         CAST(concat('0x', substr(md5(e.url), 1, 15)) AS BIGINT)
-             % {PACK_SHARDS} AS shard
+         {md5_int_sql("e.url", 15)} % {PACK_SHARDS} AS shard
   FROM exact e WHERE e.url NOT IN (SELECT url FROM losers))
 SELECT url, host, lang, lang_det, n_tok, fp, shard,
        CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY url

@@ -52,8 +52,7 @@ from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators.incremental import incremental_ingest
 from ocr_platform_spark.plans.corpus_job import (
-    derive_curation_cols, drop_near_dups, exact_keep_first, quality_gates,
-    url_gate)
+    corpus_survivors, curation_input, derive_curation_cols, url_gate)
 from ocr_platform_spark.streaming.ingest import extract_stream
 
 CORPUS_COLS = ("url", "host", "lang", "lang_det", "n_tok", "fp")
@@ -61,17 +60,13 @@ CORPUS_COLS = ("url", "host", "lang", "lang_det", "n_tok", "fp")
 
 def curate_extracted(extracted: DataFrame) -> DataFrame:
     """The batch curation over an already-extracted micro-batch — the
-    SAME stage functions the batch plan composes (url_gate,
-    derive_curation_cols, quality_gates, exact_keep_first,
-    drop_near_dups), so batch and stream cannot drift on gates,
-    fingerprints, or dedup policy. In-batch near-dups are removed HERE
-    (co-arriving mirror pairs); cross-run near-dups against prior drops
-    are the signature store's job afterwards."""
-    ext = (url_gate(extracted)
-           .select("url", "lang",
-                   F.col("extracted_text").alias("text"), "failed_stage"))
-    return drop_near_dups(exact_keep_first(
-        quality_gates(derive_curation_cols(ext))))
+    batch plan's own stages (url_gate, curation_input,
+    derive_curation_cols, corpus_survivors), so batch and stream cannot
+    drift on gates, fingerprints, or dedup policy. In-batch near-dups are
+    removed HERE (co-arriving mirror pairs); cross-run near-dups against
+    prior drops are the signature store's job afterwards."""
+    return corpus_survivors(derive_curation_cols(
+        curation_input(url_gate(extracted))))
 
 
 def _process_batch(batch: DataFrame, epoch_id: int, corpus_dir: str,

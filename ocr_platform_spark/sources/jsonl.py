@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from ocr_platform_spark.functions.md5int import md5_int
 from ocr_platform_spark.functions.spark_udfs import map_rows
 from ocr_platform_spark.sources.binfile import read_binary_files
 
@@ -121,8 +122,8 @@ def write_jsonl(docs: DataFrame, output_dir: str,
                 n_shards: int = 8) -> None:
     """Export documents as sharded JSONL — the format corpora ship in.
 
-    Shard membership is DETERMINISTIC (md5(url) % n_shards, the repo's
-    engine-portable hash family — never Spark's internal partitioner),
+    Shard membership is DETERMINISTIC (``md5int`` of the url % n_shards,
+    the repo's engine-portable hash — never Spark's internal partitioner),
     so re-exports land every record in the same shard and a resume can
     diff shard-by-shard. Serialization is JVM-side ``to_json`` over a
     struct (no per-row Python); one file per shard via a hash
@@ -133,9 +134,7 @@ def write_jsonl(docs: DataFrame, output_dir: str,
     """
     from pyspark.sql import functions as F
 
-    shard = F.pmod(
-        F.conv(F.substring(F.md5("url"), 1, 14), 16, 10).cast("long"),
-        F.lit(n_shards))
+    shard = F.pmod(md5_int("url", 14), F.lit(n_shards))
     (docs.withColumn("shard", shard)
      .withColumn("line", F.to_json(F.struct(
          *[c for c in docs.columns])))

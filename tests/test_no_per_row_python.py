@@ -6,8 +6,9 @@ pandas_udf / applyInPandas). The first test greps the package source for
 the forbidden constructs, the second pins the persisted-relation lifecycle,
 the third keeps every lineage cut on ``session.lineage_cut``, the fourth
 keeps every per-row kernel on the one Arrow row loop,
-``functions/spark_udfs.map_rows``, and the fifth keeps the whitespace rule
-in ``functions/whitespace.py``.
+``functions/spark_udfs.map_rows``, the fifth keeps the whitespace rule
+in ``functions/whitespace.py`` and the sixth keeps the md5-prefix integer
+in ``functions/md5int.py``.
 """
 
 from __future__ import annotations
@@ -126,17 +127,42 @@ WHITESPACE_COPY = re.compile(
     r"|\\t\\n\\(?:x0b|v)")
 
 
-def test_whitespace_rule_only_in_whitespace_module():
-    """Every tokenizer, canonical form and characters-in-tokens count
-    builds on functions/whitespace.py, the one place the rule and its
-    DuckDB and Python twins are written."""
+def _copies(pattern: re.Pattern, home: str) -> list[str]:
+    """``file:line — match`` for every match of ``pattern`` in the package
+    outside the module ``home``."""
     offenders = []
     for path in PKG.rglob("*.py"):
         rel = path.relative_to(PKG).as_posix()
-        if rel == "functions/whitespace.py":
+        if rel == home:
             continue
         text = path.read_text()
         offenders += [f"{rel}:{text[:m.start()].count(chr(10)) + 1} — "
                       f"{m.group(0)!r}"
-                      for m in WHITESPACE_COPY.finditer(text)]
-    assert not offenders, "\n".join(sorted(offenders))
+                      for m in pattern.finditer(text)]
+    return sorted(offenders)
+
+
+def test_whitespace_rule_only_in_whitespace_module():
+    """Every tokenizer, canonical form and characters-in-tokens count
+    builds on functions/whitespace.py, the one place the rule and its
+    DuckDB and Python twins are written."""
+    offenders = _copies(WHITESPACE_COPY, "functions/whitespace.py")
+    assert not offenders, "\n".join(offenders)
+
+
+# md5 hex digits read as an integer: Spark's conv(substring(..)), DuckDB's
+# '0x' || substr(md5(..)) cast, or a Python hexdigest() slice. dd_simhash's
+# 64-bit UBIGINT token hash reads 16 digits a Spark long cannot hold, and
+# is the one other reading.
+MD5_PREFIX_COPY = re.compile(
+    r"conv\(\s*(?:F\.)?substring\("
+    r"|'0x'[\s,|]*substr\(\s*md5\((?![^\n]*UBIGINT)"
+    r"|hexdigest\(\)\[")
+
+
+def test_md5_prefix_only_in_md5int_module():
+    """Every sampling coin, shard, sketch and LSH hash builds on
+    functions/md5int.py, the one place the engine-portable hash and its
+    DuckDB and Python twins are written."""
+    offenders = _copies(MD5_PREFIX_COPY, "functions/md5int.py")
+    assert not offenders, "\n".join(offenders)

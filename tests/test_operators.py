@@ -61,6 +61,39 @@ def test_whitespace_twins_match_spark(spark, op):
     assert {i: py(t) for i, t in rows} == want
 
 
+MD5_PROBES = [
+    "https://h3.example/p/42",
+    "Ägypten — ナイル",
+    "",
+    "astral \U0001F600 plane",
+    "embedded\x00nul",
+]
+
+
+@pytest.mark.parametrize("digits,offset", [(14, 0), (14, 14), (15, 0)])
+def test_md5_int_twins_match_spark(spark, digits, offset):
+    """The md5-prefix integer's DuckDB and Python twins give Spark's value
+    on non-ASCII, astral-plane, empty and NUL-holding text."""
+    import duckdb
+
+    from ocr_platform_spark.functions.md5int import (md5_int, md5_int_py,
+                                                      md5_int_sql)
+
+    rows = list(enumerate(MD5_PROBES))
+    want = dict(spark.createDataFrame(rows, "i int, v string")
+                .select("i", md5_int("v", digits, offset)).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE probes (i INTEGER, v VARCHAR)")
+    con.executemany("INSERT INTO probes VALUES (?, ?)", rows)
+    got_sql = dict(con.execute(
+        f"SELECT i, {md5_int_sql('v', digits, offset)} FROM probes")
+        .fetchall())
+    assert got_sql == want
+    assert {i: md5_int_py(v, digits, offset) for i, v in rows} == want
+    assert {i: md5_int_py(v.encode("utf-8"), digits, offset)
+            for i, v in rows} == want
+
+
 def test_py_split_sql_matches_str_split():
     """The simhash oracle's tokenizer splits like Python's str.split(),
     over a class that is exactly str.isspace()."""

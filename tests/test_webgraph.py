@@ -414,15 +414,11 @@ def test_h_index_unit():
     assert _h_index([10, 8, 5, 4, 3]) == 4
 
 
-def test_kcore_matches_bz_peel(spark):
-    # distributed h-index fixpoint vs the Batagelj–Zaversnik min-degree
-    # peel — a genuinely different algorithm, so agreement checks the
-    # algorithm, not the implementation
-    from ocr_platform_spark.operators.webgraph import (
-        python_coreness, wg_kcore)
+def _bz_peel_hosts() -> dict:
+    """host → (deg, coreness) from the Batagelj–Zaversnik min-degree peel
+    over the sf0.01 host graph."""
+    from ocr_platform_spark.operators.webgraph import python_coreness
 
-    got = {r["host"]: (r["deg"], r["coreness"])
-           for r in wg_kcore(spark, SF_DIR).collect()}
     pairs = _edges_from_parquet()
     want_core = python_coreness(pairs)
     und = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
@@ -430,7 +426,33 @@ def test_kcore_matches_bz_peel(spark):
     for a, b in und:
         want_deg[a] = want_deg.get(a, 0) + 1
         want_deg[b] = want_deg.get(b, 0) + 1
-    assert got == {f"h{n}": (want_deg[n], want_core[n]) for n in want_core}
+    return {f"h{n}": (want_deg[n], want_core[n]) for n in want_core}
+
+
+def test_kcore_matches_bz_peel(spark):
+    # distributed h-index fixpoint vs the Batagelj–Zaversnik min-degree
+    # peel — a genuinely different algorithm, so agreement checks the
+    # algorithm, not the implementation
+    from ocr_platform_spark.operators.webgraph import wg_kcore
+
+    got = {r["host"]: (r["deg"], r["coreness"])
+           for r in wg_kcore(spark, SF_DIR).collect()}
+    assert got == _bz_peel_hosts()
+
+
+def test_kcore_oracle_matches_bz_peel():
+    # the DuckDB oracle's unrolled rounds against the same peel; its
+    # per-round MATERIALIZED CTEs keep DuckDB from inlining round r into
+    # round r+1, which made the 12-round query take minutes
+    import duckdb
+
+    from ocr_platform_spark.operators.webgraph import WG_KCORE_SQL
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW orders AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/orders.parquet')")
+    got = {h: (d, c) for h, d, c in con.execute(WG_KCORE_SQL).fetchall()}
+    assert got == _bz_peel_hosts()
 
 
 def test_kcore_planted_shapes(spark):

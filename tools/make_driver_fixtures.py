@@ -34,6 +34,7 @@ import pyarrow.parquet as pq
 
 from ocr_platform_spark.datagen import gen_document
 from ocr_platform_spark.extract import extract_document
+from ocr_platform_spark.functions.md5int import md5_int_py
 
 OUT_DIR = (pathlib.Path(__file__).resolve().parent.parent
            / "tests" / "fixtures" / "oracle")
@@ -104,8 +105,7 @@ def corpus_pages() -> None:
     for i in range(CORPUS_DOCS):
         d = gen_document(i, seed=SEED)
         crawl.append((d["url"], d["lang"], d["html"]))
-        sel = int(hashlib.md5(d["url"].encode()).hexdigest()[:15], 16) \
-            % MIRROR_MOD
+        sel = md5_int_py(d["url"], 15) % MIRROR_MOD
         if sel == NEAR_SEL:
             crawl.append((re.sub("^https://[^/]+",
                                  "https://" + NEAR_HOST, d["url"]),
